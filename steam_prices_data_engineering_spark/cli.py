@@ -91,7 +91,8 @@ def run_jobs(config: dict, spark=None, run_ts: str | None = None) -> dict:
     # §2b north-star extension productized behind the same config file.
     stream_cfg = config.get("streaming") or {}
     if stream_cfg.get("enabled"):
-        from .sources.tables import events_stream
+        from .sources.tables import events_stream, table_path
+        from .streaming.sizing import start_sized
         from .streaming.windows import tumbling_counts
 
         rollup_path = join_uri(
@@ -103,16 +104,18 @@ def run_jobs(config: dict, spark=None, run_ts: str | None = None) -> dict:
         stream = events_stream(spark, sf_dir).withWatermark(
             "ts", stream_cfg.get("watermark", "1 hour")
         )
-        q = (
+        writer = (
             tumbling_counts(stream, duration)
             .writeStream.format("parquet")
             .option("path", rollup_path)
             .option("checkpointLocation", ckpt_path)
             .outputMode("append")
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
+        # State sized from the events footer, not the session's batch
+        # shuffle-partition count (mostly-empty state partitions are pure
+        # commit I/O); the checkpoint pins the count for later runs.
+        start_sized(writer, table_path(sf_dir, "events")).awaitTermination()
         outputs["events_rollup"] = rollup_path
     return outputs
 

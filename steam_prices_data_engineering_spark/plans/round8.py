@@ -227,36 +227,20 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     sink = f"stream_jw_{uuid.uuid4().hex[:8]}"
-    # State partitions are sized to the stateful-key cardinality, not
-    # the batch shuffle default: this chain carries THREE state stores
-    # (two join sides + the window agg) per partition per micro-batch,
-    # and every partition pays commit I/O per batch whether or not it
-    # holds keys. Sweep on this data (r10, two interleaved rounds):
-    # 32 -> 18.2 s, 16 -> 5.8-7.6 s, 8 -> 4.0-10.0 s, 4 -> 2.9-3.9 s,
-    # 2 -> 2.8-2.9 s; 4 keeps a little probe parallelism while paying
-    # near-minimal commit overhead. A real deployment sets this per
-    # stream job from expected key cardinality/throughput (env override
-    # inside the helper, same knob the streaming window helpers use);
-    # the result set is partitioning-invariant (oracle + boundary
-    # tests). r11: sized by the shared footer-derived helper (reproduces
-    # 4 at every local sf; scales with landed rows).
-    from ..streaming.windows import stream_state_partitions
+    # Three state stores (two join sides + the window agg) commit per
+    # partition per micro-batch, so this chain gains most from state
+    # sized to the data (streaming/sizing.py: 32 -> 18.2 s, 4 -> ~3 s);
+    # the result set is partitioning-invariant (oracle + boundary tests).
     from ..sources.tables import table_path
+    from ..streaming.sizing import start_sized
 
-    parts = stream_state_partitions(table_path(sf_dir, "events"))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    try:
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    writer = (
+        out.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("append")
+        .trigger(availableNow=True)
+    )
+    start_sized(writer, table_path(sf_dir, "events")).awaitTermination()
     return spark.table(sink)
 
 

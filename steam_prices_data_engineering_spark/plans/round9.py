@@ -211,8 +211,8 @@ def longest_dup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape: per-invocation scratch dir (no shared-landing flock
 # hazard); state is per (hour, event_type) — the production form adds a
-# watermark to bound it; partition sizing follows the r8 state-store
-# lesson (spark.sql.shuffle.partitions already session-tuned).
+# watermark to bound it; state partitions are sized from the landing
+# (streaming/sizing.py).
 # ===========================================================================
 
 # WHERE mirrors the builder's NULL guard on the event_id batch split: a
@@ -263,39 +263,21 @@ def _restart_run_once(spark: SparkSession, src: str, ckpt: str) -> str:
         .load(src)
     )
     sink = f"restart_q_{uuid.uuid4().hex[:8]}"
-    # State partitions sized to key cardinality, not the batch shuffle
-    # default (the r8 state-store lesson, round8.py:231): the state grain
-    # is (hour, event_type) — hundreds of keys — and each availableNow
-    # run pays per-partition state-store commit I/O; 32 mostly-idle
-    # instances measured 1.24 s + 1.14 s for the two runs vs
-    # 0.75 s + 0.54 s at 8 on the same data. The partition count is
-    # pinned INTO the checkpoint by run 1 either way, so both runs must
-    # agree; results are partitioning-invariant (oracle + carryover
-    # assertion). A real deployment sets this per stream job from key
-    # cardinality/throughput. r11: sized by the shared footer-derived
-    # helper over the scratch landing (floor=8, the r9-measured value at
-    # local scale; Spark restores the run-1 count from the checkpoint if
-    # a larger run-2 landing would derive differently).
-    from ..streaming.windows import stream_state_partitions
+    # State sized from the scratch landing (floor=8, the r9-measured value
+    # at local scale). Run 1 pins the count into the checkpoint and run 2
+    # resumes with it; results are partitioning-invariant (oracle +
+    # carryover assertion).
+    from ..streaming.sizing import start_sized
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        stream_state_partitions(src, floor=8),
+    writer = (
+        _restart_agg(stream)
+        .writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
     )
-    try:
-        q = (
-            _restart_agg(stream)
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    start_sized(writer, src, floor=8).awaitTermination()
     return sink
 
 
@@ -688,37 +670,22 @@ def streaming_state_introspection(
             .load(src)
         )
         sink = f"ssi_{uuid.uuid4().hex[:8]}"
-        # State partitions sized to key cardinality (the r8 state-store
-        # lesson, round8.py:231): (hour, event_type) state is hundreds
-        # of keys; 8 partitions cut both the commit I/O of the
-        # availableNow run AND the statestore batch read-back (one state
-        # file per partition). partition_id never reaches the compared
-        # output (CLAUDE.md), so the count is free to change. r11: sized
-        # by the shared footer-derived helper (floor=8, the r9-measured
-        # value at local scale; scales with landed rows).
-        from ..streaming.windows import stream_state_partitions
+        # (hour, event_type) state is hundreds of keys: state sized from
+        # the landing (floor=8) cuts both the commit I/O of the run AND
+        # the statestore read-back (one state file per partition).
+        # partition_id never reaches the compared output (CLAUDE.md).
+        from ..streaming.sizing import start_sized
 
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            stream_state_partitions(src, floor=8),
+        writer = (
+            stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
         )
-        try:
-            q = (
-                stream.groupBy(
-                    F.window("ts", "1 hour").alias("w"), "event_type"
-                )
-                .agg(F.count(F.lit(1)).alias("n"))
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        start_sized(writer, src, floor=8).awaitTermination()
         state = spark.read.format("statestore").load(ckpt)
         audited = state.groupBy(
             F.col("key.event_type").alias("event_type")

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
+from .sizing import start_sized
 
 
 def tumbling_counts(events: DataFrame, duration: str = "10 minutes") -> DataFrame:
@@ -88,99 +89,21 @@ def events_stream(spark, events_path: str, watermark: str = "1 hour") -> DataFra
     )
 
 
-def stream_state_partitions(
-    events_path: str | None,
-    floor: int = 4,
-    cap: int = 512,
-    rows_per_partition: int = 50_000,
-) -> str:
-    """Scale-adaptive state-store partition count for a stateful stream
-    over `events_path` (VERDICT r10 next-round #8: derive from data, not
-    a local constant).
-
-    Derivation: parquet footer num_rows (a metadata read, no Spark job —
-    stream starts stay cheap) divided by ~50k rows per state partition,
-    next power of two, clamped to [floor, cap]. Rationale: state keys
-    (windows x small dims) grow sublinearly with rows, and mostly-empty
-    state partitions are pure commit I/O (the round-8 lesson, 18.2s ->
-    3.1s); 50k rows/partition reproduces the measured-optimal floor=4 on
-    every local sf (sf0.1 events = 100k rows -> 4) while a 1e9-row
-    landing derives 512. SPARK_GRAFT_STREAM_STATE_PARTITIONS still
-    overrides everything for cluster tuning."""
-    import math
-    import os
-
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env:
-        return env
-    n_rows = 0
-    if events_path and os.path.exists(events_path):
-        try:
-            import glob
-
-            import pyarrow.parquet as pq
-
-            files = (
-                sorted(glob.glob(os.path.join(events_path, "*.parquet")))
-                if os.path.isdir(events_path)
-                else [events_path]
-            )
-            n_rows = sum(
-                pq.ParquetFile(f).metadata.num_rows for f in files
-            )
-        except Exception:
-            n_rows = 0
-    if n_rows <= 0:
-        return str(floor)
-    want = max(1, math.ceil(n_rows / rows_per_partition))
-    parts = 1 << max(0, (want - 1).bit_length())
-    return str(min(max(parts, floor), cap))
-
-
-def run_to_memory_sink(
-    agg: DataFrame,
-    prefix: str,
-    state_partitions: int = 4,
-    events_path: str | None = None,
-):
+def run_to_memory_sink(agg: DataFrame, prefix: str, events_path: str):
     """Run a streaming aggregation to completion (availableNow) into a
-    memory sink; return the materialized table.
-
-    The stateful operator's state-store partition count is frozen from
-    `spark.sql.shuffle.partitions` at query start; these aggregates key
-    on a handful of (window, dim) values, so the session default (32)
-    makes every micro-batch commit mostly-empty state files — pure
-    commit I/O (the round-8 streaming_join_then_window lesson, 18.2s ->
-    3.1s; re-measured here: enriched tumbling agg 1.95s -> ~1.3s at
-    sf0.1). Sized via `stream_state_partitions` (footer-derived,
-    env-overridable; r10 sweep: 4 beat 8 in every paired round on the
-    enriched agg at sf0.1, and the derivation reproduces 4 there) and
-    restored after start, so batch plans are untouched. Partition count
-    never reaches compared columns — values identical."""
-    import os
-
-    spark = agg.sparkSession
-    if events_path is not None:
-        parts = stream_state_partitions(events_path, floor=state_partitions)
-    else:
-        parts = os.environ.get(
-            "SPARK_GRAFT_STREAM_STATE_PARTITIONS", str(state_partitions)
-        )
+    memory sink; return the materialized table. State is sized from the
+    events landing by `sizing.start_sized` (r10 sweep: 4 beat 8 in every
+    paired round on the enriched agg at sf0.1, and the derivation
+    reproduces 4 there)."""
     sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.table(sink)
+    writer = (
+        agg.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+    )
+    start_sized(writer, events_path).awaitTermination()
+    return agg.sparkSession.table(sink)
 
 
 def streaming_tumbling_counts(

@@ -5,6 +5,8 @@ new partition, and the latest-run selection reads back exactly one run.
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 
 import yaml
@@ -56,6 +58,18 @@ def test_cli_runs_both_jobs_with_run_partitions(spark):
     assert worldmap.filter(F.col("run_key") == latest).count() == 14
 
 
+def _pinned_state_partitions(output_dir):
+    """Distinct shuffle-partition counts recorded in job 3's offset log."""
+    log_dir = os.path.join(output_dir, "_checkpoints", "events_rollup", "offsets")
+    pinned = set()
+    for name in os.listdir(log_dir):
+        if name.isdigit():
+            with open(os.path.join(log_dir, name)) as f:
+                meta = json.loads(f.read().splitlines()[1])
+            pinned.add(meta["conf"]["spark.sql.shuffle.partitions"])
+    return sorted(pinned)
+
+
 def test_cli_streaming_rollup_incremental_and_idempotent(spark):
     """Job 3: the streaming rollup lands append-mode windowed counts in
     parquet behind a checkpoint. Emitted rows must equal the batch
@@ -64,7 +78,13 @@ def test_cli_streaming_rollup_incremental_and_idempotent(spark):
     source must process zero new files (checkpoint: no duplicate rows)."""
     import shutil
 
-    from steam_prices_data_engineering_spark.sources.tables import read_table
+    from steam_prices_data_engineering_spark.sources.tables import (
+        read_table,
+        table_path,
+    )
+    from steam_prices_data_engineering_spark.streaming.sizing import (
+        stream_state_partitions,
+    )
     from steam_prices_data_engineering_spark.streaming.windows import (
         tumbling_counts,
     )
@@ -80,7 +100,14 @@ def test_cli_streaming_rollup_incremental_and_idempotent(spark):
         "streaming": {"enabled": True},
     }
     shutil.rmtree(cfg["target"]["output_dir"], ignore_errors=True)
+    session_parts = spark.conf.get("spark.sql.shuffle.partitions")
     out = run_jobs(cfg, spark=spark, run_ts="20240101000000")
+    # The stream's state is sized from the events footer and pinned in the
+    # checkpoint; the session's batch setting is left as it was.
+    assert _pinned_state_partitions(cfg["target"]["output_dir"]) == [
+        stream_state_partitions(table_path(cfg["source"]["sf_dir"], "events"))
+    ]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session_parts
     landed = spark.read.parquet(out["events_rollup"].replace("file://", ""))
     n1 = landed.count()
 
@@ -100,3 +127,25 @@ def test_cli_streaming_rollup_incremental_and_idempotent(spark):
         out["events_rollup"].replace("file://", "")
     ).count()
     assert n2 == n1
+
+
+def test_cli_streaming_resumes_a_checkpoint_with_another_count(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpoint written at 32 state partitions (the session default
+    before job 3 was sized) resumes unchanged: Spark restores the pinned
+    count, so the second run raises nothing and lands no new rows."""
+    cfg = {
+        "source": {"sf_dir": CONFIG["source"]["sf_dir"]},
+        "target": dict(CONFIG["target"], output_dir=str(tmp_path)),
+        "streaming": {"enabled": True},
+    }
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "32")
+    out = run_jobs(cfg, spark=spark, run_ts="20240101000000")
+    n1 = spark.read.parquet(out["events_rollup"]).count()
+    assert _pinned_state_partitions(str(tmp_path)) == ["32"]
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
+    run_jobs(cfg, spark=spark, run_ts="20240102000000")
+    assert spark.read.parquet(out["events_rollup"]).count() == n1
+    assert _pinned_state_partitions(str(tmp_path)) == ["32"]

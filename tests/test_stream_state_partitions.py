@@ -4,12 +4,12 @@ data-derived count, keeping the env override)."""
 
 from __future__ import annotations
 
-import os
+import logging
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from steam_prices_data_engineering_spark.streaming.windows import (
+from steam_prices_data_engineering_spark.streaming.sizing import (
     stream_state_partitions,
 )
 
@@ -52,3 +52,21 @@ def test_env_override_wins(tmp_path, monkeypatch):
     _write(p, 1_000_000)
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "7")
     assert stream_state_partitions(p) == "7"
+
+
+def test_file_uri_sizes_like_the_plain_path(tmp_path):
+    p = str(tmp_path / "e.parquet")
+    _write(p, 1_000_000)
+    assert stream_state_partitions("file://" + p) == stream_state_partitions(p)
+    assert stream_state_partitions("file://" + p) == "32"
+
+
+def test_fallbacks_log_a_warning(tmp_path, caplog):
+    bad = tmp_path / "bad.parquet"
+    bad.write_bytes(b"not a parquet footer")
+    with caplog.at_level(logging.WARNING, logger="steam_prices_spark"):
+        assert stream_state_partitions(str(bad), floor=8) == "8"
+        assert stream_state_partitions("s3a://bucket/e.parquet") == "4"
+    text = caplog.text
+    assert str(bad) in text and "floor 8" in text
+    assert "s3a://bucket/e.parquet" in text and "floor 4" in text
