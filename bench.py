@@ -238,12 +238,11 @@ BENCH_QUERIES = [
     "trigram_similarity_join",
     "soundex_token_blocks",
     "youden_threshold_pick",
-    # round-9 tier + the shard-order pair (the fixed audit and its probe)
+    # round-9 tier + the shard-order probes (the fixed audit is in part C)
     "longest_dup_substring",
     "streaming_restart_carryover",
     "dedup_index_compaction",
     "embedding_source_psi",
-    "shard_order_autocorr",
     "shard_order_probe_inputs",
     "shard_order_probe_pairs",
     "streaming_state_introspection",

@@ -453,8 +453,8 @@ def streaming_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode the watermark closes sessions and drops their state, so pattern
     flags emit exactly once per closed session — collect_list state is
     bounded by the inactivity gap."""
-    from ..sources.tables import events_stream
-    from .scale_patterns import _run_to_memory
+    from ..sources.tables import events_stream, table_path
+    from ..streaming.sizing import run_stream
 
     sym = (
         F.when(F.col("event_type") == "view", "V")
@@ -493,8 +493,7 @@ def streaming_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.regexp_like(F.col("syms"), F.lit(_CEP_PATTERNS[1][1])),
         )
     )
-    sink = _run_to_memory(agg, "stream_cep", "complete")
-    return spark.table(sink)
+    return run_stream(agg, "complete", table_path(sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------

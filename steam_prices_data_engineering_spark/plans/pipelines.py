@@ -405,7 +405,7 @@ def streaming_steam_source_extract(spark: SparkSession, sf_dir: str) -> DataFram
     plan on the stream, drained with availableNow into a memory sink. One
     poll covers all fixture payloads, so the result equals the batch
     form and shares its oracle."""
-    import uuid
+    from ..streaming.sizing import run_stream
 
     register_steam_source(spark)
     payloads = spark.readStream.format("steam_appdetails").load()
@@ -429,16 +429,8 @@ def streaming_steam_source_extract(spark: SparkSession, sf_dir: str) -> DataFram
             "usd_price"
         ),
     )
-    sink = f"stream_steam_{uuid.uuid4().hex[:8]}"
-    q = (
-        result.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    # stateless and fed by the REST source: no parquet landing to size from
+    return run_stream(result, "append", None)
 
 
 # ---------------------------------------------------------------------------

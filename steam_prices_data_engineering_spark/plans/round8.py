@@ -187,9 +187,8 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """15-minute pair counts of purchase->error-within-10-min, computed
     as ONE streaming query: stream-stream interval join chained into a
     stateful windowed aggregate."""
-    import uuid
-
-    from ..sources.tables import events_stream
+    from ..sources.tables import events_stream, table_path
+    from ..streaming.sizing import run_stream
 
     p = (
         events_stream(spark, sf_dir)
@@ -226,22 +225,11 @@ def streaming_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_purchase_value"
         ),
     )
-    sink = f"stream_jw_{uuid.uuid4().hex[:8]}"
     # Three state stores (two join sides + the window agg) commit per
     # partition per micro-batch, so this chain gains most from state
     # sized to the data (streaming/sizing.py: 32 -> 18.2 s, 4 -> ~3 s);
     # the result set is partitioning-invariant (oracle + boundary tests).
-    from ..sources.tables import table_path
-    from ..streaming.sizing import start_sized
-
-    writer = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-    )
-    start_sized(writer, table_path(sf_dir, "events")).awaitTermination()
-    return spark.table(sink)
+    return run_stream(out, "append", table_path(sf_dir, "events"))
 
 
 # ===========================================================================

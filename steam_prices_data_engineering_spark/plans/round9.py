@@ -38,13 +38,13 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
 from ..sources.tables import TABLE_SCHEMAS, read_table
+from ..streaming.sizing import run_stream
 from .registry import register
 
 # ===========================================================================
@@ -256,29 +256,19 @@ def _restart_agg(stream: DataFrame) -> DataFrame:
     )
 
 
-def _restart_run_once(spark: SparkSession, src: str, ckpt: str) -> str:
+def _restart_run_once(spark: SparkSession, src: str, ckpt: str) -> DataFrame:
     stream = (
         spark.readStream.schema(TABLE_SCHEMAS["events"])
         .format("parquet")
         .load(src)
     )
-    sink = f"restart_q_{uuid.uuid4().hex[:8]}"
     # State sized from the scratch landing (floor=8, the r9-measured value
     # at local scale). Run 1 pins the count into the checkpoint and run 2
     # resumes with it; results are partitioning-invariant (oracle +
     # carryover assertion).
-    from ..streaming.sizing import start_sized
-
-    writer = (
-        _restart_agg(stream)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
+    return run_stream(
+        _restart_agg(stream), "complete", src, floor=8, checkpoint=ckpt
     )
-    start_sized(writer, src, floor=8).awaitTermination()
-    return sink
 
 
 @register("streaming_restart_carryover", _RESTART_SQL)
@@ -314,11 +304,11 @@ def streaming_restart_carryover(
         n_even = parity_counts.get(0, 0)
         n_odd = parity_counts.get(1, 0)
         evens.write.mode("append").parquet(src)
-        sink1 = _restart_run_once(spark, src, ckpt)
-        n1 = spark.table(sink1).agg(F.sum("n_events")).collect()[0][0] or 0
+        run1 = _restart_run_once(spark, src, ckpt)
+        n1 = run1.agg(F.sum("n_events")).collect()[0][0] or 0
         odds.write.mode("append").parquet(src)
-        sink2 = _restart_run_once(spark, src, ckpt)
-        n2 = spark.table(sink2).agg(F.sum("n_events")).collect()[0][0] or 0
+        run2 = _restart_run_once(spark, src, ckpt)
+        n2 = run2.agg(F.sum("n_events")).collect()[0][0] or 0
         # exact carryover proof (empty-input safe: 0 == 0 on empty
         # events): run 1 saw exactly the even batch; the restarted run's
         # state covers even + odd — a rebuilt state would total only
@@ -330,8 +320,7 @@ def streaming_restart_carryover(
                 f"(expected {n_even + n_odd}) — state was rebuilt or "
                 "batch 2 leaked into run 1"
             )
-        spark.catalog.dropTempView(sink1)
-        return spark.table(sink2).select(
+        return run2.select(
             "hour_start", "event_type", "n_events", "sum_value_micro"
         )
     finally:
@@ -669,23 +658,18 @@ def streaming_state_introspection(
             .format("parquet")
             .load(src)
         )
-        sink = f"ssi_{uuid.uuid4().hex[:8]}"
         # (hour, event_type) state is hundreds of keys: state sized from
         # the landing (floor=8) cuts both the commit I/O of the run AND
         # the statestore read-back (one state file per partition).
         # partition_id never reaches the compared output (CLAUDE.md).
-        from ..streaming.sizing import start_sized
-
-        writer = (
+        run_stream(
             stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
+            .agg(F.count(F.lit(1)).alias("n")),
+            "complete",
+            src,
+            floor=8,
+            checkpoint=ckpt,
         )
-        start_sized(writer, src, floor=8).awaitTermination()
         state = spark.read.format("statestore").load(ckpt)
         audited = state.groupBy(
             F.col("key.event_type").alias("event_type")
@@ -703,7 +687,6 @@ def streaming_state_introspection(
         # bounded (event_type-grain) audit before the finally deletes
         # the checkpoint, and hand back a local relation
         rows = audited.collect()
-        spark.catalog.dropTempView(sink)
         return spark.createDataFrame(rows, audited.schema)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)

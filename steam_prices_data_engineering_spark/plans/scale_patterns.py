@@ -7,9 +7,6 @@ single logical key exceeds what one task should hold.)
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -17,6 +14,7 @@ from pyspark.sql import types as T
 from ..functions.rounding import dround, dround_sql as R
 from ..sources.tables import events_stream as _events_stream
 from ..sources.tables import read_table, table_path
+from ..streaming.sizing import run_stream, start_sized
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -59,20 +57,6 @@ def skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         dround(F.sum("ps"), 4).alias("sum_value"),
         dround(F.max("pm"), 4).alias("max_value"),
     )
-
-
-
-def _run_to_memory(df: DataFrame, prefix: str, mode: str) -> str:
-    sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return sink
 
 
 # ---------------------------------------------------------------------------
@@ -129,8 +113,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e_ts").cast("long").alias("e_epoch"),
         dround(F.col("p_value"), 4).alias("purchase_value"),
     )
-    sink = _run_to_memory(joined, "stream_ivjoin", "append")
-    return spark.table(sink)
+    return run_stream(joined, "append", table_path(sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -212,8 +195,7 @@ def streaming_leftouter_interval_join(
         F.col("e_ts").cast("long").alias("e_epoch"),
         dround(F.col("p_value"), 4).alias("purchase_value"),
     )
-    sink = _run_to_memory(joined, "stream_lojoin", "append")
-    return spark.table(sink)
+    return run_stream(joined, "append", table_path(sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -292,8 +274,7 @@ def streaming_fullouter_interval_join(
         F.col("e_ts").cast("long").alias("e_epoch"),
         dround(F.col("p_value"), 4).alias("purchase_value"),
     )
-    sink = _run_to_memory(joined, "stream_fojoin", "append")
-    return spark.table(sink)
+    return run_stream(joined, "append", table_path(sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -348,8 +329,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    sink = _run_to_memory(agg, "stream_session", "complete")
-    return spark.table(sink)
+    return run_stream(agg, "complete", table_path(sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -478,9 +458,7 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     One availableNow batch => the read-back table equals the batch GROUP
     BY oracle."""
     import shutil
-    import uuid
-
-    out_dir = f"/root/repo/.scratch/febatch_{uuid.uuid4().hex[:8]}"
+    import tempfile
 
     agg = (
         _events_stream(spark, sf_dir)
@@ -490,6 +468,7 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             dround(F.sum("value"), 4).alias("sum_value"),
         )
     )
+    out_dir = tempfile.mkdtemp(prefix="spde_febatch_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -500,21 +479,22 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    q = (
+    writer = (
         agg.writeStream.foreachBatch(write_batch)
         .outputMode("complete")
         .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    result = (
-        spark.read.parquet(out_dir)
-        .select("event_type", "n_events", "sum_value")
-        .cache()  # session-per-query
-    )
-    result.count()  # materialize before the scratch dir is removed
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return result
+    try:
+        start_sized(writer, table_path(sf_dir, "events")).awaitTermination()
+        result = (
+            spark.read.parquet(out_dir)
+            .select("event_type", "n_events", "sum_value")
+            .cache()  # session-per-query
+        )
+        result.count()  # materialize before the scratch dir is removed
+        return result
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -559,8 +539,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         dround(F.col("value"), 4).alias("value"),
     )
-    sink = _run_to_memory(enriched, "enrich", "append")
-    return spark.table(sink)
+    return run_stream(enriched, "append", table_path(sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -680,8 +659,7 @@ def streaming_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "sum_value",
     )
-    sink = _run_to_memory(out, "stream_multires", "append")
-    return spark.table(sink)
+    return run_stream(out, "append", table_path(sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -1216,8 +1194,7 @@ def streaming_semi_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p_ts").cast("long").alias("p_epoch"),
         dround(F.col("p_value"), 4).alias("purchase_value"),
     )
-    sink = _run_to_memory(joined, "stream_semijoin", "append")
-    return spark.table(sink)
+    return run_stream(joined, "append", table_path(sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------

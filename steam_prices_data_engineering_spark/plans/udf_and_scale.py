@@ -199,26 +199,16 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     a memory sink, then aggregated batch-side. With one availableNow batch
     the dedup keeps exactly one row per key, so per-user key counts equal
     the batch COUNT(DISTINCT) oracle."""
-    import uuid
-
-    from ..sources.tables import events_stream
+    from ..sources.tables import events_stream, table_path
+    from ..streaming.sizing import run_stream
 
     stream = (
         events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
     )
-    sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        stream.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(sink)
+        run_stream(stream, "append", table_path(sf_dir, "events"))
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_types"))
     )
@@ -243,11 +233,11 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     single availableNow batch the emitted totals equal the batch GROUP BY
     oracle."""
     import math
-    import uuid
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..sources.tables import events_stream
+    from ..sources.tables import events_stream, table_path
+    from ..streaming.sizing import run_stream
 
     out_schema = T.StructType(
         [
@@ -285,16 +275,7 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    sink = f"stream_state_{uuid.uuid4().hex[:8]}"
-    q = (
-        result.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return run_stream(result, "update", table_path(sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------

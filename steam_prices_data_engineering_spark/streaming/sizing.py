@@ -1,5 +1,7 @@
-"""State-store sizing for stateful streams: the engine's one place that
-picks a stream's partition count.
+"""The engine's one place that starts a stream: `run_stream` runs a
+streaming frame to a result, and `start_sized` (which it uses, and which
+the CLI's file-sink job calls directly) picks the stream's state-store
+partition count.
 
 A stateful operator freezes its state-store partition count from
 `spark.sql.shuffle.partitions` when the query starts, and the checkpoint's
@@ -19,6 +21,9 @@ import glob
 import logging
 import math
 import os
+import uuid
+
+from pyspark.sql import DataFrame
 
 from ..sources.io import local_path
 
@@ -30,12 +35,15 @@ _PARTITIONS = "spark.sql.shuffle.partitions"
 def _footer_rows(source: str | None, floor: int) -> int:
     """Row count from the parquet footers at `source` (a file or a
     directory of part files; plain path or file:// URI), or 0 with a
-    warning naming the fallback when they cannot be read."""
+    warning naming the fallback when they cannot be read. `None` means
+    the stream has no parquet landing (not a fallback): 0, silently."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    if source is None:
+        return 0
     try:
-        path = local_path(source) if source else None
+        path = local_path(source)
     except NotImplementedError:
         path = None
     if not path or not os.path.exists(path):
@@ -102,3 +110,38 @@ def start_sized(writer, source: str | None, floor: int = 4):
         return writer.start()
     finally:
         spark.conf.set(_PARTITIONS, prev)
+
+
+def run_stream(
+    df: DataFrame,
+    mode: str,
+    source: str | None,
+    *,
+    floor: int = 4,
+    checkpoint: str | None = None,
+) -> DataFrame:
+    """Run streaming `df` to completion (availableNow) into a memory sink
+    started through `start_sized(writer, source, floor)`; return the
+    sink's rows as a frame. `source` is the parquet landing the stream
+    reads (None for a stream with no file source).
+
+    The sink's temp view is dropped before returning: the frame's analyzed
+    plan holds the sink itself, so it still reads the rows, and they are
+    freed with the frame. Spark deletes the memory sink's temporary
+    checkpoint when the query stops; a `checkpoint` the caller owns is
+    passed through and left in place."""
+    spark = df.sparkSession
+    sink = f"stream_{uuid.uuid4().hex}"
+    writer = (
+        df.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+    )
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    try:
+        start_sized(writer, source, floor).awaitTermination()
+        return spark.table(sink)
+    finally:
+        spark.catalog.dropTempView(sink)

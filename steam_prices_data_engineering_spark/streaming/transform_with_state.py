@@ -21,8 +21,6 @@ availableNow batch over a static parquet equals the batch aggregation.
 from __future__ import annotations
 
 import math
-import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,7 +55,8 @@ def user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         StatefulProcessorHandle,
     )
 
-    from ..sources.tables import events_stream
+    from ..sources.tables import events_stream, table_path
+    from .sizing import run_stream
 
     out_schema = T.StructType(
         [
@@ -114,18 +113,9 @@ def user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="Update",
             timeMode="None",
         )
-        sink = f"stream_tws_{uuid.uuid4().hex[:8]}"
-        q = (
-            result.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        return run_stream(result, "update", table_path(sf_dir, "events"))
     finally:
         if prev is None:
             spark.conf.unset(_PROVIDER_KEY)
         else:
             spark.conf.set(_PROVIDER_KEY, prev)
-    return spark.table(sink)

@@ -4,9 +4,9 @@ Batch-first: `F.window` / `F.session_window` work identically on static
 DataFrames, which is what makes these oracle-checkable in DuckDB (tumbling =
 epoch bucketing; session = gaps-and-islands SQL). The streaming wrappers run
 the same logical plan through Structured Streaming with a watermark and an
-availableNow trigger, landing in a memory sink — with a single replayed batch
-no rows are late, so the result must equal the batch plan (the driver's
-oracle can therefore check the streaming path too).
+availableNow trigger, run to a result by `sizing.run_stream` — with a single
+replayed batch no rows are late, so the result must equal the batch plan (the
+driver's oracle can therefore check the streaming path too).
 
 Window starts are returned as epoch seconds (long), not timestamps — the
 cross-engine value-hash is type-sensitive and epoch longs are unambiguous.
@@ -14,13 +14,11 @@ cross-engine value-hash is type-sensitive and epoch longs are unambiguous.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
-from .sizing import start_sized
+from .sizing import run_stream
 
 
 def tumbling_counts(events: DataFrame, duration: str = "10 minutes") -> DataFrame:
@@ -89,23 +87,6 @@ def events_stream(spark, events_path: str, watermark: str = "1 hour") -> DataFra
     )
 
 
-def run_to_memory_sink(agg: DataFrame, prefix: str, events_path: str):
-    """Run a streaming aggregation to completion (availableNow) into a
-    memory sink; return the materialized table. State is sized from the
-    events landing by `sizing.start_sized` (r10 sweep: 4 beat 8 in every
-    paired round on the enriched agg at sf0.1, and the derivation
-    reproduces 4 there)."""
-    sink = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    writer = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-    )
-    start_sized(writer, events_path).awaitTermination()
-    return agg.sparkSession.table(sink)
-
-
 def streaming_tumbling_counts(
     spark,
     events_path: str,
@@ -129,7 +110,7 @@ def streaming_tumbling_counts(
             "sum_value",
         )
     )
-    return run_to_memory_sink(agg, "stream_tumble", events_path=events_path)
+    return run_stream(agg, "complete", events_path)
 
 
 def streaming_sliding_counts(
@@ -157,7 +138,7 @@ def streaming_sliding_counts(
             "avg_value",
         )
     )
-    return run_to_memory_sink(agg, "stream_slide", events_path=events_path)
+    return run_stream(agg, "complete", events_path)
 
 
 def streaming_static_enriched_counts(
@@ -206,4 +187,4 @@ def streaming_static_enriched_counts(
             ).alias("sum_value"),
         )
     )
-    return run_to_memory_sink(agg, "stream_enrich", events_path=events_path)
+    return run_stream(agg, "complete", events_path)

@@ -64,9 +64,22 @@ def test_file_uri_sizes_like_the_plain_path(tmp_path):
 def test_fallbacks_log_a_warning(tmp_path, caplog):
     bad = tmp_path / "bad.parquet"
     bad.write_bytes(b"not a parquet footer")
+    missing = str(tmp_path / "gone.parquet")
     with caplog.at_level(logging.WARNING, logger="steam_prices_spark"):
         assert stream_state_partitions(str(bad), floor=8) == "8"
         assert stream_state_partitions("s3a://bucket/e.parquet") == "4"
+        assert stream_state_partitions(missing, floor=2) == "2"
     text = caplog.text
     assert str(bad) in text and "floor 8" in text
     assert "s3a://bucket/e.parquet" in text and "floor 4" in text
+    assert missing in text and "floor 2" in text
+
+
+def test_no_landing_is_silent(caplog):
+    # source=None: a stream with no parquet landing (e.g. the REST source)
+    # sizes to the floor without a fallback warning
+    with caplog.at_level(logging.WARNING, logger="steam_prices_spark"):
+        assert stream_state_partitions(None) == "4"
+        assert stream_state_partitions(None, floor=8) == "8"
+    assert not caplog.records
+
