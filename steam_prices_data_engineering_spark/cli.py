@@ -1,11 +1,20 @@
 """Config-driven job runner — the engine's equivalent of the reference's
 `run.py` entry point (O35, `/root/reference/run.py:17-67`): parse a YAML
-config, build the session, run job 1 (prices ETL) and job 2 (world-map
-deviation) sequentially, landing each as a run-partitioned snappy-parquet
+config, build the session, run job 1 (prices ETL) and then job 2
+(world-map deviation), landing each as a run-partitioned snappy-parquet
 table (S7/S9), plus job 2's PNG artifact (S8) rendered driver-side from
 the collected aggregate by the dependency-free encoder in sinks/png.py —
 one parquet landing per job and one PNG per run, the same artifact set
 as a reference run.
+
+Job 3 (config-gated) is a checkpointed streaming rollup. It overlaps
+jobs 1–2 instead of following them: its query is started before job 1
+and awaited after the PNG, so its micro-batches run on the stream's own
+thread while this one builds and lands the batch jobs. A stream *start*
+error therefore fails the run before job 1 lands, and an error in job 1
+or 2 stops the stream before it propagates. Each job logs its wall time
+at INFO; job 3 also logs its batch count, input rows and trigger time
+from the query's progress.
 
 Usage:
     python -m steam_prices_data_engineering_spark.cli configs/etl_config.yml
@@ -15,6 +24,7 @@ from __future__ import annotations
 
 import argparse
 import logging
+import time
 from datetime import datetime, timezone
 
 import yaml
@@ -30,10 +40,11 @@ log = logging.getLogger("steam_prices_spark")
 
 
 def run_jobs(config: dict, spark=None, run_ts: str | None = None) -> dict:
-    """Run both jobs per the config; returns {job: output_path}. `run_ts`
+    """Run the configured jobs; returns {job: output_path}. `run_ts`
     is injectable for reproducible tests (the reference bakes
     `datetime.now()` into its output keys, steam_prices_transformer.py:206 —
-    the non-determinism the survey flags as a test risk)."""
+    the non-determinism the survey flags as a test risk). Job 3's stream
+    is started first and awaited last (see the module docstring)."""
     spark = spark or get_spark(app_name=config.get("app_name", "steam-prices-etl"))
     sf_dir = config["source"]["sf_dir"]
     out_root = config["target"]["output_dir"]
@@ -41,56 +52,17 @@ def run_jobs(config: dict, spark=None, run_ts: str | None = None) -> dict:
     run_key = run_ts or datetime.now(timezone.utc).strftime(fmt)
 
     outputs = {}
-
-    # join_uri: output_dir may be a plain dir or an object-store-shaped
-    # URI (file:// in tests, s3a:// on a cluster) — see sources/io.py.
-    prices_path = join_uri(out_root, config["target"]["prices_key"])
-    log.info("job 1: prices ETL -> %s (run %s)", prices_path, run_key)
-    (
-        steam_job1_prices_etl(spark, sf_dir)
-        .withColumn("run_key", F.lit(run_key))
-        .write.mode("append")
-        .partitionBy("run_key")
-        .parquet(prices_path)
-    )
-    outputs["prices"] = prices_path
-
-    worldmap_path = join_uri(out_root, config["target"]["worldmap_key"])
-    log.info("job 2: world-map deviation -> %s (run %s)", worldmap_path, run_key)
-    # One built frame feeds both the parquet landing and the PNG artifact
-    # below — the builder (plan construction + py4j) runs once per
-    # invocation instead of twice (r11; same plan object, same results).
-    worldmap_df = world_map_job2_deviation(spark, sf_dir)
-    (
-        worldmap_df.withColumn("run_key", F.lit(run_key))
-        .write.mode("append")
-        .partitionBy("run_key")
-        .parquet(worldmap_path)
-    )
-    outputs["worldmap"] = worldmap_path
-
-    png_path = local_path(
-        join_uri(
-            out_root,
-            config["target"].get("worldmap_png_key", "world_map_png"),
-            f"run_key={run_key}",
-            "world_map.png",
-        )
-    )
-    log.info("job 2: PNG artifact -> %s", png_path)
-    outputs["worldmap_png"] = world_map_png(
-        worldmap_df, "usd_dif", "iso_a3", png_path
-    )
-
-    # Job 3 (opt-in): incremental streaming rollup of the events stream to
-    # a checkpointed parquet landing. availableNow + checkpoint gives the
-    # production incremental-batch shape: each invocation processes ONLY
-    # files not yet in the checkpoint, append-mode emits a window once its
-    # watermark passes (exactly-once into the sink), and state carries
-    # across runs. The reference has no streaming surface — this is the
-    # §2b north-star extension productized behind the same config file.
     stream_cfg = config.get("streaming") or {}
+    query = None
     if stream_cfg.get("enabled"):
+        # Job 3: incremental streaming rollup of the events stream to a
+        # checkpointed parquet landing. availableNow + checkpoint gives the
+        # production incremental-batch shape: each invocation processes ONLY
+        # files not yet in the checkpoint, append-mode emits a window once
+        # its watermark passes (exactly-once into the sink), and state
+        # carries across runs. The reference has no streaming surface — this
+        # is the §2b north-star extension productized behind the same config
+        # file.
         from .sources.tables import events_stream, table_path
         from .streaming.sizing import start_sized
         from .streaming.windows import tumbling_counts
@@ -101,6 +73,7 @@ def run_jobs(config: dict, spark=None, run_ts: str | None = None) -> dict:
         ckpt_path = join_uri(out_root, "_checkpoints", "events_rollup")
         duration = stream_cfg.get("window", "10 minutes")
         log.info("job 3: streaming events rollup -> %s", rollup_path)
+        t3 = time.perf_counter()
         stream = events_stream(spark, sf_dir).withWatermark(
             "ts", stream_cfg.get("watermark", "1 hour")
         )
@@ -115,8 +88,69 @@ def run_jobs(config: dict, spark=None, run_ts: str | None = None) -> dict:
         # State sized from the events footer, not the session's batch
         # shuffle-partition count (mostly-empty state partitions are pure
         # commit I/O); the checkpoint pins the count for later runs.
-        start_sized(writer, table_path(sf_dir, "events")).awaitTermination()
-        outputs["events_rollup"] = rollup_path
+        # start_sized restores the session's count before it returns, so
+        # jobs 1–2 plan with it while the stream runs on its own clone.
+        query = start_sized(writer, table_path(sf_dir, "events"))
+    try:
+        # join_uri: output_dir may be a plain dir or an object-store-shaped
+        # URI (file:// in tests, s3a:// on a cluster) — see sources/io.py.
+        prices_path = join_uri(out_root, config["target"]["prices_key"])
+        log.info("job 1: prices ETL -> %s (run %s)", prices_path, run_key)
+        t0 = time.perf_counter()
+        (
+            steam_job1_prices_etl(spark, sf_dir)
+            .withColumn("run_key", F.lit(run_key))
+            .write.mode("append")
+            .partitionBy("run_key")
+            .parquet(prices_path)
+        )
+        outputs["prices"] = prices_path
+        log.info("job 1: landed in %.2f s", time.perf_counter() - t0)
+
+        worldmap_path = join_uri(out_root, config["target"]["worldmap_key"])
+        log.info("job 2: world-map deviation -> %s (run %s)", worldmap_path, run_key)
+        t0 = time.perf_counter()
+        # One built frame feeds both the parquet landing and the PNG artifact
+        # below — the builder (plan construction + py4j) runs once per
+        # invocation instead of twice (r11; same plan object, same results).
+        worldmap_df = world_map_job2_deviation(spark, sf_dir)
+        (
+            worldmap_df.withColumn("run_key", F.lit(run_key))
+            .write.mode("append")
+            .partitionBy("run_key")
+            .parquet(worldmap_path)
+        )
+        outputs["worldmap"] = worldmap_path
+
+        png_path = local_path(
+            join_uri(
+                out_root,
+                config["target"].get("worldmap_png_key", "world_map_png"),
+                f"run_key={run_key}",
+                "world_map.png",
+            )
+        )
+        log.info("job 2: PNG artifact -> %s", png_path)
+        outputs["worldmap_png"] = world_map_png(
+            worldmap_df, "usd_dif", "iso_a3", png_path
+        )
+        log.info("job 2: landed with its PNG in %.2f s", time.perf_counter() - t0)
+
+        if query is not None:
+            query.awaitTermination()
+            outputs["events_rollup"] = rollup_path
+            progress = query.recentProgress
+            log.info(
+                "job 3: %d batches, %d input rows, %d ms in triggers; "
+                "done %.2f s after its start",
+                len(progress),
+                sum(p.numInputRows for p in progress),
+                sum(p.durationMs.get("triggerExecution", 0) for p in progress),
+                time.perf_counter() - t3,
+            )
+    finally:
+        if query is not None and query.isActive:
+            query.stop()
     return outputs
 
 

@@ -17,9 +17,13 @@ scale-oriented defaults:
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+
+log = logging.getLogger("steam_prices_spark")
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
@@ -97,6 +101,8 @@ def configure_session(spark: SparkSession) -> SparkSession:
     for k, v in runtime.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-runtime-settable on this build; defaults are acceptable
+        except AnalysisException as exc:
+            # CANNOT_MODIFY_CONFIG / CANNOT_MODIFY_STATIC_CONFIG: the
+            # session keeps its own value for this key.
+            log.warning("configure_session: cannot set %s=%s (%s)", k, v, exc)
     return spark

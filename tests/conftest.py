@@ -35,16 +35,19 @@ def spark():
 # SAME immutable plan object the sweep collects from, which is exactly the
 # production calling pattern (one build, many consumers). Measured: suite
 # 1867s -> see OPTIMIZATION_r11.md. NOT result caching: collect/noop over
-# the memoized frame recomputes from parquet as before.
+# the memoized frame recomputes from parquet as before. Keyed on the
+# session's applicationId too, as sources/tables.py keys _TABLE_MEMO: a
+# test that restarts the session never gets a frame bound to a stopped
+# context.
 # ---------------------------------------------------------------------------
-_BUILT: dict[tuple[str, str], object] = {}
+_BUILT: dict[tuple[str, str, str], object] = {}
 
 
 def built_query(spark, name: str, sf_dir: str = SF_DIR):
     """Build (or fetch the memoized) registered query DataFrame."""
     from steam_prices_data_engineering_spark.plans import registry
 
-    key = (name, sf_dir)
+    key = (spark.sparkContext.applicationId, name, sf_dir)
     df = _BUILT.get(key)
     if df is None:
         df = registry.queries()[name](spark, sf_dir)

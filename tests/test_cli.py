@@ -1,35 +1,44 @@
 """End-to-end test of the config-driven job runner (cli.py — the run.py
 equivalent): both jobs land run-partitioned parquet, a second run appends a
 new partition, and the latest-run selection reads back exactly one run.
+Job 3's stream starts before job 1 and is stopped if job 1 fails.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
-import shutil
 
-import yaml
+import pytest
 
 from pyspark.sql import functions as F
 
+from steam_prices_data_engineering_spark import cli
 from steam_prices_data_engineering_spark.cli import run_jobs
-
-CONFIG = {
-    "app_name": "cli-test",
-    "source": {"sf_dir": "/root/testdata/sf0.001"},
-    "target": {
-        "output_dir": "/root/repo/.scratch/cli_test_out",
-        "prices_key": "steam_etl",
-        "worldmap_key": "world_map",
-    },
-}
+from steam_prices_data_engineering_spark.streaming import sizing
+from tests.conftest import SF_DIR
 
 
-def test_cli_runs_both_jobs_with_run_partitions(spark):
-    shutil.rmtree(CONFIG["target"]["output_dir"], ignore_errors=True)
-    out1 = run_jobs(CONFIG, spark=spark, run_ts="20240101000000")
-    out2 = run_jobs(CONFIG, spark=spark, run_ts="20240102000000")
+def _config(output_dir, streaming=False):
+    cfg = {
+        "app_name": "cli-test",
+        "source": {"sf_dir": SF_DIR},
+        "target": {
+            "output_dir": str(output_dir),
+            "prices_key": "steam_etl",
+            "worldmap_key": "world_map",
+        },
+    }
+    if streaming:
+        cfg["streaming"] = {"enabled": True}
+    return cfg
+
+
+def test_cli_runs_both_jobs_with_run_partitions(spark, tmp_path):
+    cfg = _config(tmp_path)
+    out1 = run_jobs(cfg, spark=spark, run_ts="20240101000000")
+    out2 = run_jobs(cfg, spark=spark, run_ts="20240102000000")
     # Table roots are run-independent (runs append partitions under them);
     # the PNG artifact (S8) is one file PER run.
     assert out1["prices"] == out2["prices"]
@@ -70,14 +79,12 @@ def _pinned_state_partitions(output_dir):
     return sorted(pinned)
 
 
-def test_cli_streaming_rollup_incremental_and_idempotent(spark):
+def test_cli_streaming_rollup_incremental_and_idempotent(spark, tmp_path):
     """Job 3: the streaming rollup lands append-mode windowed counts in
     parquet behind a checkpoint. Emitted rows must equal the batch
     tumbling aggregation restricted to window_end <= watermark (the
     append-mode emission rule), and a SECOND invocation over the same
     source must process zero new files (checkpoint: no duplicate rows)."""
-    import shutil
-
     from steam_prices_data_engineering_spark.sources.tables import (
         read_table,
         table_path,
@@ -89,17 +96,7 @@ def test_cli_streaming_rollup_incremental_and_idempotent(spark):
         tumbling_counts,
     )
 
-    cfg = {
-        "app_name": "cli-stream-test",
-        "source": {"sf_dir": "/root/testdata/sf0.001"},
-        "target": {
-            "output_dir": "/root/repo/.scratch/cli_stream_out",
-            "prices_key": "steam_etl",
-            "worldmap_key": "world_map",
-        },
-        "streaming": {"enabled": True},
-    }
-    shutil.rmtree(cfg["target"]["output_dir"], ignore_errors=True)
+    cfg = _config(tmp_path, streaming=True)
     session_parts = spark.conf.get("spark.sql.shuffle.partitions")
     out = run_jobs(cfg, spark=spark, run_ts="20240101000000")
     # The stream's state is sized from the events footer and pinned in the
@@ -135,11 +132,7 @@ def test_cli_streaming_resumes_a_checkpoint_with_another_count(
     """A checkpoint written at 32 state partitions (the session default
     before job 3 was sized) resumes unchanged: Spark restores the pinned
     count, so the second run raises nothing and lands no new rows."""
-    cfg = {
-        "source": {"sf_dir": CONFIG["source"]["sf_dir"]},
-        "target": dict(CONFIG["target"], output_dir=str(tmp_path)),
-        "streaming": {"enabled": True},
-    }
+    cfg = _config(tmp_path, streaming=True)
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "32")
     out = run_jobs(cfg, spark=spark, run_ts="20240101000000")
     n1 = spark.read.parquet(out["events_rollup"]).count()
@@ -149,3 +142,55 @@ def test_cli_streaming_resumes_a_checkpoint_with_another_count(
     run_jobs(cfg, spark=spark, run_ts="20240102000000")
     assert spark.read.parquet(out["events_rollup"]).count() == n1
     assert _pinned_state_partitions(str(tmp_path)) == ["32"]
+
+
+def _record_calls(monkeypatch, calls):
+    """Wrap job 3's start and job 1's builder so `calls` records, in
+    order, when the stream's start returned and when job 1 was built."""
+    start_sized, job1 = sizing.start_sized, cli.steam_job1_prices_etl
+
+    def recording_start(*args, **kwargs):
+        query = start_sized(*args, **kwargs)
+        calls.append(("job 3 started", query))
+        return query
+
+    def recording_job1(*args, **kwargs):
+        calls.append(("job 1 built", None))
+        return job1(*args, **kwargs)
+
+    monkeypatch.setattr(sizing, "start_sized", recording_start)
+    monkeypatch.setattr(cli, "steam_job1_prices_etl", recording_job1)
+
+
+def test_cli_starts_job3_before_job1_and_awaits_it(spark, tmp_path, monkeypatch, caplog):
+    """The stream is started first, so it runs while jobs 1–2 land, and
+    awaited last: the rollup has landed when run_jobs returns, and each
+    job logged its wall time (job 3 with its progress totals)."""
+    calls = []
+    _record_calls(monkeypatch, calls)
+    with caplog.at_level(logging.INFO, logger="steam_prices_spark"):
+        out = run_jobs(_config(tmp_path, streaming=True), spark=spark, run_ts="20240101000000")
+    assert [name for name, _ in calls] == ["job 3 started", "job 1 built"]
+    assert not calls[0][1].isActive
+    assert spark.read.parquet(out["events_rollup"]).count() > 0
+    messages = [r.getMessage() for r in caplog.records]
+    assert any(m.startswith("job 1: landed in ") for m in messages)
+    assert any(m.startswith("job 2: landed with its PNG in ") for m in messages)
+    assert any(m.startswith("job 3: ") and " input rows, " in m for m in messages)
+
+
+def test_cli_job1_failure_stops_the_stream(spark, tmp_path, monkeypatch):
+    """An error in job 1 propagates out of run_jobs and leaves no running
+    stream behind: the already-started job 3 query is stopped."""
+    calls = []
+    _record_calls(monkeypatch, calls)
+
+    def failing_job1(*args, **kwargs):
+        raise RuntimeError("job 1 failed")
+
+    monkeypatch.setattr(cli, "steam_job1_prices_etl", failing_job1)
+    with pytest.raises(RuntimeError, match="job 1 failed"):
+        run_jobs(_config(tmp_path, streaming=True), spark=spark, run_ts="20240101000000")
+    assert [name for name, _ in calls] == ["job 3 started"]
+    assert not calls[0][1].isActive
+    assert spark.streams.active == []
