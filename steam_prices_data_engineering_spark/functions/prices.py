@@ -1,4 +1,4 @@
-"""Locale-aware price parsing and currency normalization as Column expressions.
+"""Locale-aware price parsing and currency normalization as Spark expressions.
 
 Re-expresses the reference's scalar price pipeline (SURVEY.md §2a O20-O24)
 without any Python UDF — everything stays inside whole-stage codegen, so the
@@ -33,41 +33,19 @@ _USD_MIN = 0.1
 _USD_MAX = 100.0
 
 
-def parse_price_usd(price_str: Column, ex_rate: Column) -> Column:
-    """Parse a localized price string and convert to USD. NULL on failure.
-
-    Pure expression tree (regexp_extract + translate + try_cast + CASE);
-    no UDF. ``ex_rate`` of NULL or 0 yields NULL (the reference raises and
-    falls back to NaN for both).
-    """
-    m = F.regexp_extract(price_str, PRICE_REGEX, 0)
-    safe_rate = F.nullif(ex_rate.cast("double"), F.lit(0.0))
-    # Hypothesis A: '.' = thousands separator, ',' = decimal point.
-    a_str = F.replace(
-        F.replace(F.replace(m, F.lit(" "), F.lit("")), F.lit("."), F.lit("")),
-        F.lit(","),
-        F.lit("."),
-    )
-    usd_a = a_str.try_cast("double") / safe_rate
-    # Hypothesis B: ',' = thousands separator, '.' = decimal point.
-    b_str = F.replace(F.replace(m, F.lit(" "), F.lit("")), F.lit(","), F.lit(""))
-    usd_b = b_str.try_cast("double") / safe_rate
-    return (
-        F.when(m.isNull() | (m == ""), F.lit(None).cast("double"))
-        .when(usd_a.isNull(), F.lit(None).cast("double"))
-        .when((usd_a > _USD_MAX) | (usd_a < _USD_MIN), usd_b)
-        .otherwise(usd_a)
-    )
-
-
 def parse_price_usd_sql(price_expr: str, rate_expr: str) -> str:
-    """The same parse as ANSI SQL (DuckDB dialect) for oracle parity checks.
-
-    Kept adjacent to the Spark expression so the two cannot drift silently.
+    """Parse a localized price string and convert to USD; NULL on failure.
+    ONE SQL string, valid in Spark SQL and DuckDB alike: the oracles use
+    it verbatim and `parse_price_usd` evaluates it in Spark, so the two
+    engines cannot drift. Inside the regex's character class, Spark reads
+    the escaped ``\\.`` as ``.``: the same set. ``rate_expr`` of NULL or 0
+    yields NULL (the reference raises and falls back to NaN for both).
     """
     m = f"regexp_extract({price_expr}, '{PRICE_REGEX}', 0)"
     rate = f"nullif(CAST({rate_expr} AS DOUBLE), 0.0)"
+    # Hypothesis A: '.' = thousands separator, ',' = decimal point.
     a = f"try_cast(replace(replace(replace({m}, ' ', ''), '.', ''), ',', '.') AS DOUBLE) / {rate}"
+    # Hypothesis B: ',' = thousands separator, '.' = decimal point.
     b = f"try_cast(replace(replace({m}, ' ', ''), ',', '') AS DOUBLE) / {rate}"
     return (
         f"CASE WHEN {m} IS NULL OR {m} = '' THEN NULL "
@@ -75,6 +53,13 @@ def parse_price_usd_sql(price_expr: str, rate_expr: str) -> str:
         f"WHEN ({a}) > {_USD_MAX} OR ({a}) < {_USD_MIN} THEN ({b}) "
         f"ELSE ({a}) END"
     )
+
+
+def parse_price_usd(price_expr: str, rate_expr: str) -> Column:
+    """`parse_price_usd_sql` as a Spark Column, over SQL expressions (column
+    names, typically) for the price string and the FX rate. No UDF: the
+    parse stays inside whole-stage codegen."""
+    return F.expr(parse_price_usd_sql(price_expr, rate_expr))
 
 
 def normalize_country_iso(cc: Column) -> Column:

@@ -4,21 +4,25 @@ plans, plus the partitioned parquet sink + latest-run discovery surface
 (S6/S7/S9/O32).
 
 Job 1 (`steam_prices_transformer.py:193-210`): apps x countries cross
-product -> per-pair localized price string (the "fetch") -> broadcast FX-rate
-lookup with missing-rate NULL path -> two-hypothesis locale parse -> the
-4-column prices table. The HTTP fetch is replaced by a deterministic price
+product -> per-pair localized price string (the "fetch") -> FX-rate lookup
+with missing-rate NULL path -> two-hypothesis locale parse -> the 4-column
+prices table. The HTTP fetch is replaced by a deterministic price
 synthesizer so both engines construct byte-identical inputs; the connector
 shape (JSON-path extraction) is covered separately by
-`steam_api_json_extract`.
+`steam_api_json_extract`. Spark runs it as one narrow stage: the countries
+come pre-joined with their rates and are generated per app by inline(),
+and the price string and the parse are the oracle's own SQL strings.
 
 Job 2 (`world_map_transformer.py:275-300`): uk->gb remap + upper-case ->
 per-country mean vs world mean with deviation columns -> alpha-2 -> alpha-3
-enrichment -> euro-zone collapse on the geo dim -> left outer geo join ->
-EU windowed max-fill -> constant fill for uncovered countries (O31).
+enrichment + euro-zone collapse on one geo dim -> left outer geo join ->
+EU windowed max-fill -> constant fill for uncovered countries (O31). It
+builds on job 1's frame when given one (the CLI), as the reference's job 2
+reads job 1's output.
 
-All dimension tables (countries, FX rates, ISO map, world geo) are literal
-static dims — the Spark DataFrames and the DuckDB VALUES clauses are
-generated from the same Python lists so they cannot drift.
+All dimension tables (countries, FX rates, world geo) are literal static
+dims — the Spark plans and the DuckDB VALUES clauses are generated from the
+same Python lists so they cannot drift.
 """
 
 from __future__ import annotations
@@ -58,12 +62,8 @@ FX_RATES: list[tuple[str, float]] = [
     ("SEK", 10.5), ("NOK", 10.8), ("PLN", 4.0),
 ]
 
-ISO_MAP: list[tuple[str, str]] = [
-    ("US", "USA"), ("GB", "GBR"), ("DE", "DEU"), ("FR", "FRA"), ("ES", "ESP"),
-    ("IT", "ITA"), ("JP", "JPN"), ("BR", "BRA"), ("AR", "ARG"), ("SE", "SWE"),
-    ("NO", "NOR"), ("PL", "POL"), ("CN", "CHN"), ("IN", "IND"),
-]
-
+# (alpha-2, alpha-3, continent): one dim serves both job 2's alpha-2 ->
+# alpha-3 lookup and its geo join.
 WORLD_GEO: list[tuple[str, str, str]] = [
     ("US", "USA", "North America"), ("GB", "GBR", "Europe"),
     ("DE", "DEU", "Europe"), ("FR", "FRA", "Europe"), ("ES", "ESP", "Europe"),
@@ -91,7 +91,8 @@ def _values_frame(spark: SparkSession, rows: list[tuple], cols: list[str]) -> Da
 
 # ---------------------------------------------------------------------------
 # Deterministic localized price synthesis (replaces the live Steam fetch, S1).
-# Arithmetic on (app, cc) only, reproducible in both engines:
+# Arithmetic on (app, cc) only, as ONE SQL string that Spark evaluates via
+# selectExpr and DuckDB verbatim (CAST(... AS STRING) is valid in both):
 #   whole = (app*37 + ascii(cc[0])*5 + ascii(cc[1])) % 95 + 5
 #   cents = (app*13 + ascii(cc[0])) % 100
 #   mil   = (app*3  + ascii(cc[1])) % 1000
@@ -102,41 +103,19 @@ def _values_frame(spark: SparkSession, rows: list[tuple], cols: list[str]) -> Da
 # ---------------------------------------------------------------------------
 
 
-def _price_str_spark(app: F.Column, cc: F.Column, currency: F.Column) -> F.Column:
-    a1 = F.ascii(F.substring(cc, 1, 1))
-    a2 = F.ascii(F.substring(cc, 2, 1))
-    whole = (app * 37 + a1 * 5 + a2) % 95 + 5
-    cents = (app * 13 + a1) % 100
-    mil = (app * 3 + a2) % 1000
-    c2 = F.lpad(cents.cast("string"), 2, "0")
-    usd_s = F.concat(F.lit("$"), whole.cast("string"), F.lit("."), c2)
-    eur_s = F.concat(whole.cast("string"), F.lit(","), c2, F.lit(" €"))
-    jpy_s = F.concat(F.lit("¥"), (whole * 100 + cents).cast("string"))
-    kr_s = F.concat(
-        whole.cast("string"), F.lit("."), F.lpad(mil.cast("string"), 3, "0"),
-        F.lit(","), c2, F.lit(" kr"),
-    )
-    return (
-        F.when(currency == "usd", usd_s)
-        .when(currency == "eur", eur_s)
-        .when(currency == "jpy", jpy_s)
-        .otherwise(kr_s)
-    )
-
-
 def _price_str_sql(app: str, cc: str, currency: str) -> str:
     a1 = f"ascii(substr({cc}, 1, 1))"
     a2 = f"ascii(substr({cc}, 2, 1))"
     whole = f"(({app} * 37 + {a1} * 5 + {a2}) % 95 + 5)"
     cents = f"(({app} * 13 + {a1}) % 100)"
     mil = f"(({app} * 3 + {a2}) % 1000)"
-    c2 = f"lpad(CAST({cents} AS VARCHAR), 2, '0')"
+    c2 = f"lpad(CAST({cents} AS STRING), 2, '0')"
     return (
         f"CASE {currency} "
-        f"WHEN 'usd' THEN '$' || CAST({whole} AS VARCHAR) || '.' || {c2} "
-        f"WHEN 'eur' THEN CAST({whole} AS VARCHAR) || ',' || {c2} || ' €' "
-        f"WHEN 'jpy' THEN '¥' || CAST({whole} * 100 + {cents} AS VARCHAR) "
-        f"ELSE CAST({whole} AS VARCHAR) || '.' || lpad(CAST({mil} AS VARCHAR), 3, '0') || ',' || {c2} || ' kr' "
+        f"WHEN 'usd' THEN '$' || CAST({whole} AS STRING) || '.' || {c2} "
+        f"WHEN 'eur' THEN CAST({whole} AS STRING) || ',' || {c2} || ' €' "
+        f"WHEN 'jpy' THEN '¥' || CAST({whole} * 100 + {cents} AS STRING) "
+        f"ELSE CAST({whole} AS STRING) || '.' || lpad(CAST({mil} AS STRING), 3, '0') || ',' || {c2} || ' kr' "
         f"END"
     )
 
@@ -167,43 +146,52 @@ SELECT app, country_iso, currency_steam, usd_price FROM job1
 """
 
 
+# Each country with its FX rate, pre-joined here (the rates dim is keyed on
+# upper(currency)); 'ars' keeps a NULL rate, the missing-rate path.
+_COUNTRY_RATES = [
+    (cc, currency, dict(FX_RATES).get(currency.upper())) for cc, currency in COUNTRIES
+]
+# The 12 (cc, currency, rate) rows generated per app by inline(): one
+# Generate over the apps scan, with no join and no broadcast.
+_COUNTRY_RATES_INLINE = "inline(array({}))".format(
+    ", ".join(
+        f"named_struct('cc', '{cc}', 'currency', '{currency}', 'rate', "
+        + ("CAST(NULL AS DOUBLE)" if rate is None else f"{rate!r}D")
+        + ")"
+        for cc, currency, rate in _COUNTRY_RATES
+    )
+)
+
+
 def _job1_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apps = (
+    fetched = (
         read_table(spark, sf_dir, "part")
         .filter(F.col("p_partkey") <= 14)
-        .select(F.col("p_partkey").cast("long").alias("app"))
-    )
-    countries = _values_frame(spark, COUNTRIES, ["cc", "currency"])
-    fx = _values_frame(spark, FX_RATES, ["rate_cur", "rate"])
-    pairs = apps.crossJoin(F.broadcast(countries))
-    fetched = pairs.join(
-        F.broadcast(fx), F.upper(F.col("currency")) == F.col("rate_cur"), "left"
-    ).select(
-        "app",
-        "cc",
-        "currency",
-        _price_str_spark(F.col("app"), F.col("cc"), F.col("currency")).alias(
-            "price_str"
-        ),
-        "rate",
+        .selectExpr("CAST(p_partkey AS BIGINT) AS app", _COUNTRY_RATES_INLINE)
+        .selectExpr(
+            "app",
+            "cc AS country_iso",
+            "currency AS currency_steam",
+            f"{_price_str_sql('app', 'cc', 'currency')} AS price_str",
+            "rate",
+        )
     )
     return fetched.select(
         "app",
-        F.col("cc").alias("country_iso"),
-        F.col("currency").alias("currency_steam"),
-        dround(parse_price_usd(F.col("price_str"), F.col("rate")), 6).alias(
-            "usd_price"
-        ),
+        "country_iso",
+        "currency_steam",
+        dround(parse_price_usd("price_str", "rate"), 6).alias("usd_price"),
     )
 
 
 @register("steam_job1_prices_etl", _JOB1_SQL)
 def steam_job1_prices_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Job-1 end-to-end: cross product (O10) -> broadcast FX lookup with
+    """Job-1 end-to-end: cross product (O10) with the FX lookup's
     missing-rate NULL (O11/O33) -> locale parse + conversion (O20-O22) ->
-    the reference's 4-column prices schema (`etl_config.yml:40`). The cross
-    join and both dim joins are broadcast; no shuffle anywhere — at scale
-    this is a single narrow map stage over the apps source."""
+    the reference's 4-column prices schema (`etl_config.yml:40`). The
+    countries x rates dim is pre-joined in Python and generated per app by
+    inline(), so the whole job is one narrow map stage over the apps scan:
+    no join, no broadcast, no shuffle."""
     return _job1_frame(spark, sf_dir)
 
 
@@ -230,20 +218,16 @@ dev AS (
            (grp / wavg - 1) * wavg AS usd_dif
     FROM stats, world
 ),
-{_sql_values(ISO_MAP, ["alpha2", "alpha3"], "iso")},
-devi AS (
-    SELECT dev.c2, dev.grp, dev.perc_dif, dev.usd_dif, iso.alpha3
-    FROM dev LEFT JOIN iso ON dev.c2 = iso.alpha2
-),
-{_sql_values(WORLD_GEO, ["iso_a2", "iso_a3", "continent"], "geo")},
+{_sql_values(WORLD_GEO, ["alpha2", "iso_a3", "continent"], "geo")},
 geoc AS (
-    SELECT CASE WHEN lower(iso_a2) IN ({_EURO_IN}) THEN 'EU' ELSE iso_a2 END AS iso_a2,
+    SELECT alpha2,
+           CASE WHEN lower(alpha2) IN ({_EURO_IN}) THEN 'EU' ELSE alpha2 END AS iso_a2,
            iso_a3, continent
     FROM geo
 ),
 merged AS (
     SELECT g.iso_a2, g.iso_a3, g.continent, d.grp, d.perc_dif, d.usd_dif
-    FROM geoc g LEFT JOIN devi d ON g.iso_a3 = d.alpha3
+    FROM geoc g LEFT JOIN dev d ON g.alpha2 = d.c2
 ),
 filled AS (
     SELECT iso_a2, iso_a3, continent, grp, perc_dif,
@@ -262,14 +246,22 @@ FROM filled
 
 
 @register("world_map_job2_deviation", _JOB2_SQL)
-def world_map_job2_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
+def world_map_job2_deviation(
+    spark: SparkSession, sf_dir: str, prices: DataFrame | None = None
+) -> DataFrame:
     """Job-2 end-to-end (`world_map_transformer.py:275-300`): uk->gb remap
     (O23), per-country mean vs world mean + deviations (O26-O28), alpha-2 ->
-    alpha-3 broadcast join (O12), euro-zone collapse on a static dim (O24),
+    alpha-3 enrichment and euro-zone collapse (O12/O24) from one geo dim,
     left outer geo join keeping uncovered countries (O14), EU windowed
-    max-fill (O29), constant fill for missing (O31). Every dim is broadcast;
-    the only shuffles are the two tiny aggregations and the EU window."""
-    prices = _job1_frame(spark, sf_dir)
+    max-fill (O29), constant fill for missing (O31).
+
+    `prices` is job 1's frame when the caller has already built it (the
+    CLI, as the reference's job 2 reads job 1's output); the registry
+    query builds it from source. The deviations are broadcast into the
+    geo dim; the only shuffles are the two tiny aggregations and the EU
+    window."""
+    if prices is None:
+        prices = _job1_frame(spark, sf_dir)
     cleaned = prices.select(
         normalize_country_iso(F.col("country_iso")).alias("ciso"), "usd_price"
     )
@@ -279,12 +271,13 @@ def world_map_job2_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "usd_price",
         avg_alias="grp",
     )
-    iso = _values_frame(spark, ISO_MAP, ["alpha2", "alpha3"])
-    devi = dev.join(F.broadcast(iso), dev.c2 == iso.alpha2, "left")
-    geo = _values_frame(spark, WORLD_GEO, ["iso_a2", "iso_a3", "continent"]).select(
-        collapse_eurozone(F.col("iso_a2")).alias("iso_a2"), "iso_a3", "continent"
+    geo = _values_frame(spark, WORLD_GEO, ["alpha2", "iso_a3", "continent"]).select(
+        "alpha2",
+        collapse_eurozone(F.col("alpha2")).alias("iso_a2"),
+        "iso_a3",
+        "continent",
     )
-    merged = geo.join(F.broadcast(devi), geo.iso_a3 == devi.alpha3, "left")
+    merged = geo.join(F.broadcast(dev), geo.alpha2 == dev.c2, "left")
     w = Window.partitionBy("iso_a2")
     filled = F.when(
         F.col("iso_a2") == "EU", F.max("usd_dif").over(w)
@@ -359,9 +352,7 @@ def steam_api_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "app",
         "price_str",
         "currency",
-        dround(parse_price_usd(F.col("price_str"), F.col("rate")), 6).alias(
-            "usd_price"
-        ),
+        dround(parse_price_usd("price_str", "rate"), 6).alias("usd_price"),
     )
 
 
@@ -391,9 +382,7 @@ def steam_pysource_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "app",
         "price_str",
         "currency",
-        dround(parse_price_usd(F.col("price_str"), F.col("rate")), 6).alias(
-            "usd_price"
-        ),
+        dround(parse_price_usd("price_str", "rate"), 6).alias("usd_price"),
     )
 
 
@@ -425,9 +414,7 @@ def streaming_steam_source_extract(spark: SparkSession, sf_dir: str) -> DataFram
         "app",
         "price_str",
         "currency",
-        dround(parse_price_usd(F.col("price_str"), F.col("rate")), 6).alias(
-            "usd_price"
-        ),
+        dround(parse_price_usd("price_str", "rate"), 6).alias("usd_price"),
     )
     # stateless and fed by the REST source: no parquet landing to size from
     return run_stream(result, "append", None)

@@ -266,14 +266,15 @@ def case_remap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # steam_prices_transformer.py:101-132)
 # ===========================================================================
 
-# Deterministic localized price strings constructed from integer columns so
-# both engines build byte-identical inputs: style cycles US / EU-with-
-# thousands / space-grouped by p_partkey % 3.
+# Deterministic localized price strings constructed from integer columns,
+# as one SQL string both engines evaluate, so they build byte-identical
+# inputs: style cycles US / EU-with-thousands / space-grouped by
+# p_partkey % 3.
 _PRICE_STR_SQL = """
 CASE CAST(p_partkey % 3 AS INTEGER)
-  WHEN 0 THEN '$' || CAST(p_partkey % 5000 AS VARCHAR) || '.' || lpad(CAST(p_partkey % 100 AS VARCHAR), 2, '0')
-  WHEN 1 THEN CAST(p_partkey % 9 + 1 AS VARCHAR) || '.' || lpad(CAST(p_partkey % 1000 AS VARCHAR), 3, '0') || ',' || lpad(CAST(p_partkey % 100 AS VARCHAR), 2, '0') || ' €'
-  ELSE CAST(p_partkey % 90 + 10 AS VARCHAR) || ',' || lpad(CAST(p_partkey % 100 AS VARCHAR), 2, '0') || ' kr'
+  WHEN 0 THEN '$' || CAST(p_partkey % 5000 AS STRING) || '.' || lpad(CAST(p_partkey % 100 AS STRING), 2, '0')
+  WHEN 1 THEN CAST(p_partkey % 9 + 1 AS STRING) || '.' || lpad(CAST(p_partkey % 1000 AS STRING), 3, '0') || ',' || lpad(CAST(p_partkey % 100 AS STRING), 2, '0') || ' €'
+  ELSE CAST(p_partkey % 90 + 10 AS STRING) || ',' || lpad(CAST(p_partkey % 100 AS STRING), 2, '0') || ' kr'
 END
 """
 
@@ -290,46 +291,19 @@ FROM priced
 """
 
 
-def _price_str_spark() -> F.Column:
-    k = F.col("p_partkey")
-    us = F.concat(
-        F.lit("$"),
-        (k % 5000).cast("string"),
-        F.lit("."),
-        F.lpad((k % 100).cast("string"), 2, "0"),
-    )
-    eu = F.concat(
-        (k % 9 + 1).cast("string"),
-        F.lit("."),
-        F.lpad((k % 1000).cast("string"), 3, "0"),
-        F.lit(","),
-        F.lpad((k % 100).cast("string"), 2, "0"),
-        F.lit(" €"),
-    )
-    kr = F.concat(
-        (k % 90 + 10).cast("string"),
-        F.lit(","),
-        F.lpad((k % 100).cast("string"), 2, "0"),
-        F.lit(" kr"),
-    )
-    return F.when((k % 3) == 0, us).when((k % 3) == 1, eu).otherwise(kr)
-
-
 @register("price_parse_locale", _PRICE_PARSE_SQL)
 def price_parse_locale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-hypothesis locale price parse as pure expressions (O20-O21)."""
-    p = read_table(spark, sf_dir, "part")
-    priced = p.select(
+    """Two-hypothesis locale price parse as pure expressions (O20-O21),
+    evaluated from the oracle's own SQL strings."""
+    priced = read_table(spark, sf_dir, "part").selectExpr(
         "p_partkey",
-        _price_str_spark().alias("price_str"),
-        (F.lit(1) + F.col("p_partkey") % 7).cast("double").alias("ex_rate"),
+        f"{_PRICE_STR_SQL} AS price_str",
+        "CAST(1 + p_partkey % 7 AS DOUBLE) AS ex_rate",
     )
     return priced.select(
         "p_partkey",
         "price_str",
-        dround(parse_price_usd(F.col("price_str"), F.col("ex_rate")), 6).alias(
-            "usd_price"
-        ),
+        dround(parse_price_usd("price_str", "ex_rate"), 6).alias("usd_price"),
     )
 
 

@@ -1,7 +1,8 @@
 """End-to-end test of the config-driven job runner (cli.py — the run.py
 equivalent): both jobs land run-partitioned parquet, a second run appends a
 new partition, and the latest-run selection reads back exactly one run.
-Job 3's stream starts before job 1 and is stopped if job 1 fails.
+The PNG is rendered from job 2's landing. Job 3's stream starts before
+job 1 and is stopped if job 1 fails.
 """
 
 from __future__ import annotations
@@ -65,6 +66,54 @@ def test_cli_runs_both_jobs_with_run_partitions(spark, tmp_path):
     worldmap = spark.read.parquet(out1["worldmap"])
     assert "usd_dif" in worldmap.columns and "steam_value" in worldmap.columns
     assert worldmap.filter(F.col("run_key") == latest).count() == 14
+
+
+def test_cli_png_renders_job2s_landing(spark, tmp_path, monkeypatch):
+    """The PNG is rendered from the partition job 2 landed for this run,
+    not from a second execution of job 2's plan. Its bytes equal a
+    standalone render of job 2, also after a rerun with the same run key
+    has appended a second file to that partition."""
+    from steam_prices_data_engineering_spark.plans.pipelines import (
+        world_map_job2_deviation,
+    )
+    from steam_prices_data_engineering_spark.sinks.png import world_map_png
+    from steam_prices_data_engineering_spark.sources.io import local_path
+
+    frames = []
+
+    def capturing_png(df, *args):
+        frames.append(df)
+        return world_map_png(df, *args)
+
+    monkeypatch.setattr(cli, "world_map_png", capturing_png)
+    cfg = _config(tmp_path)
+    run_ts = "20240101000000"
+    out = run_jobs(cfg, spark=spark, run_ts=run_ts)
+    partition = os.path.join(local_path(out["worldmap"]), f"run_key={run_ts}")
+
+    def files_read(df):
+        return sorted(local_path(f) for f in df.inputFiles())
+
+    first = files_read(frames[0])
+    assert first and all(os.path.dirname(f) == partition for f in first), first
+
+    standalone = world_map_png(
+        world_map_job2_deviation(spark, SF_DIR),
+        "usd_dif",
+        "iso_a3",
+        str(tmp_path / "standalone.png"),
+    )
+    with open(standalone, "rb") as f:
+        want = f.read()
+    with open(out["worldmap_png"], "rb") as f:
+        assert f.read() == want
+
+    out2 = run_jobs(cfg, spark=spark, run_ts=run_ts)
+    second = files_read(frames[1])
+    assert all(os.path.dirname(f) == partition for f in second), second
+    assert set(first) < set(second) and len(second) == 2 * len(first)
+    with open(out2["worldmap_png"], "rb") as f:
+        assert f.read() == want
 
 
 def _pinned_state_partitions(output_dir):

@@ -590,6 +590,23 @@ def test_narrow_map_operators_have_no_shuffle(spark, name):
     assert tree.count("Scan parquet") == 1, tree
 
 
+def test_etl_job1_is_one_narrow_stage(spark):
+    """Job 1 generates each app's country rows (rates pre-joined) with
+    inline() over the apps scan: no Exchange of any kind, no join."""
+    tree = _plan(spark, "steam_job1_prices_etl").split("\n\n")[0]
+    assert tree.count("Exchange") == 0, tree
+    assert "Join" not in tree, tree
+    assert "Generate" in tree, tree
+
+
+def test_etl_job2_joins_one_geo_dim(spark):
+    """Job 2: two tiny aggregates, the world mean's broadcast, ONE
+    broadcast of the deviations into the geo dim, and the EU window's
+    shuffle — at most 5 Exchange nodes."""
+    tree = _plan(spark, "world_map_job2_deviation").split("\n\n")[0]
+    assert tree.count("Exchange") <= 5, tree
+
+
 def test_winsorized_stats_single_shuffle(spark):
     """Percentile thresholds via window + groupBy on the same key must
     reuse one partitioning: one scan, one exchange total."""

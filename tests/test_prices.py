@@ -33,7 +33,7 @@ def _parse_many(spark, cases):
     )
     rows = (
         df.select(
-            "i", parse_price_usd(F.col("price_str"), F.col("ex_rate")).alias("usd")
+            "i", parse_price_usd("price_str", "ex_rate").alias("usd")
         )
         .collect()
     )

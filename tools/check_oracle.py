@@ -12,9 +12,12 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-REPO = "/root/repo"
+# The checkout this file lives in, so a copy of the repo checks its own
+# package.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
