@@ -17,8 +17,8 @@ and awaited after the PNG, so its micro-batches run on the stream's own
 thread while this one builds and lands the batch jobs. A stream *start*
 error therefore fails the run before job 1 lands, and an error in job 1
 or 2 stops the stream before it propagates. Each job logs its wall time
-at INFO; job 3 also logs its batch count, input rows and trigger time
-from the query's progress.
+at INFO; job 3 also logs its batch count, input rows, trigger time and
+state-commit time from the query's progress.
 
 Usage:
     python -m steam_prices_data_engineering_spark.cli configs/etl_config.yml
@@ -85,16 +85,19 @@ def run_jobs(config: dict, spark=None, run_ts: str | None = None) -> dict:
             tumbling_counts(stream, duration)
             .writeStream.format("parquet")
             .option("path", rollup_path)
-            .option("checkpointLocation", ckpt_path)
             .outputMode("append")
             .trigger(availableNow=True)
         )
         # State sized from the events footer, not the session's batch
         # shuffle-partition count (mostly-empty state partitions are pure
-        # commit I/O); the checkpoint pins the count for later runs.
-        # start_sized restores the session's count before it returns, so
-        # jobs 1–2 plan with it while the stream runs on its own clone.
-        query = start_sized(writer, table_path(sf_dir, "events"))
+        # commit I/O); the checkpoint pins the count for later runs. A
+        # local checkpoint commits with plain renames instead of a forked
+        # `readlink` per file (see streaming/sizing.py). start_sized
+        # restores both session settings before it returns, so jobs 1–2
+        # plan with them while the stream runs on its own clone.
+        query = start_sized(
+            writer, table_path(sf_dir, "events"), checkpoint=ckpt_path
+        )
     try:
         # join_uri: output_dir may be a plain dir or an object-store-shaped
         # URI (file:// in tests, s3a:// on a cluster) — see sources/io.py.
@@ -148,11 +151,12 @@ def run_jobs(config: dict, spark=None, run_ts: str | None = None) -> dict:
             outputs["events_rollup"] = rollup_path
             progress = query.recentProgress
             log.info(
-                "job 3: %d batches, %d input rows, %d ms in triggers; "
-                "done %.2f s after its start",
+                "job 3: %d batches, %d input rows, %d ms in triggers, "
+                "%d ms in state commits; done %.2f s after its start",
                 len(progress),
                 sum(p.numInputRows for p in progress),
                 sum(p.durationMs.get("triggerExecution", 0) for p in progress),
+                sum(op.commitTimeMs for p in progress for op in p.stateOperators),
                 time.perf_counter() - t3,
             )
     finally:

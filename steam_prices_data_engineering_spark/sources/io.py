@@ -22,10 +22,12 @@ Committer note for real object stores: directory rename is not atomic on
 S3-likes, so job commit must be manifest-based (the two-phase staged
 writer in `steam_api_source.py:SteamUploadWriter` is exactly that
 protocol) or use the S3A committers — never the default
-FileOutputCommitter v1 rename dance. Nothing in this module inspects the
-scheme; the tests exercise ``file://`` as the stand-in (the sandbox has
-no object store) and the same calls run against ``s3a://`` wherever the
-JVM has hadoop-aws + credentials on board.
+FileOutputCommitter v1 rename dance. Only ``local_path`` (driver-side
+artifacts) and ``fs_scheme`` (a stream start picks its checkpoint commit
+protocol from it) inspect the scheme; the tests exercise ``file://`` as
+the stand-in (the sandbox has no object store) and the same calls run
+against ``s3a://`` wherever the JVM has hadoop-aws + credentials on
+board.
 """
 
 from __future__ import annotations
@@ -73,6 +75,19 @@ def _fs_and_path(spark: SparkSession, uri: str):
     jpath = sc._jvm.org.apache.hadoop.fs.Path(uri)
     fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
     return fs, jpath
+
+
+def fs_scheme(spark: SparkSession, uri: str) -> str:
+    """Scheme of the Hadoop FileSystem `uri` resolves to: its own scheme,
+    or `fs.defaultFS`'s for a plain path, as `Path.getFileSystem` picks
+    it. The FileSystem itself is not created, so no remote store is
+    contacted."""
+    sc = spark.sparkContext
+    jvm = sc._jvm.org.apache.hadoop.fs
+    scheme = jvm.Path(uri).toUri().getScheme()
+    if scheme is None:
+        scheme = jvm.FileSystem.getDefaultUri(sc._jsc.hadoopConfiguration()).getScheme()
+    return scheme
 
 
 def list_children(spark: SparkSession, uri: str) -> list[str]:

@@ -1,7 +1,7 @@
 """The engine's one place that starts a stream: `run_stream` runs a
 streaming frame to a result, and `start_sized` (which it uses, and which
 the CLI's file-sink job calls directly) picks the stream's state-store
-partition count.
+partition count and how its checkpoint commits files.
 
 A stateful operator freezes its state-store partition count from
 `spark.sql.shuffle.partitions` when the query starts, and the checkpoint's
@@ -13,6 +13,21 @@ streaming_join_then_window 32 -> 18.2 s, 16 -> 5.8-7.6 s, 4 -> 2.9-3.9 s;
 the enriched tumbling agg 1.95 s -> ~1.3 s; the restart carryover's two
 runs 1.24 + 1.14 s at 32 vs 0.75 + 0.54 s at 8. Partition count never
 reaches compared columns, so results are unchanged.
+
+A start also picks how the checkpoint commits its files. Spark's default
+manager commits every offset, commit, sink-log and state file with
+`FileContext.rename`; pip-installed PySpark ships no native libhadoop, so
+on the local filesystem Hadoop forks a `readlink` shell for each of those
+renames (about 5 ms a fork, waited on by the stream thread or the state
+commit; 208 of the 306 process starts of one CLI run). When the
+checkpoint is local, `start_sized` picks
+`FileSystemBasedCheckpointFileManager`, which commits with
+`FileSystem.rename`: POSIX `rename(2)`, atomic, as Spark requires of that
+manager, and no fork. Other schemes keep Spark's default (on HDFS
+`FileSystem.rename` does not overwrite; object stores rename by copying),
+and the session setting is restored once the query has built its
+sources, like the partition count. Checkpoint checksums and Hadoop's
+`.crc` files are unchanged.
 """
 
 from __future__ import annotations
@@ -21,15 +36,24 @@ import glob
 import logging
 import math
 import os
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame
 
-from ..sources.io import local_path
+from ..sources.io import fs_scheme, local_path
 
 log = logging.getLogger("steam_prices_spark")
 
 _PARTITIONS = "spark.sql.shuffle.partitions"
+_FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_RENAME_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+# Bound on the wait for a started query to build its sources; the wait
+# ends early once they are built or the query has died.
+_INIT_WAIT_MS = 120_000
 
 
 def _footer_rows(source: str | None, floor: int) -> int:
@@ -94,22 +118,56 @@ def stream_state_partitions(
     return str(min(max(parts, floor), cap))
 
 
-def start_sized(writer, source: str | None, floor: int = 4):
+def local_checkpoint(spark, checkpoint: str | None) -> bool:
+    """Whether a stream started with `checkpoint` keeps it on the local
+    filesystem. With none given, Spark checkpoints under the session's
+    `spark.sql.streaming.checkpointLocation` if set, else in a temporary
+    local directory, whose plain path resolves against `fs.defaultFS`."""
+    where = (
+        checkpoint
+        or spark.conf.get("spark.sql.streaming.checkpointLocation", None)
+        or tempfile.gettempdir()
+    )
+    return fs_scheme(spark, where) == "file"
+
+
+def start_sized(
+    writer, source: str | None, floor: int = 4, checkpoint: str | None = None
+):
     """`writer.start()` with the state store sized by
     `stream_state_partitions(source, floor)`; returns the StreamingQuery.
+    A `checkpoint` given is set as the writer's checkpoint location.
 
-    The session value is restored as soon as `start()` returns (the query
-    runs on a clone of the session taken inside `start()`, and the
-    checkpoint pins the count), so batch plans built afterwards are
-    untouched. On restart
-    from an existing checkpoint Spark uses the count recorded there."""
+    When that checkpoint is local (`local_checkpoint`) and the session
+    names no checkpoint manager of its own, the query commits its
+    checkpoint through `FileSystemBasedCheckpointFileManager` (see the
+    module docstring). Both session values are restored once the query
+    has built its sources (it runs on a clone of the session taken inside
+    `start()`, and the checkpoint pins the partition count), so batch
+    plans built afterwards are untouched; a query that dies while building
+    them raises here. On restart from an existing checkpoint Spark uses
+    the count recorded there; the manager is not recorded, so either one
+    resumes the other's checkpoint."""
     spark = writer._spark
-    prev = spark.conf.get(_PARTITIONS)
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    prev = {key: spark.conf.get(key, None) for key in (_PARTITIONS, _FILE_MANAGER)}
     spark.conf.set(_PARTITIONS, stream_state_partitions(source, floor=floor))
+    if prev[_FILE_MANAGER] is None and local_checkpoint(spark, checkpoint):
+        spark.conf.set(_FILE_MANAGER, _RENAME_MANAGER)
     try:
-        return writer.start()
+        query = writer.start()
+        # The query's sources (and the file source's log, with its
+        # checkpoint manager) are built on the stream's thread from this
+        # session's settings: keep them until that is done.
+        query._jsq.streamingQuery().awaitInitialization(_INIT_WAIT_MS)
+        return query
     finally:
-        spark.conf.set(_PARTITIONS, prev)
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
 
 
 def run_stream(
@@ -121,9 +179,9 @@ def run_stream(
     checkpoint: str | None = None,
 ) -> DataFrame:
     """Run streaming `df` to completion (availableNow) into a memory sink
-    started through `start_sized(writer, source, floor)`; return the
-    sink's rows as a frame. `source` is the parquet landing the stream
-    reads (None for a stream with no file source).
+    started through `start_sized(writer, source, floor, checkpoint)`;
+    return the sink's rows as a frame. `source` is the parquet landing the
+    stream reads (None for a stream with no file source).
 
     The sink's temp view is dropped before returning: the frame's analyzed
     plan holds the sink itself, so it still reads the rows, and they are
@@ -138,10 +196,8 @@ def run_stream(
         .outputMode(mode)
         .trigger(availableNow=True)
     )
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
     try:
-        start_sized(writer, source, floor).awaitTermination()
+        start_sized(writer, source, floor, checkpoint).awaitTermination()
         return spark.table(sink)
     finally:
         spark.catalog.dropTempView(sink)

@@ -2,7 +2,8 @@
 equivalent): both jobs land run-partitioned parquet, a second run appends a
 new partition, and the latest-run selection reads back exactly one run.
 The PNG is rendered from job 2's landing. Job 3's stream starts before
-job 1 and is stopped if job 1 fails.
+job 1 and is stopped if job 1 fails; its local checkpoint commits through
+Spark's FileSystem-based manager and resumes one the default manager wrote.
 """
 
 from __future__ import annotations
@@ -193,6 +194,15 @@ def test_cli_streaming_resumes_a_checkpoint_with_another_count(
     assert _pinned_state_partitions(str(tmp_path)) == ["32"]
 
 
+FILE_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+MANAGERS = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def _file_manager(query):
+    """Class of the checkpoint manager the query's offset log commits with."""
+    return query._jsq.streamingQuery().offsetLog().fileManager().getClass().getName()
+
+
 def _record_calls(monkeypatch, calls):
     """Wrap job 3's start and job 1's builder so `calls` records, in
     order, when the stream's start returned and when job 1 was built."""
@@ -217,15 +227,23 @@ def test_cli_starts_job3_before_job1_and_awaits_it(spark, tmp_path, monkeypatch,
     job logged its wall time (job 3 with its progress totals)."""
     calls = []
     _record_calls(monkeypatch, calls)
+    before = spark.conf.get(FILE_MANAGER, None)
     with caplog.at_level(logging.INFO, logger="steam_prices_spark"):
         out = run_jobs(_config(tmp_path, streaming=True), spark=spark, run_ts="20240101000000")
     assert [name for name, _ in calls] == ["job 3 started", "job 1 built"]
     assert not calls[0][1].isActive
+    # The local checkpoint commits by FileSystem rename (no forked
+    # readlink per file); the session's own setting is left as it was.
+    assert _file_manager(calls[0][1]) == MANAGERS + "FileSystemBasedCheckpointFileManager"
+    assert spark.conf.get(FILE_MANAGER, None) == before
     assert spark.read.parquet(out["events_rollup"]).count() > 0
     messages = [r.getMessage() for r in caplog.records]
     assert any(m.startswith("job 1: landed in ") for m in messages)
     assert any(m.startswith("job 2: landed with its PNG in ") for m in messages)
-    assert any(m.startswith("job 3: ") and " input rows, " in m for m in messages)
+    assert any(
+        m.startswith("job 3: ") and " input rows, " in m and " ms in state commits" in m
+        for m in messages
+    )
 
 
 def test_cli_job1_failure_stops_the_stream(spark, tmp_path, monkeypatch):
@@ -243,3 +261,29 @@ def test_cli_job1_failure_stops_the_stream(spark, tmp_path, monkeypatch):
     assert [name for name, _ in calls] == ["job 3 started"]
     assert not calls[0][1].isActive
     assert spark.streams.active == []
+
+
+def test_cli_streaming_resumes_across_checkpoint_managers(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpoint written by Spark's default FileContext-based manager
+    (set explicitly on the session for the first run) resumes under the
+    FileSystem-based manager job 3 picks for a local checkpoint: the
+    second run raises nothing and lands no new rows."""
+    calls = []
+    _record_calls(monkeypatch, calls)
+    cfg = _config(tmp_path, streaming=True)
+    spark.conf.set(FILE_MANAGER, MANAGERS + "FileContextBasedCheckpointFileManager")
+    try:
+        out = run_jobs(cfg, spark=spark, run_ts="20240101000000")
+    finally:
+        spark.conf.unset(FILE_MANAGER)
+    n1 = spark.read.parquet(out["events_rollup"]).count()
+    assert n1 > 0
+
+    run_jobs(cfg, spark=spark, run_ts="20240102000000")
+    assert spark.read.parquet(out["events_rollup"]).count() == n1
+    assert [_file_manager(q) for _, q in calls if q is not None] == [
+        MANAGERS + "FileContextBasedCheckpointFileManager",
+        MANAGERS + "FileSystemBasedCheckpointFileManager",
+    ]

@@ -6,6 +6,11 @@ is the one place that sets it around a stream start (and restores it);
 `session.py` sets the batch default. Any other module that names the
 setting is hand-rolling the set/start/restore block again.
 
+The checkpoint-manager setting is `start_sized`'s alone too: it
+picks the FileSystem-based manager only for a local checkpoint, and a
+session-wide setting would apply it to HDFS and object-store checkpoints
+too.
+
 Likewise `streaming/sizing.py:run_stream` is the one memory-sink runner:
 a module that builds its own memory sink or calls a writer's `.start()`
 bypasses both the sizing and the sink drop.
@@ -19,6 +24,7 @@ import re
 import steam_prices_data_engineering_spark as pkg
 
 SETTING = "spark.sql.shuffle.partitions"
+MANAGER_SETTING = "spark.sql.streaming.checkpointFileManagerClass"
 SIZING = os.path.join("streaming", "sizing.py")
 ALLOWED = {"session.py", SIZING}
 # `.start()` with its parentheses: `F.col("w.start")` is a column, not a call
@@ -40,6 +46,15 @@ def test_only_session_and_sizing_name_the_partition_setting():
         rel
         for rel, text in _package_sources()
         if SETTING in text and rel not in ALLOWED
+    ]
+    assert not offenders, offenders
+
+
+def test_only_sizing_names_the_checkpoint_manager_setting():
+    offenders = [
+        rel
+        for rel, text in _package_sources()
+        if MANAGER_SETTING in text and rel != SIZING
     ]
     assert not offenders, offenders
 
