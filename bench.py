@@ -23,11 +23,10 @@ flags only when BOTH its raw and canary-normalized ratios exceed
 REGRESSION_RATIO; flagged entries land in the JSON under "regressions"
 so a round-over-round slowdown is self-documenting.
 Machine-load caveat: sibling processes skew wall time 2-3x on this VM —
-check uptime before believing a regression. Noise-tail caveat: queries
-whose plans embed createDataFrame grids (LogicalRDD panels) never get a
-warm second rep (cross-call cache match fails — CLAUDE.md), so
-scheduler variance lands raw on them; sub-second grid queries dominate
-the flag tail in loaded runs.
+check uptime before believing a regression. Every timed run, retries
+included, is cold: `registry.queries()` releases the previous build's
+pinned frames before each build, so no rep reads another rep's cached
+blocks.
 """
 
 from __future__ import annotations
@@ -338,11 +337,6 @@ def main() -> None:
     except Exception:  # noqa: BLE001
         flagged = {}
     if flagged:
-        # Drop every .cache() block the first timing left behind: a retry
-        # that hits a warm cache de-flags a regression INSIDE the cached
-        # stage (the min-of-2 flattering, extended — ADVICE r6). Cold
-        # retries can only lower a timing honestly.
-        spark.catalog.clearCache()
         _retry_flagged(flagged, timings, _time_one)
 
     total = round(sum(timings.values()), 3)

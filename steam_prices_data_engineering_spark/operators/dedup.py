@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import dround
 
 from ..functions.text import shingles, token_hash, tokens
+from ..session import pin
 
 # Universal-hash parameters for MinHash: (a, b) pairs, h_i(x) = (a*x + b) mod P.
 # Fixed constants so Spark and the SQL oracle agree bit-for-bit.
@@ -157,26 +158,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def _universal(a: int, b: int):
-    # closure factory: PySpark introspects lambda arity, so default-arg
-    # lambdas (x, a=a, b=b) would be mistaken for ternary lambdas
-    return lambda x: F.pmod(x * a + b, F.lit(MINHASH_PRIME))
-
-
-def minhash_signature(text_col: F.Column) -> list[F.Column]:
-    """MinHash signature columns over distinct word-3-gram shingle hashes.
-
-    NOTE: each returned column re-derives the shingle/hash chain; prefer
-    `minhash_lsh_pairs`, which stages the chain once per doc through
-    explicit projections (Catalyst's CollapseProject would otherwise inline
-    the expensive transform 8x)."""
-    sh = F.array_distinct(shingles(text_col, 3))
-    hashes = F.transform(sh, token_hash)
-    return [
-        F.array_min(F.transform(hashes, _universal(a, b))) for a, b in MINHASH_PARAMS
-    ]
-
-
 def hashed_shingle_table(docs: DataFrame, spread_input: bool = False) -> DataFrame:
     """(doc_id, hs) — CACHED distinct shingle-hash sets per document, the
     shared first stage of every shingle-family operator (MinHash-LSH, the
@@ -207,10 +188,10 @@ def hashed_shingle_table(docs: DataFrame, spread_input: bool = False) -> DataFra
     tokenized = base.select(
         "doc_id", token_hash_array(F.col("text")).alias("th")
     )
-    return tokenized.select(
+    return pin(tokenized.select(
         "doc_id",
         F.array_distinct(shingle_hash_array(F.col("th"), 3)).alias("hs"),
-    ).cache()  # session-per-query
+    ))
 
 
 def minhash_sig_table(hashed: DataFrame) -> DataFrame:

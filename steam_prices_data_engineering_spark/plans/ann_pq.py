@@ -245,16 +245,14 @@ def simsearch_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.desc("seed_cos"), F.asc("seed_id")
     )
     # Both consumers (cells at rn==1, probe at vec 0 rn<=nprobe) read
-    # rn <= nprobe rows only; cache that prefix so the N x K cosine
-    # cross join + argsort window runs ONCE, not once per consumer
-    # (the semdedup_prune lesson).
+    # rn <= nprobe rows only.
     assign = (
         e.crossJoin(F.broadcast(seeds))
         .withColumn("seed_cos", cosine(F.col("v"), F.col("sv")))
         .withColumn("rn", F.row_number().over(w_cell))
         .filter(F.col("rn") <= _IVFPQ_NPROBE)
         .select("vec_id", "seed_id", "rn")
-    ).cache()  # session-per-query
+    )
     cells = assign.filter(F.col("rn") == 1).select(
         "vec_id", F.col("seed_id").alias("cell")
     )

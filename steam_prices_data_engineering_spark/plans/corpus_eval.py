@@ -34,6 +34,7 @@ from ..functions.rounding import dround, dround_sql as R
 from ..functions.text import STOPWORDS, tokens
 from ..functions.vectors import cosine
 from ..operators.ranking import prefix_sums_binned
+from ..session import pin
 from ..sources.tables import read_table, values_frame
 from .registry import register
 
@@ -328,7 +329,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs (operators/dedup.py) — never re-implemented, so this evaluator
     # measures the production sketch, not a twin that can drift.
     hashed = hashed_shingle_table(d)
-    sig = minhash_sig_table(hashed).join(hashed, "doc_id").cache()  # session-per-query
+    sig = pin(minhash_sig_table(hashed).join(hashed, "doc_id"))
     cand = minhash_candidates(minhash_banded(sig))
 
     n_sig = len(MINHASH_PARAMS)
@@ -434,7 +435,7 @@ def simsearch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.col("embedding").alias("v"),
         _bucket_spark(F.col("embedding")).alias("bucket"),
-    ).cache()  # session-per-query
+    )
     q = bkt.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("qid"),
         F.col("v").alias("qv"),
@@ -465,7 +466,7 @@ def simsearch_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             dround(cosine(F.col("v"), F.col("qv")), 6).alias("score"),
         )
     )
-    # Both arms share the cached `bkt` lineage, so rename the LSH arm's
+    # Both arms share the `bkt` lineage, so rename the LSH arm's
     # columns before joining to avoid a self-join ambiguity.
     lsh = (
         scored_lsh.withColumn("r", F.row_number().over(w))
@@ -561,7 +562,7 @@ def doc_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back onto the bigram stream; one final per-doc agg. Every
     corpus-scale shuffle key is a short string; doc text never shuffles."""
     d = read_table(spark, sf_dir, "documents")
-    arr = (
+    arr = pin(
         d.select("doc_id", tokens(F.col("text")).alias("t"))
         .select(
             "doc_id",
@@ -581,7 +582,6 @@ def doc_bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .alias("bga"),
         )
-        .cache()  # session-per-query
     )
     tok = arr.select("doc_id", F.explode("t").alias("tok"))
     c1 = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
@@ -743,7 +743,7 @@ def collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pmi DESC, bigram ASC) order). Ranking happens post-limit on K rows;
     the limit lowers to TakeOrderedAndProject."""
     d = read_table(spark, sf_dir, "documents")
-    arr = (
+    arr = pin(
         d.select(tokens(F.col("text")).alias("t"))
         .select(
             "t",
@@ -760,7 +760,6 @@ def collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .alias("bga"),
         )
-        .cache()  # session-per-query
     )
     c1 = (
         arr.select(F.explode("t").alias("tok"))
@@ -1309,13 +1308,13 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .retrieval import corpus_bigrams, corpus_tokens
 
     docs = read_table(spark, sf_dir, "documents")
-    # r10: ride the SHARED cached token + bigram stages
+    # r10: ride the SHARED pinned token + bigram stages
     # (retrieval.corpus_tokens / corpus_bigrams) instead of a private
     # tokenize cache plus an explode of an HOF wrapped in
     # when().otherwise() — the CodegenFallback-conditional trap
     # (CLAUDE.md): the whole generator expression ran interpreted and
     # Generate re-evaluated it per exploded row. The shared bigram
-    # array is staged + cached BEFORE the explode; <2-token docs are
+    # array is staged + pinned BEFORE the explode; <2-token docs are
     # filtered there (they contributed no bigrams here either way).
     ct = corpus_tokens(spark, sf_dir)
     tok = ct.select("doc_id", F.explode("th").alias("tok"))
@@ -1343,14 +1342,14 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
     )
-    bidir = pairs.unionAll(
+    bidir = pin(pairs.unionAll(
         pairs.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-    ).select(F.col("u").alias("src"), F.col("v").alias("dst"), "w").persist()  # session-per-query
+    ).select(F.col("u").alias("src"), F.col("v").alias("dst"), "w"))
     outw = bidir.groupBy("src").agg(F.sum("w").alias("outw"))
-    weighted = bidir.join(outw, "src").select(
+    weighted = pin(bidir.join(outw, "src").select(
         "src", "dst", (F.col("w") / F.col("outw")).alias("wn")
-    ).persist()  # session-per-query
-    nodes = bidir.select(F.col("src").alias("node")).distinct().persist()  # session-per-query
+    ))
+    nodes = bidir.select(F.col("src").alias("node")).distinct()
     n = nodes.count()
     if n == 0:  # empty landing: no co-occurrence graph, no keywords
         return spark.createDataFrame([], "token string, tr_rank double")

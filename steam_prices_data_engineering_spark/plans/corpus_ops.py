@@ -408,8 +408,8 @@ FROM (
 def simsearch_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Int8-ADC coarse top-50 per query, exact-cosine rerank to top-10.
 
-    Plan: quantize once (narrow map, cached — both stages and the query
-    panel read it), broadcast the small query panel onto the code scan,
+    Plan: quantize (a narrow map — both stages and the query panel read
+    it), broadcast the small query panel onto the code scan,
     coarse-rank with a per-query window, then re-score ONLY the 50
     survivors with float cosine. The float vectors ride along the
     candidate rows (the 'fetch' trade: 50 * dims doubles per query beats
@@ -418,7 +418,7 @@ def simsearch_int8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import cosine
 
     e = read_table(spark, sf_dir, "embeddings")
-    quant = _int8_quant_table(e).select("vec_id", "v", "sc", "q").cache()  # session-per-query
+    quant = _int8_quant_table(e).select("vec_id", "v", "sc", "q")
     qry = quant.filter(F.col("vec_id") % 50 == 7).select(
         F.col("vec_id").alias("q_id"),
         F.col("q").alias("qq"),

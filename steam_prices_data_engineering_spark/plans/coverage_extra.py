@@ -109,14 +109,12 @@ def neardup_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocking is recall-lossless here). Completes the dedup family: exact /
     n-gram-Jaccard / MinHash-LSH / SimHash / embedding-cosine."""
     d = read_table(spark, sf_dir, "documents")
-    # Relational SimHash (operators/dedup.py:simhash_table), cached on
-    # purpose: the band explode (4 rows/doc) and BOTH sides of the
-    # self-join consume `sims`; without persistence the signature chain
-    # re-executes per consumer. doc_id + one long — the standard
-    # persist-the-sketch stage of an LSH pipeline.
+    # Relational SimHash (operators/dedup.py:simhash_table): doc_id + one
+    # long, consumed by the band explode (4 rows/doc) and both sides of
+    # the self-join.
     sims = simhash_table(
         d, token_hash_array(F.col("text")), bits=_SIMHASH_BITS
-    ).cache()  # session-per-query
+    )
     bands = spark.range(_SIMHASH_BANDS).select(F.col("id").cast("int").alias("band_idx"))
     banded = sims.crossJoin(F.broadcast(bands)).select(
         "doc_id",
@@ -125,8 +123,8 @@ def neardup_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"shiftright(sim, band_idx * {_BAND_WIDTH}) & {(1 << _BAND_WIDTH) - 1}")
         .alias("band_val"),
     )
-    # spread() the PROBE side: the cached sketch (groupBy output) can land
-    # in one byte-sized partition under AQE-resized caching, and the b
+    # spread() the PROBE side: the sketch (groupBy output) can land in
+    # one byte-sized partition under AQE coalescing, and the b
     # side broadcasts — probe partitioning alone then drives the ~9M-pair
     # band compare (measured 4.2s -> 1.7s at sf0.1). One O(N) row
     # exchange of (doc_id, sim) longs buys the parallelism back.

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -139,7 +140,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice", "l_quantity"
     )
-    per_part = (
+    per_part = pin(
         l.join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("l_partkey").alias("p_key"))
@@ -148,7 +149,6 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "part_value"
             )
         )
-        .cache()  # session-per-query
     )
     threshold = per_part.agg(
         (F.lit(0.001) * F.sum("part_value")).alias("threshold")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -129,7 +130,7 @@ def graph_neardup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (u<v<w) double join — each edge shuffles by its endpoint keys, the
     textbook distributed triangle count. Per-doc totals are two
     map-side-combined aggregations."""
-    edges = neardup_edges(read_table(spark, sf_dir, "documents")).cache()  # session-per-query
+    edges = pin(neardup_edges(read_table(spark, sf_dir, "documents")))
     e1 = edges.alias("e1")
     e2 = edges.alias("e2")
     e3 = edges.alias("e3")
@@ -303,7 +304,7 @@ def linkpred_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor-overlap Jaccard: wedge self-join for common neighbors, anti
     join to exclude existing edges, degree join for the union size,
     TakeOrderedAndProject for the top-k."""
-    edges = neardup_edges(read_table(spark, sf_dir, "documents")).cache()  # session-per-query
+    edges = pin(neardup_edges(read_table(spark, sf_dir, "documents")))
     bidir = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
@@ -403,15 +404,14 @@ def label_propagation_communities(
     map-side-combined (node, label) count + a node-PARTITIONED window
     whose partition is degree-bounded — no global window, no driver
     loop (the round count is a constant, so the plan is just unrolled
-    3x; edges/bidir are cached since every round re-reads them)."""
+    3x)."""
     docs = read_table(spark, sf_dir, "documents")
-    edges = neardup_edges(docs).cache()  # session-per-query
+    edges = neardup_edges(docs)
     bidir = (
         edges.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionAll(
             edges.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
         )
-        .cache()  # session-per-query
     )
     lab = bidir.select("node").distinct().select(
         "node", F.col("node").alias("lbl")

@@ -48,6 +48,7 @@ from ..functions.text import md5_hex6_to_int
 from ..functions.sqlfrag import sql_md5_hex6_to_int
 from ..operators.similarity import group_pairs
 from ..operators.ranking import ntile_scores
+from ..session import pin
 from ..sources.tables import read_table, values_frame
 from .registry import register
 
@@ -102,12 +103,7 @@ def item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Apriori-pruned like `frequent_itempairs`; both pair directions are
     generated so the per-item top-k window sees every neighbor."""
     li = read_table(spark, sf_dir, "lineitem")
-    # bp has two consumers — the item-frequency pass and the pruned
-    # basket semi-join — cache it so the distinct chain runs once. (fbp
-    # is single-consumer since the r10 group_pairs rewrite; its old
-    # self-join cache is gone.)
     bp = li.select("l_orderkey", "l_partkey").distinct()
-    bp = bp.cache()  # session-per-query
     freq = (
         bp.groupBy("l_partkey")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -115,8 +111,7 @@ def item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fbp = bp.join(F.broadcast(freq.select("l_partkey")), "l_partkey", "left_semi")
     # r10: posting-list pair expansion (operators/similarity.group_pairs) —
-    # one basket exchange instead of the double-shuffled self-join; fbp now
-    # has a single consumer, so its cache is gone too.
+    # one basket exchange instead of the double-shuffled self-join.
     co = (
         group_pairs(fbp, "l_orderkey", "l_partkey", ordered=False)
         .groupBy(
@@ -623,7 +618,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the global-max branch, the melted scorer's bounds+histogram pass
     # and the rank windows all re-derive it — without the cache each
     # branch re-runs the orders scan.
-    base = base.cache()  # session-per-query
+    base = pin(base)
     mx = base.agg(F.max("last_e").alias("mxe"))
     cust = base.crossJoin(F.broadcast(mx)).select(
         "o_custkey",
@@ -1385,35 +1380,29 @@ def item_cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_orderdate"), F.desc("o_orderkey")
     )
-    # Shared frames are branched 2-3x downstream (ords feeds the train
-    # baskets twice + the test baskets; bi feeds train/test baskets AND
-    # the co-occurrence base; train_ui feeds scoring twice; test_ui
-    # feeds the eval-customer universe and the hit join); cache each
-    # once instead of re-running the window/distinct/join per branch
-    # (bi+train_ui measured 6.4s -> ~4s warm at sf0.1; ords+test_ui
-    # shave two more window passes over orders).
+    # bi is pinned: it feeds the train/test baskets AND the
+    # co-occurrence base. The other shared frames (ords, train_ui,
+    # test_ui) measured no faster pinned, cold at sf0.1.
     ords = o.select(
         "o_custkey",
         "o_orderkey",
         F.row_number().over(wc).alias("rn"),
         F.count(F.lit(1)).over(Window.partitionBy("o_custkey")).alias("n_ord"),
-    ).cache()  # session-per-query
+    )
     test_b = ords.filter((F.col("rn") == 1) & (F.col("n_ord") >= 2)).select(
         "o_custkey", "o_orderkey"
     )
     train_b = ords.filter(F.col("rn") > 1).select("o_custkey", "o_orderkey")
-    bi = li.select("l_orderkey", "l_partkey").distinct().cache()  # session-per-query
+    bi = pin(li.select("l_orderkey", "l_partkey").distinct())
     train_ui = (
         train_b.join(bi, train_b.o_orderkey == bi.l_orderkey)
         .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("item"))
         .distinct()
-        .cache()  # session-per-query
     )
     test_ui = (
         test_b.join(bi, test_b.o_orderkey == bi.l_orderkey)
         .select(F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("item"))
         .distinct()
-        .cache()  # session-per-query
     )
     tb = bi.join(
         train_b.select("o_orderkey"),
@@ -1429,8 +1418,7 @@ def item_cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(freq.select("l_partkey")), "l_partkey", "left_semi"
     )
     # r10: posting-list pair expansion (operators/similarity.group_pairs) —
-    # one basket exchange instead of the double-shuffled self-join; fbp now
-    # has a single consumer, so its cache is gone too.
+    # one basket exchange instead of the double-shuffled self-join.
     co = (
         group_pairs(fbp, "l_orderkey", "l_partkey", ordered=False)
         .groupBy(

@@ -388,16 +388,12 @@ def pagerank_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("prev_type").alias("src"), F.col("event_type").alias("dst"))
         .agg(F.count(F.lit(1)).cast("double").alias("cnt"))
     )
-    # The derived edge/node tables are tiny (≤ |event_types|² rows) but their
-    # lineage holds the full lag-window scan of events — persist so the big
-    # subtree runs ONCE, not once per iteration (the plan dump showed 4
-    # recomputed scans before this).
     edges = ecount.select(
         "src",
         "dst",
         (F.col("cnt") / F.sum("cnt").over(Window.partitionBy("src"))).alias("w"),
-    ).persist()  # session-per-query
-    nodes = e.select(F.col("event_type").alias("node")).distinct().persist()  # session-per-query
+    )
+    nodes = e.select(F.col("event_type").alias("node")).distinct()
     n = nodes.count()  # driver sees one scalar: the node count
 
     ranks = nodes.select("node", (F.lit(1.0) / n).alias("rank"))
@@ -518,7 +514,7 @@ def dedup_pipeline_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         token_count(F.col("text")).cast("long").alias("n_toks"),
         (F.col("doc_id") == F.min("doc_id").over(w)).alias("is_exact_keeper"),
-    ).persist()  # session-per-query
+    )
     survivors = keepers.filter(F.col("is_exact_keeper")).select(
         "doc_id", "text"
     )

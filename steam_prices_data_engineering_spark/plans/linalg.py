@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.sqlfrag import sql_md5_hex6_to_int
+from ..session import pin
 from ..sources.tables import read_table, values_frame
 from .registry import register
 
@@ -96,7 +97,6 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = emb.select(
         "vec_id", F.posexplode(F.col("embedding").cast("array<double>"))
     ).select("vec_id", F.col("pos").alias("i"), F.col("col").alias("x"))
-    ev = ev.cache()  # session-per-query
     mu = ev.groupBy("i").agg(F.avg("x").alias("m"))
     n_rows = ev.select("vec_id").distinct().count()
     head = emb.select(F.size("embedding").alias("d")).first()
@@ -115,11 +115,10 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mua = mu.select(F.col("i"), F.col("m").alias("ma"))
     mub = mu.select(F.col("i").alias("j"), F.col("m").alias("mb"))
-    cov = (
+    cov = pin(
         prod.join(F.broadcast(mua), "i")
         .join(F.broadcast(mub), "j")
         .select("i", "j", (F.col("exx") - F.col("ma") * F.col("mb")).alias("c"))
-        .cache()  # session-per-query
     )
     v = mu.select("i", F.lit(1.0 / float(d) ** 0.5).alias("x"))
     for _ in range(_PCA_ITERS):

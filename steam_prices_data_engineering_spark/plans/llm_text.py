@@ -17,6 +17,7 @@ from ..functions.rounding import dround, dround_sql as R
 from ..functions.text import tokens
 from ..functions.vectors import cosine, dot, norm, to_double_array
 from ..operators.similarity import group_pairs
+from ..session import pin
 from ..sources.tables import read_table, values_frame
 from .registry import register
 from .udf_and_scale import HYPERPLANES, _sql_plane_literal
@@ -290,20 +291,19 @@ def neardup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import spread
 
     # spread(): the hyperplane-projection + norm build is interpreted
-    # fold CPU; parallelize it before the cache materializes.
+    # fold CPU; parallelize it.
     e = spread(read_table(spark, sf_dir, "embeddings"))
-    # Norm and bucket are computed ONCE PER VECTOR and cached: the naive
-    # per-pair cosine runs three interpreted 64-element folds per
-    # candidate (dot + both norms, ~128k pairs at sf0.1); carrying |v| as
-    # a scalar leaves one fold per pair — same dot/(sqrt*sqrt) arithmetic,
-    # bit-identical score, measured 2.3x faster. The cache stops the
-    # hyperplane-projection chain re-running on both join sides.
+    # Norm and bucket are computed ONCE PER VECTOR: the naive per-pair
+    # cosine runs three interpreted 64-element folds per candidate (dot +
+    # both norms, ~128k pairs at sf0.1); carrying |v| as a scalar leaves
+    # one fold per pair — same dot/(sqrt*sqrt) arithmetic, bit-identical
+    # score, measured 2.3x faster.
     bkt = e.select(
         "vec_id",
         F.col("embedding").alias("v"),
         norm(F.col("embedding")).alias("nrm"),
         _bucket_spark(F.col("embedding")).alias("bucket"),
-    ).cache()  # session-per-query
+    )
     a = bkt.alias("a")
     b = bkt.alias("b")
     pairs = a.join(
@@ -524,12 +524,12 @@ def simsearch_multiprobe_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     flipped), exact-cosine ranked; probe_dist marks which probe found
     each survivor."""
     e = read_table(spark, sf_dir, "embeddings")
-    bkt = e.select(
+    bkt = pin(e.select(
         "vec_id",
         "label",
         to_double_array(F.col("embedding")).alias("v"),
         _bucket_spark(F.col("embedding")).alias("bucket"),
-    ).cache()  # session-per-query
+    ))
     q = bkt.filter(F.col("vec_id") == 0).select(
         F.col("v").alias("qv"), F.col("bucket").alias("qb")
     )

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.rounding import dround_sql as R
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -252,7 +253,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    bands = media.mapInPandas(decode_bands, schema=band_schema).cache()  # session-per-query
+    bands = pin(media.mapInPandas(decode_bands, schema=band_schema))
     a = bands.alias("a")
     b = bands.alias("b")
     cand = (

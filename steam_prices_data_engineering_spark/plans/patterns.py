@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.sqlfrag import sql_md5_hex6_to_int
 from ..functions.text import md5_hex6_to_int
+from ..session import pin
 from ..sources.tables import read_table, values_frame
 from .registry import register
 
@@ -332,9 +333,9 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresh = cells.agg(
         F.greatest(F.ceil(2.0 * F.avg("n")).cast("long"), F.lit(3)).alias("minpts")
     )
-    core = cells.crossJoin(F.broadcast(thresh)).filter(
+    core = pin(cells.crossJoin(F.broadcast(thresh)).filter(
         F.col("n") >= F.col("minpts")
-    ).select("cid", "n").persist()  # session-per-query
+    ).select("cid", "n"))
     a = core.select(F.col("cid").alias("doc_id_a"), (F.col("cid") / _DB_CID).cast("long").alias("ay"), (F.col("cid") % _DB_CID).alias("ax"))
     b = core.select(F.col("cid").alias("doc_id_b"), (F.col("cid") / _DB_CID).cast("long").alias("by"), (F.col("cid") % _DB_CID).alias("bx"))
     edges = a.join(

@@ -22,6 +22,7 @@ file:line of `/root/reference`) it re-expresses.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -44,6 +45,7 @@ from ..operators.dedup import (
 )
 from ..operators.deviation import group_vs_global_avg
 from ..operators.similarity import knn_join, topk_cosine
+from ..session import release_pins
 from ..sources.tables import read_table, values_frame
 from ..streaming.windows import (
     session_stats,
@@ -156,8 +158,22 @@ def _ordered() -> dict[str, tuple[QueryFn, str | None]]:
     return {n: _REGISTRY[n] for n in (*_PRIORITY, *rest)}
 
 
+def _scoped(fn: QueryFn) -> QueryFn:
+    """Release the previous build's pins (`session.pin`) before building,
+    so a session holds at most one query's cached frames and a rebuild of
+    the same query starts cold. Not in `register`: builders call other
+    builders directly, and a release there would drop the caller's pins."""
+
+    @functools.wraps(fn)
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        release_pins(spark)
+        return fn(spark, sf_dir)
+
+    return build
+
+
 def queries() -> dict[str, QueryFn]:
-    return {name: fn for name, (fn, _) in _ordered().items()}
+    return {name: _scoped(fn) for name, (fn, _) in _ordered().items()}
 
 
 def oracle_sql() -> dict[str, str]:

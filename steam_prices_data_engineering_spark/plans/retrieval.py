@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.text import tokens
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -70,9 +71,10 @@ def corpus_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documents corpus, shared by the BM25 stage and its downstream
     consumers (rm3's feedback-doc token stage; bigram_entropy_rate's
     unigram/bigram streams ride `source`). The plan is identical
-    across builders, so repeat calls get CacheManager same-plan hits —
-    the corpus text is scanned and tokenized ONCE per session/sf_dir
-    even when rm3 embeds a full BM25 run. spread() lands the one-row-
+    across builders, so repeat calls within one query build get
+    CacheManager same-plan hits — the corpus text is scanned and
+    tokenized ONCE per build even when rm3 embeds a full BM25 run.
+    spread() lands the one-row-
     group parquet across tasks before the split; cache sits BEFORE any
     explode (the CLAUDE.md cache-before-explode rule)."""
     from ..sources.tables import spread
@@ -80,7 +82,7 @@ def corpus_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(read_table(spark, sf_dir, "documents")).select(
         "doc_id", "source", tokens(F.col("text")).alias("th")
     )
-    return d.cache()  # session-per-query (same-plan reuse across builders)
+    return pin(d)
 
 
 def corpus_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,10 +92,10 @@ def corpus_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpreted HOF chain per exploded row). Shared by
     bigram_entropy_rate (source-keyed streams) and textrank_keywords
     (co-occurrence edges) — identical plan across builders, so the
-    bigram transform runs once per session/sf_dir. Docs with <2 tokens
+    bigram transform runs once per query build. Docs with <2 tokens
     are filtered (they contribute no bigrams either way)."""
     ct = corpus_tokens(spark, sf_dir)
-    return (
+    return pin(
         ct.filter(F.size("th") >= 2)
         .select(
             "doc_id",
@@ -105,7 +107,6 @@ def corpus_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ).alias("bga"),
         )
-        .cache()  # session-per-query (cache-before-explode)
     )
 
 _BM25_SQL = f"""
@@ -229,14 +230,14 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     time (was two full tokenize passes; plan-pinned in
     tests/test_retrieval_dedup.py).
 
-    The RANKED RESULT is cached (r10): it is a bounded top-k stage
-    (panel x 10 rows) that rm3_query_expansion and hybrid_rrf_fusion
-    embed as their lexical input, and with the VALUES panel (panel_df)
-    the plan sameResult-matches across builder calls, so CacheManager
-    substitutes the in-memory ranking into every consumer instead of
-    re-running the token explode + joins per invocation (the
+    The RANKED RESULT is pinned: it is a bounded top-k stage (panel x
+    10 rows) that rm3_query_expansion and hybrid_rrf_fusion embed as
+    their lexical input, and with the VALUES panel (panel_df) the plan
+    sameResult-matches across builder calls within one query build, so
+    CacheManager substitutes the in-memory ranking into every consumer
+    there instead of re-running the token explode + joins (the
     corpus_tokens stage-reuse discipline, one level higher)."""
-    return _bm25_ranked(spark, sf_dir).cache()  # session-per-query
+    return pin(_bm25_ranked(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -142,13 +143,13 @@ def dedup_membership_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     live_bands = banded.join(live_ids, "doc_id", "left_semi").select(
         F.col("doc_id").alias("live_doc"), "band_idx", "band_key"
     )
-    hits = (
+    hits = pin(  # hit census + verify + argmax
         live_bands.join(
             F.broadcast(probe_bands), ["band_idx", "band_key"]
         )
         .select("probe_doc", "live_doc")
         .distinct()
-    ).cache()  # session-per-query (hit census + verify + argmax)
+    )
     hitagg = hits.groupBy("probe_doc").agg(
         F.count(F.lit(1)).cast("long").alias("n_band_hits")
     )
@@ -158,7 +159,7 @@ def dedup_membership_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh_l = hashed.select(
         F.col("doc_id").alias("live_doc"), F.col("hs").alias("hs_l")
     )
-    ver = (
+    ver = pin(  # agg + argmax re-join
         hits.join(sh_p, "probe_doc")
         .join(sh_l, "live_doc")
         .select(
@@ -167,7 +168,7 @@ def dedup_membership_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             dround(_jaccard(F.col("hs_p"), F.col("hs_l")), 6).alias("j"),
         )
         .filter(F.col("j") >= _PROBE_TAU)
-    ).cache()  # session-per-query (agg + argmax re-join)
+    )
     vagg = ver.groupBy("probe_doc").agg(
         F.count(F.lit(1)).cast("long").alias("n_verified"),
         F.max("j").alias("best_jaccard"),
@@ -319,7 +320,7 @@ def ivf_pq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w_cell))
         .filter(F.col("rn") <= nprobe_max)
         .select("vec_id", "seed_id", "rn")
-    ).cache()  # session-per-query (cells + probe read the same argsort)
+    )
     cells = assign.filter(F.col("rn") == 1).select(
         "vec_id", F.col("seed_id").alias("cell")
     )
@@ -336,6 +337,9 @@ def ivf_pq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cells, "vec_id")
         .join(F.broadcast(probe), "cell")
     )
+    # pinned: the fused curve pass replicates each scored row per
+    # surviving level, and without the pin the 4-way replication join
+    # re-scans the PQ scoring subtree
     adc = (
         cand.join(F.broadcast(lut), ["sub", "code"])
         .groupBy("vec_id")
@@ -343,9 +347,7 @@ def ivf_pq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.first("probe_rank").alias("probe_rank"),
             dround(F.sum("qd"), 6).alias("adc_dist"),
         )
-    ).cache()  # session-per-query (materialized once; the fused curve
-    # pass replicates each scored row per surviving level — without the
-    # cache the 4-way replication join re-scans the PQ scoring subtree)
+    )
 
     # exact L2 ground truth on true floats (order == cosine order on
     # unit-norm vectors, but L2 matches the ADC metric)
@@ -375,7 +377,7 @@ def ivf_pq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ALL curve points in ONE pass (was: 4 levels x 3 single-row jobs +
     # 8 crossJoin chains = 12 tiny jobs of pure scheduling overhead over
-    # the same cached frame). Mirror of the oracle's ranked/curve CTEs:
+    # the same frame). Mirror of the oracle's ranked/curve CTEs:
     # replicate each scored candidate once per level it survives
     # (probe_rank <= nprobe; candidate sets nest), rank within the level
     # by (adc_dist, vec_id) — the exact TakeOrdered tie-break the
@@ -607,7 +609,7 @@ def layout_zorder_vs_linear_eval(
             F.col("l_partkey").between(F.col("qa_lo"), F.col("qa_hi"))
             & F.col("l_suppkey").between(F.col("qb_lo"), F.col("qb_hi")),
         )
-    ).cache()  # session-per-query (two layout rollups of one derivation)
+    )
 
     def layout_agg(file_col: str, name: str) -> DataFrame:
         per_file = rows.groupBy(F.col(file_col).alias("f")).agg(
@@ -714,9 +716,9 @@ def repeated_ngram_loop_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = read_table(spark, sf_dir, "documents")
     th = d.select("doc_id", token_hash_array(F.col("text")).alias("th"))
-    sh = th.select(
+    sh = pin(th.select(
         "doc_id", shingle_hash_array(F.col("th"), 3).alias("sh")
-    ).cache()  # session-per-query (HOF array cached BEFORE explode)
+    ))  # HOF array cached BEFORE explode
     tri = sh.select("doc_id", F.explode("sh").alias("h"))
     per_h = tri.groupBy("doc_id", "h").agg(
         F.count(F.lit(1)).cast("long").alias("c")

@@ -149,7 +149,7 @@ def minhash_merge_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hb",
             F.array_union("ha", "hb").alias("uh"),
         )
-    ).cache()  # session-per-query (union sig explode + stored sigs)
+    )
 
     # recompute-from-union: the production relational form
     uh = pj.select("doc_a", "doc_b", F.explode("uh").alias("h"))
@@ -460,8 +460,8 @@ def bloom_fpr_operating_curve(
         ).alias(f"h{j}")
         for j in range(_BLOOM_MAX_K)
     ]
-    hashed = keys.select("pk", "is_member", *draws).cache()
-    # session-per-query (one hash pass, 4 config filters)
+    # one hash pass, 4 config filters
+    hashed = keys.select("pk", "is_member", *draws)
     n_row = hashed.agg(
         F.sum(F.when(F.col("is_member"), 1).otherwise(0))
         .cast("long")

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.text import tokens
 from ..operators.similarity import group_pairs
+from ..session import pin
 from ..sources.tables import read_table, values_frame
 from .registry import register
 
@@ -237,8 +238,8 @@ def wasserstein_1d_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # bounded dollar-grid frame, branched by the totals aggregate AND
-    # the ECDF window — cache so the fact scan runs once
-    seg = seg.cache()  # session-per-query
+    # the ECDF window — pinned so the fact scan runs once
+    seg = pin(seg)
     tot = seg.agg(
         F.sum("ca").cast("double").alias("na"),
         F.sum("cb").cast("double").alias("nb"),
@@ -326,7 +327,6 @@ def cluster_eval_nmi_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ct = d.groupBy("source", "lang").agg(
         F.count(F.lit(1)).cast("double").alias("c")
     )
-    ct = ct.cache()  # session-per-query
     n_ = ct.agg(F.sum("c").alias("n"))
     cs = ct.groupBy("source").agg(
         F.sum("c").alias("csum"), F.max("c").alias("cmax")
@@ -429,7 +429,6 @@ def rank_agreement_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rev"),
         F.sum("l_quantity").cast("long").alias("qty"),
     )
-    m = m.cache()  # session-per-query (two top-K branches)
 
     def topk(col: str, alias: str) -> DataFrame:
         lim = m.orderBy(F.desc(col), F.asc("l_partkey")).limit(_RBO_K)
@@ -530,7 +529,7 @@ def ips_offline_policy_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("double").alias("cnt"),
         dround(F.avg("r"), 6).alias("avgr"),
     )
-    stats = stats.cache()  # session-per-query (3 consumers below)
+    stats = pin(stats)  # 3 consumers below
     ctxn = stats.groupBy("ctx").agg(F.sum("cnt").alias("cn"))
     wp = Window.partitionBy("ctx").orderBy(F.desc("avgr"), F.asc("act"))
     pi = (
@@ -616,7 +615,7 @@ def association_rules_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold, not the raw basket width."""
     li = read_table(spark, sf_dir, "lineitem")
     bp = li.select("l_orderkey", "l_partkey").distinct()
-    bp = bp.cache()  # session-per-query (freq + join + basket count)
+    bp = pin(bp)  # freq + join + basket count
     freq = (
         bp.groupBy("l_partkey")
         .agg(F.count(F.lit(1)).cast("double").alias("c"))
@@ -627,7 +626,7 @@ def association_rules_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r10: posting-list pair expansion (operators/similarity.group_pairs)
     # — one basket exchange instead of the double-shuffled self-join.
-    pairs = (
+    pairs = pin(
         group_pairs(fbp, "l_orderkey", "l_partkey", ordered=True)
         .groupBy(
             F.col("ia").alias("pa"),
@@ -639,7 +638,6 @@ def association_rules_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
         # ReuseExchange dedupes the self-join shuffles but the final
         # pair aggregation + join probe still ran twice — cache the
         # bounded frequent-pair lattice instead (minsup-capped).
-        .cache()  # session-per-query
     )
     n_ = bp.agg(F.count_distinct("l_orderkey").cast("double").alias("n"))
     directed = pairs.select(
@@ -729,7 +727,7 @@ def data_pruning_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "lang")
         .agg(dround(F.avg(surprisal), 6).alias("s"))
     )
-    doc = doc.cache()  # session-per-query (cutoff + report branches)
+    doc = pin(doc)  # cutoff + report branches
     cut = doc.agg(
         dround(F.expr(f"percentile(s, {_PRUNE_Q})"), 6).alias("cutoff")
     )
@@ -886,9 +884,7 @@ def embedding_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             "i", "x"
         ),
     )
-    ev = ev.cache()  # session-per-query (centroid + per-vec branches)
     cent = ev.groupBy("label", "i").agg(F.avg("x").alias("m"))
-    cent = cent.cache()  # session-per-query (norm + dot branches)
     cnorm = cent.groupBy("label").agg(
         F.sqrt(F.sum(F.col("m") * F.col("m"))).alias("nc")
     )
@@ -905,7 +901,7 @@ def embedding_outlier_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         (F.lit(1.0) - F.col("dot") / (F.col("nv") * F.col("nc"))).alias("dd"),
     )
-    dist = dist.cache()  # session-per-query (moments + flag branches)
+    dist = pin(dist)  # moments + flag branches
     mom = dist.groupBy("label").agg(
         F.avg("dd").alias("mu"),
         F.stddev_samp("dd").alias("sd"),
@@ -1237,7 +1233,6 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("event_type").over(wj).alias("prev"),
         F.lead("event_type").over(wj).alias("nxt"),
     )
-    steps = steps.cache()  # session-per-query (two edge branches)
     edges1 = steps.select(
         F.coalesce(F.col("prev"), F.lit("start")).alias("f"),
         F.when(F.col("event_type") == "purchase", "conv")
@@ -1256,7 +1251,6 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     prob = cnt.select(
         "f", "t", (F.col("c") / F.sum("c").over(wf)).alias("p")
     )
-    prob = prob.cache()  # session-per-query (scenario + channel branches)
     chan = prob.filter(~F.col("t").isin("conv", "drop")).select(
         F.col("t").alias("rm")
     ).distinct()
@@ -1520,7 +1514,6 @@ def vocab_coverage_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     freq = tok.groupBy("tok").agg(
         F.count(F.lit(1)).cast("double").alias("cnt")
     )
-    freq = freq.cache()  # session-per-query (totals + top-K branches)
     tot = freq.agg(
         F.sum("cnt").alias("n"),
         F.count(F.lit(1)).cast("long").alias("n_distinct"),
@@ -1673,7 +1666,7 @@ def cem_att_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0.0)
         ).alias("outcome"),
     )
-    u = u.cache()  # session-per-query (median + strata branches)
+    u = pin(u)  # median + strata branches
     med = u.agg(dround(F.expr("percentile(share, 0.5D)"), 6).alias("m"))
     strata = u.crossJoin(F.broadcast(med)).select(
         F.least(F.lit(9), F.floor(F.col("n_ev") / 20))
@@ -1692,7 +1685,7 @@ def cem_att_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.avg(F.when(t1, F.col("outcome"))).alias("mt"),
         F.avg(F.when(~t1, F.col("outcome"))).alias("mc"),
     )
-    cell = cell.cache()  # session-per-query (matched + pruned branches)
+    cell = pin(cell)  # matched + pruned branches
     matched = cell.filter((F.col("nt") > 0) & (F.col("nc") > 0))
     pruned = cell.filter((F.col("nt") > 0) & (F.col("nc") == 0)).agg(
         F.count(F.lit(1)).cast("long").alias("n_strata_pruned")
@@ -1937,7 +1930,6 @@ def mixture_token_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor("ideal").cast("long").alias("fl"),
         dround(F.col("ideal") - F.floor("ideal"), 6).alias("frac"),
     )
-    floors = floors.cache()  # session-per-query (shortfall + rank branches)
     short = floors.agg(
         (F.lit(_ALLOC_BUDGET) - F.sum("fl")).cast("long").alias("k")
     )
@@ -2160,7 +2152,7 @@ def gbm_stumps_two_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("o_orderdate").cast("long")).cast("long").alias("x"),
         F.col("o_totalprice").alias("y"),
     )
-    base = base.cache()  # session-per-query (grid + 2 sweeps + MSE pass)
+    base = pin(base)  # grid + 2 sweeps + MSE pass
     grid = base.agg(
         F.expr(
             "percentile(x, array(0.1D, 0.2D, 0.3D, 0.4D, 0.5D,"

@@ -384,21 +384,20 @@ def lsh_recall_empirical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured recall/precision of the MinHash banding vs exact truth.
 
     Stage-reuse contract (VERDICT r6 task 3): the shingle pipeline is
-    built ONCE — `hashed` is the shared cached stage; `cand` derives
-    from it once and is cached (three consumers: the candidate count,
-    the truth-hit join, the exact-Jaccard verify); the verify runs on
+    built ONCE — `hashed` is the shared pinned stage; `cand` derives
+    from it (three consumers: the candidate count, the truth-hit join,
+    the exact-Jaccard verify); the verify runs on
     the SAME frames via verified_jaccard_pairs; and the exact TRUTH set
     is the unblocked exact-Jaccard over the SAME hashed shingles in
     inverted-index form (explode + equi-join on the shingle hash +
     count = |A∩B|) — the r6 shape instead re-shingled the corpus with
     the string-n-gram pipeline, a full second chain. spread() before
-    the verify join: `cand` is cached with shuffles in its plan, so AQE
-    coalesces it to ~1 partition and the per-pair array intersection
-    would otherwise run on one core (the documented cached-probe-side
-    collapse).
+    the verify join: `cand` has shuffles in its plan, so AQE coalesces
+    it to ~1 partition and the per-pair array intersection would
+    otherwise run on one core.
 
     One documents scan in the whole plan (census-tested): every stage
-    derives from the cached `hashed` frame."""
+    derives from the pinned `hashed` frame."""
     from ..operators.dedup import (
         hashed_shingle_table,
         minhash_banded,
@@ -412,7 +411,7 @@ def lsh_recall_empirical(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = hashed_shingle_table(d)
     cand = minhash_candidates(
         minhash_banded(minhash_sig_table(hashed))
-    ).cache()  # session-per-query; bounded: surviving candidate pairs
+    )
     verified = verified_jaccard_pairs(spread(cand), hashed, threshold=0.5)
     ex = hashed.select(
         "doc_id", F.size("hs").alias("sz"), F.explode("hs").alias("h0")
@@ -901,7 +900,6 @@ def rolling_origin_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rev")
         )
     )
-    daily = daily.cache()  # session-per-query (origin grid + 3 day joins)
     bounds = daily.agg(F.max("d").alias("mx"))
     origins = (
         daily.crossJoin(F.broadcast(bounds))
@@ -1306,7 +1304,6 @@ def covariate_shift_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("len_bin"),
         quality_score(text).alias("q"),
     )
-    scored = scored.cache()  # session-per-query (tgt + ev aggregates)
     esrc = d.agg(F.min("source").alias("s"))
     tgt = scored.groupBy("len_bin").agg(
         F.count(F.lit(1)).cast("long").alias("n_t")

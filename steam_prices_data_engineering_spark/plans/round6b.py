@@ -29,6 +29,7 @@ from ..functions.text import (
     quality_score,
     token_count,
 )
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -165,7 +166,7 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor("i_prop").cast("long").alias("fp"),
         dround(F.col("i_prop") - F.floor("i_prop"), 6).alias("rp"),
     )
-    fl = fl.cache()  # session-per-query (shortfall + two rank branches)
+    fl = pin(fl)  # shortfall + two rank branches
     short = fl.agg(
         (F.lit(_NEY_BUDGET) - F.sum("fn")).cast("long").alias("kn"),
         (F.lit(_NEY_BUDGET) - F.sum("fp")).cast("long").alias("kp"),
@@ -265,7 +266,6 @@ def embedding_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pos", "x"
         ),
     ).select("vec_id", (F.col("pos") + 1).alias("dim"), "x")
-    d = d.cache()  # session-per-query (norm, mean, and two sum passes)
     nrm = d.groupBy("vec_id").agg(
         F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("nr")
     )
@@ -374,7 +374,7 @@ def confident_learning_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("s"),
         dround(quality_score(text), 6).alias("p_hi"),
     )
-    scored = scored.cache()  # session-per-query (thresholds + cells)
+    scored = pin(scored)  # thresholds + cells
     thr = scored.agg(
         F.avg(F.when(F.col("s") == "hi", F.col("p_hi"))).alias("t_hi"),
         F.avg(F.when(F.col("s") == "lo", 1.0 - F.col("p_hi"))).alias(
@@ -696,7 +696,7 @@ def kneser_ney_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("v", "w")
         .agg(F.count(F.lit(1)).cast("double").alias("c"))
     )
-    tb = tb.cache()  # session-per-query (ctx/cont/n1dd + the eval join)
+    tb = pin(tb)  # ctx/cont/n1dd + the eval join
     ctx = tb.groupBy("v").agg(
         F.sum("c").alias("cv"),
         F.count(F.lit(1)).cast("double").alias("n1v"),

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
+from ..session import pin
 from ..sources.tables import read_table, values_frame
 from .registry import register
 
@@ -116,7 +117,6 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("sec") <= F.col("mid"), 0).otherwise(1).alias("side"),
         "value",
     )
-    sided = sided.cache()  # session-per-query (edges + binned passes)
     edges = sided.agg(
         *[
             dround(
@@ -139,7 +139,7 @@ def psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("side", "bin")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    cnt = cnt.cache()  # session-per-query (spine + two side branches)
+    cnt = pin(cnt)  # spine + two side branches
     # a missing side drops ALL rows (mirrors the oracle's empty scalar
     # cross join — degenerate single-timestamp logs emit no comparison)
     tot_r = (
@@ -261,7 +261,6 @@ def raking_ipf_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
-    cells = cells.cache()  # session-per-query (margins + 6 window steps)
     gl = cells.agg(
         (F.sum("n").cast("double") / F.countDistinct("lang")).alias("tl"),
         (F.sum("n").cast("double") / F.countDistinct("source")).alias(
@@ -551,7 +550,7 @@ def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wr = Window.orderBy(F.desc("x"), F.asc("o_orderkey"))
     rk = top.select("x", F.row_number().over(wr).alias("rn"))
-    rk = rk.cache()  # session-per-query (kth + head branches)
+    rk = pin(rk)  # kth + head branches
     kth = rk.filter(F.col("rn") == _HILL_K + 1).select(
         F.col("x").alias("xk")
     )
@@ -733,7 +732,6 @@ def shard_order_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     collation cannot be a cross-engine channel; see the section comment
     for the r7-r9 driver-red history this design answers."""
     sharded = _soa_sharded(spark, sf_dir).drop("doc_id", "m")
-    sharded = sharded.cache()  # session-per-query (lag + composition)
     wlag = Window.partitionBy("shard").orderBy(
         *[F.col(c).asc() for c in _SOA_LAG_ORDER],
         F.col("source").asc_nulls_first(),

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.sqlfrag import SQL_QUALITY_EXPR, sql_quality_feat_ctes
 from ..functions.text import quality_score, tokens
+from ..session import pin
 from ..sources.tables import read_table, values_frame
 from .registry import register
 
@@ -156,7 +157,6 @@ def quantile_normalize_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source decile -> pooled decile quality-score mapping table."""
     d = read_table(spark, sf_dir, "documents")
     scored = d.select("source", quality_score(F.col("text")).alias("q"))
-    scored = scored.cache()  # session-per-query (src + pooled percentiles)
     src = scored.groupBy("source").agg(
         *[
             F.percentile("q", i / 10.0).alias(f"s{i}")
@@ -253,7 +253,7 @@ def cohen_kappa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("a"),
         dround(quality_score(F.col("text")), 6).alias("q"),
     )
-    scored = scored.cache()  # session-per-query (median + confusion mass)
+    scored = pin(scored)  # median + confusion mass
     med = scored.agg(dround(F.percentile("q", 0.5), 6).alias("m"))
     cells = scored.crossJoin(F.broadcast(med)).select(
         "a",
@@ -347,7 +347,6 @@ def jackknife_source_influence(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("q").alias("s"),
     )
-    per = per.cache()  # session-per-query (totals + loo branches)
     gl = per.agg(
         F.sum("n").cast("double").alias("nt"),
         F.sum("s").alias("st"),
@@ -365,7 +364,6 @@ def jackknife_source_influence(
         (F.col("st") / F.col("nt")).alias("full_mean"),
         "g",
     )
-    loo = loo.cache()  # session-per-query (jk moments + output)
     jk = loo.agg(
         F.sum("lm").alias("s1"),
         F.sum(F.col("lm") * F.col("lm")).alias("q2"),

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -114,7 +115,7 @@ def winnowing_fingerprint_density(
     shf = th.select(
         "doc_id", "source", shingle_hash_array(F.col("th")).alias("sh")
     )
-    shf = shf.cache()  # session-per-query (doc stats + the posexplode)
+    shf = pin(shf)  # doc stats + the posexplode
     per_doc = shf.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(F.size("sh")).cast("long").alias("n_kgrams"),
@@ -261,7 +262,6 @@ def topk_token_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("side", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    cnt = cnt.cache()  # session-per-query (two top-K branches)
     wr = Window.orderBy(F.desc("c"), F.asc("tok"))
 
     def top(side):
@@ -376,7 +376,6 @@ def burrows_delta_stylometry(
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    cnt = cnt.cache()  # session-per-query (top-20 + totals + rate joins)
     fw = (
         cnt.groupBy("tok")
         .agg(F.sum("c").alias("tc"))
@@ -395,7 +394,7 @@ def burrows_delta_stylometry(
             "r"
         ),
     )
-    rate = rate.cache()  # session-per-query (z stats + the z join)
+    rate = pin(rate)  # z stats + the z join
     zstat = rate.groupBy("tok").agg(
         F.avg("r").alias("m"),
         F.sqrt(

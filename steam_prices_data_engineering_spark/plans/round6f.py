@@ -184,7 +184,6 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("dec"),
         F.explode(tokens(F.col("text"))).alias("tok"),
     )
-    occ = occ.cache()  # session-per-query (decile counts + first-decile)
     per_toks = occ.groupBy("dec").agg(
         F.count(F.lit(1)).cast("long").alias("toks")
     )
@@ -207,7 +206,6 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("adec").alias("dec"), "n_cum", "v_cum")
     )
-    cum = cum.cache()  # session-per-query (OLS + fitted output)
     lx = F.log("n_cum")
     ly = F.log("v_cum")
     ols = cum.agg(

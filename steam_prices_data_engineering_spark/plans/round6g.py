@@ -88,8 +88,6 @@ def join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     lk = li.groupBy(F.col("l_orderkey").alias("k")).agg(
         F.count(F.lit(1)).cast("double").alias("cl")
     )
-    ok = ok.cache()  # session-per-query (bucket stats + the exact join)
-    lk = lk.cache()  # session-per-query (bucket stats + the exact join)
     bucket = F.pmod(F.col("k"), F.lit(_JCA_B))
     ob = ok.groupBy(bucket.alias("bucket")).agg(
         F.sum("co").alias("n_o"),

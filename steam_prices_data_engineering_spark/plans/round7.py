@@ -36,6 +36,7 @@ from ..functions.text import (
     token_count,
     tokens,
 )
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -279,7 +280,7 @@ def fleiss_kappa_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         dround(quality_score(F.col("text")), 6).alias("q"),
         token_count(F.col("text")).cast("double").alias("nt"),
     )
-    scored = scored.cache()  # session-per-query (medians + vote scan)
+    scored = pin(scored)  # medians + vote scan
     med = scored.agg(
         dround(F.percentile("q", 0.5), 6).alias("mq"),
         dround(F.percentile("nt", 0.5), 6).alias("mn"),
@@ -361,7 +362,7 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .insights import _daily_revenue
 
     daily = _daily_revenue(spark, sf_dir)
-    daily = daily.cache()  # session-per-query (bounded day grain; pairs + intercept scans)
+    daily = pin(daily)  # bounded day grain; pairs + intercept scans
     # spread() the probe side of the day-pair join: the cached day grain
     # (shuffle in its plan) AQE-collapses to one partition, and the
     # BroadcastNestedLoopJoin would compute all O(days^2) slopes on ONE
@@ -373,9 +374,7 @@ def theil_sen_daily_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         dround(
             (F.col("rb") - F.col("ra")) / (F.col("db") - F.col("da")), 6
         ).alias("slope")
-    ).cache()  # session-per-query (bounded O(days^2) grain; the
-    # selection primitive makes several passes — bin stats, counts,
-    # detail — and each would otherwise re-run the day-pair join)
+    )
     # Exact median by binned order-statistic SELECTION, not Spark's
     # `percentile` aggregate: the slope set is O(days^2) mostly-distinct
     # doubles (2.9M at sf0.1) and the percentile value-count map merged
@@ -484,7 +483,6 @@ def dedup_keeper_policy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     dq = d.select(
         "doc_id", dround(quality_score(F.col("text")), 6).alias("q")
     )
-    dq = dq.cache()  # session-per-query (doc grain; members build + two keeper lookups)
     sp = d.select("doc_id", tokens(F.col("text")).alias("sp"))
     ch = sp.select(
         "doc_id",
@@ -512,7 +510,7 @@ def dedup_keeper_policy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q",
         )
     )
-    members = members.cache()  # session-per-query (chunk grain; g1 + g2 refinement)
+    members = pin(members)  # chunk grain; g1 + g2 refinement
     g1 = members.groupBy("h").agg(
         F.count(F.lit(1)).cast("long").alias("n_occ"),
         F.min("k").alias("keep_a"),
@@ -689,7 +687,6 @@ def stratified_three_way_split(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("hk"),
     )
-    hashed = hashed.cache()  # session-per-query (ranked scan + per-source counts)
     w = Window.partitionBy("source").orderBy("hk", "doc_id")
     ranked = hashed.select(
         "source", F.row_number().over(w).cast("long").alias("rn")

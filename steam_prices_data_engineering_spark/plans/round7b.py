@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -315,7 +316,7 @@ def knn_shapley_truncation_error(
         F.row_number().over(wr).alias("rnk"),
         F.count(F.lit(1)).over(wv).cast("long").alias("n"),
     )
-    ranked = ranked.cache()  # session-per-query (exact + truncated paths)
+    ranked = pin(ranked)  # exact + truncated paths
     sv_exact = _ksv_svals(ranked, F.col("n"))
     sv_trunc = _ksv_svals(
         ranked.filter(F.col("rnk") <= _KSV_M),
@@ -335,7 +336,6 @@ def knn_shapley_truncation_error(
             ).alias("vt"),
         )
     )
-    j = j.cache()  # session-per-query (stats + two top-10 branches)
     tope = j.orderBy(F.desc("ve"), F.asc("trn_id")).limit(_KSV_TOP)
     topt = j.orderBy(F.desc("vt"), F.asc("trn_id")).limit(_KSV_TOP)
     overlap = (

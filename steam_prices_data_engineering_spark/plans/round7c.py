@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.sqlfrag import SQL_QUALITY_EXPR, sql_quality_feat_ctes
 from ..functions.text import distinct_token_ratio, quality_score
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -95,14 +96,12 @@ def fairness_gate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("y"),
     )
-    scored = scored.cache()  # session-per-query (median + class scan)
     med = scored.agg(dround(F.percentile("q", 0.5), 6).alias("m"))
     cls = scored.crossJoin(F.broadcast(med)).select(
         "source",
         "y",
         F.when(F.col("q") >= F.col("m"), 1).otherwise(0).alias("a"),
     )
-    cls = cls.cache()  # session-per-query (pooled + group rollups)
 
     def rates(frame):
         return [
@@ -253,7 +252,7 @@ def coreset_kcenter_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings").select(
         "vec_id", to_double_array(F.col("embedding")).alias("v"), "label"
     )
-    e = e.cache()  # session-per-query (K argmax passes + label join)
+    e = pin(e)  # K argmax passes + label join
     first = e.orderBy("vec_id").limit(1).collect()
     if not first:
         return spark.createDataFrame(
@@ -287,6 +286,7 @@ def coreset_kcenter_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("md"), _kc_d2([float(x) for x in far[0]["v"]])
                 ).alias("md"),
             ).cache()
+    cur.unpersist()  # the last generation; the result reads `e`, not it
 
     sel = spark.createDataFrame(
         picked, "center_idx long, vec_id long, sel_dist double"

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -181,7 +182,7 @@ def fellegi_sunter_em(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("a1", "a2", "a3")
         .agg(F.count(F.lit(1)).cast("double").alias("c"))
     )
-    pat = pat.cache()  # session-per-query (EM collect + final report)
+    pat = pin(pat)  # EM collect + final report
     rows = sorted(
         (int(r["a1"]), int(r["a2"]), int(r["a3"]), float(r["c"]))
         for r in pat.collect()

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -73,7 +74,7 @@ def quantile_sketch_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("x")
     )
-    li = li.cache()  # session-per-query (sketch + exact + rank counts)
+    li = pin(li)  # sketch + exact + rank counts
     # exact companions via the bracket-then-exact SELECTION, not the
     # percentile value map: l_extendedprice is ~97% distinct (583k/600k
     # at sf0.1) and the exact-percentile aggregate measured ~9 s here —

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.sqlfrag import sql_ngram_hashes, sql_token_hashes
 from ..functions.text import ngram_hash_array, token_hash_array
+from ..session import pin
 from ..sources.tables import read_table, spread
 from .registry import register
 
@@ -98,7 +99,7 @@ def decontam_ngram13_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("hs"),
         )
     )
-    sh = sh.cache()  # session-per-query (eval + train branches)
+    sh = pin(sh)  # eval + train branches
     is_eval = F.pmod(F.col("doc_id"), F.lit(_D13_EVAL_MOD)) == 0
     # explode_outer: plain explode would let InferFiltersFromGenerate
     # push a size(hs) > 0 filter (with the hash chain inlined) below the
@@ -512,7 +513,6 @@ def bpe_roundtrip_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split(F.trim(F.col("seq")), " ").alias("s"),
         F.replace(F.col("seq"), F.lit(" "), F.lit("")).alias("dec"),
     )
-    v = v.cache()  # session-per-query (stats + symbol inventory)
     stats = v.agg(
         F.count(F.lit(1)).cast("long").alias("n_words"),
         F.sum(F.when(F.col("dec") == F.col("word"), 1).otherwise(0))
@@ -603,7 +603,6 @@ def range_partition_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("x")
     )
-    li = li.cache()  # session-per-query (selection passes + assignment)
     qs = [i / _RP_P for i in range(1, _RP_P)]
     ex = exact_quantiles_cont(li, F.col("x"), qs)
     rows = sorted(ex.collect(), key=lambda r: r["q"])  # P-1 bounded rows

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -122,7 +123,6 @@ def voptimal_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) DIV 1000"
         ).alias("v")
     )
-    units = units.cache()  # session-per-query (bounds + cell rollup)
     b = units.agg(
         F.min("v").alias("lo"), F.max("v").alias("hi"), F.count("v").alias("n")
     ).collect()[0]
@@ -275,7 +275,6 @@ def unimax_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     stok = d.groupBy("source").agg(
         F.sum(token_count(F.col("text"))).cast("long").alias("n_tokens")
     )
-    stok = stok.cache()  # session-per-query (grain + totals)
     tot = stok.agg(
         F.sum("n_tokens").cast("long").alias("corpus"),
         F.count(F.lit(1)).cast("long").alias("n_src"),
@@ -294,7 +293,6 @@ def unimax_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0),
         ).alias("capped_before"),
     ).crossJoin(F.broadcast(tot))
-    ranked = ranked.cache()  # session-per-query (crossing pick + final)
     u_at = (budget * F.col("corpus") - F.col("capped_before")) / (
         F.col("n_src") - F.col("rk") + 1
     )
@@ -427,7 +425,7 @@ def krippendorff_alpha_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("m_u", F.sum("n_uc").over(wu).cast("long"))
         .filter(F.col("m_u") >= 2)
     )
-    uc = uc.cache()  # session-per-query (diag + off-diag + count)
+    uc = pin(uc)  # diag + off-diag + count
     o_diag = uc.groupBy(F.col("r").alias("c")).agg(
         F.sum(
             (F.col("n_uc") * (F.col("n_uc") - 1)).cast("double")
@@ -459,7 +457,7 @@ def krippendorff_alpha_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c")
         .agg(F.sum("o").alias("nbar"))
     )
-    marg = marg.cache()  # session-per-query (n + cross terms)
+    marg = pin(marg)  # n + cross terms
     do_ = o_off.agg(
         F.coalesce(F.sum("o"), F.lit(0.0)).alias("do_")
     )
@@ -560,7 +558,7 @@ def partition_fingerprint_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = e.select(
         day.alias("day"), row_h.alias("h"), "event_type"
     )
-    base = base.cache()  # session-per-query (cur + prior + min-day)
+    base = pin(base)  # cur + prior + min-day
     d0 = base.agg(F.min("day")).collect()[0][0]
     cur = base.groupBy("day").agg(
         F.count(F.lit(1)).cast("long").alias("n_current"),

@@ -111,7 +111,6 @@ def trigram_similarity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("nm", tg_key.alias("tg"))
         .distinct()
     )
-    tgs = tgs.cache()  # session-per-query (index + sizes + verify joins)
     sizes = tgs.groupBy("nm").agg(F.count(F.lit(1)).cast("long").alias("n_tg"))
     rare = (
         tgs.groupBy("tg")
@@ -345,7 +344,6 @@ def youden_threshold_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("pos"), 1)).cast("long").alias("np"),
         F.count(F.when(~F.col("pos"), 1)).cast("long").alias("nn"),
     )
-    per_score = per_score.cache()  # session-per-query (totals + sweep)
     tot = per_score.agg(
         F.sum("np").cast("long").alias("p"),
         F.sum("nn").cast("long").alias("n"),

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
+from ..session import pin
 from ..sources.tables import TABLE_SCHEMAS, read_table
 from ..streaming.sizing import run_stream
 from .registry import register
@@ -125,11 +126,11 @@ LIMIT {_LDS_TOP}
 
 
 def _lds_wpos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CACHED (doc_id, pos, h) stride-1 window-hash positions — the
-    shared first stage of both suffix-grain dup queries.
+    """(doc_id, pos, h) stride-1 window-hash positions — the shared
+    first stage of both suffix-grain dup queries.
 
     Staged projections per the interpreted-HOF rule; the window array
-    is cached BEFORE posexplode (Generate re-evaluates an uncached HOF
+    is pinned BEFORE posexplode (Generate re-evaluates an uncached HOF
     chain per exploded row — the 50x shingle-index lesson). spread()
     first: the W=8 unrolled window hash is ~4x heavier per row than the
     shingle chain and MEASURED 4.3 -> 1.1 s cold at sf0.1 with the
@@ -146,11 +147,11 @@ def _lds_wpos(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", ngram_hash_array(F.col("th"), _LDS_W).alias("wh")
         )
     )
-    winh = winh.cache()  # session-per-query (explode feeds 2 consumers)
+    winh = pin(winh)  # explode feeds 2 consumers
     wpos = winh.select(
         "doc_id", F.posexplode(F.col("wh")).alias("pos0", "h")
     ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "h")
-    return wpos.cache()  # session-per-query (dup agg + position probes)
+    return wpos
 
 
 @register("longest_dup_substring", _lds_sql())
@@ -407,7 +408,7 @@ def dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = banded.join(sides, "doc_id").select(
         "band_idx", "band_key", "is_delta", "is_tomb"
     )
-    tagged = tagged.cache()  # session-per-query (counts + bucket census)
+    tagged = pin(tagged)  # counts + bucket census
     counts = tagged.groupBy("band_idx").agg(
         F.sum(F.when(~F.col("is_delta"), 1).otherwise(0))
         .cast("long")
@@ -536,7 +537,7 @@ def embedding_source_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at(F.col("embedding"), 1).cast("double"), 6
         ).alias("v"),
     )
-    j = j.cache()  # session-per-query (ref pick + edges + binning)
+    j = pin(j)  # ref pick + edges + binning
     refsrc = j.agg(F.min("source").alias("ref"))
     edges = (
         j.crossJoin(F.broadcast(refsrc))
@@ -559,7 +560,7 @@ def embedding_source_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "bin")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-    cnt = cnt.cache()  # session-per-query (totals + ref share + spine)
+    cnt = pin(cnt)  # totals + ref share + spine
     totals = cnt.groupBy("source").agg(
         F.sum("n").cast("double").alias("tot")
     )

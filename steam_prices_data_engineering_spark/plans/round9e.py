@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.sqlfrag import sql_md5_hex6_to_int, sql_shinglehash_ctes
 from ..functions.text import md5_hex6_to_int
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -96,9 +97,9 @@ def neardup_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded 3-round lineage stays flat."""
     docs = read_table(spark, sf_dir, "documents")
     edges = neardup_edges(docs)
-    bidir = edges.unionAll(
+    bidir = pin(edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).cache()  # reused every superstep (session-per-query)
+    ))  # reused every superstep
 
     frontier = (
         docs.filter(

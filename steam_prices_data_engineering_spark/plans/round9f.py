@@ -109,7 +109,6 @@ def _ssj_stages(
             "df", F.count(F.lit(1)).over(Window.partitionBy("h"))
         )
         .filter(F.col("df") <= _CONT_DF_CAP)
-        .cache()  # (doc_id, h, df)  session-per-query
     )
     # rn and the set size s share ONE doc_id-partitioned window stage
     # (r10: s was a separate groupBy + join — another exchange pair);

@@ -486,13 +486,12 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     try:
         start_sized(writer, table_path(sf_dir, "events")).awaitTermination()
-        result = (
-            spark.read.parquet(out_dir)
-            .select("event_type", "n_events", "sum_value")
-            .cache()  # session-per-query
+        # the read-back is FILE-backed and lazy: collect the bounded
+        # (event_type-grain) table before the finally removes out_dir
+        result = spark.read.parquet(out_dir).select(
+            "event_type", "n_events", "sum_value"
         )
-        result.count()  # materialize before the scratch dir is removed
-        return result
+        return spark.createDataFrame(result.collect(), result.schema)
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
 

@@ -43,6 +43,7 @@ from ..functions.rounding import dround, dround_sql as R
 from ..functions.sqlfrag import sql_shinglehash_ctes
 from ..functions.text import tokens
 from ..functions.vectors import dot, norm, to_double_array
+from ..session import pin
 from ..sources.tables import read_table, spread
 from .registry import register
 
@@ -119,7 +120,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     K ~ sqrt(N) balances the N*K assignment stage against the N^2/2K
     pair stage at ~N^1.5 each (see the constant block above — fixed K=8
     measured 46x per decade at the 100x probe). The count() here is a
-    bounded driver-coordination action on the cached vector table (the
+    bounded driver-coordination action on the vector table (the
     kmeans-seed discipline), mirrored by the kf CTE in the oracle."""
     import math
 
@@ -128,7 +129,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         to_double_array(F.col("embedding")).alias("v"),
         norm(F.col("embedding")).alias("nrm"),
-    ).cache()  # session-per-query
+    )
     n_seeds = max(_SEM_K_MIN, math.ceil(math.sqrt(vl.count()) / 2))
     seeds = vl.filter(F.col("vec_id") < n_seeds).select(
         F.col("vec_id").cast("int").alias("cluster"), F.col("v").alias("sv")
@@ -143,19 +144,19 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("d"),
     )
     w = Window.partitionBy("vec_id").orderBy("d", "cluster")
-    # Assignment + vector + norm in ONE cached table: the pair join reads
+    # Assignment + vector + norm in ONE pinned table: the pair join reads
     # it on both sides and the final left join a third time — without the
-    # cache the N x K distance fold and the argmin window re-run per
+    # pin the N x K distance fold and the argmin window re-run per
     # consumer (measured 3 scans -> 1).
-    asgv = (
+    asgv = pin(
         dist.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("vec_id", "cluster")
         .join(vl, "vec_id")
-    ).cache()  # session-per-query
+    )
     asg = asgv.select("vec_id", "cluster")
     # spread() the PROBE side of the pair join: under AQE-resized caching
-    # the cached asgv can land in one byte-sized partition, which would
+    # the pinned asgv can land in one byte-sized partition, which would
     # serialize the O(cluster^2) interpreted-HOF cosine stage on one core
     # (measured 2x at sf0.1). The b side broadcasts, so the probe's
     # partitioning alone sets the pair stage's parallelism; at scale the
@@ -250,7 +251,7 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.concat_ws(" ", F.slice(F.col("toks"), F.col("pos"), _SPAN_W))).alias(
             "wh"
         ),
-    ).cache()  # session-per-query
+    )
     dup = (
         h.groupBy("wh")
         .agg(F.count_distinct("doc_id").alias("nd"))
@@ -329,7 +330,8 @@ def capped_shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (containment_dedup_pairs here, containment_root_resolution in
     round9e). Composes `operators/dedup.py:hashed_shingle_table` (the
     cached shared first stage of the shingle family); identical plan
-    across builders, so repeat calls are CacheManager same-plan hits."""
+    across builders, so repeat calls within one query build are
+    CacheManager same-plan hits."""
     from ..operators.dedup import hashed_shingle_table
 
     docs = read_table(spark, sf_dir, "documents")
@@ -341,7 +343,7 @@ def capped_shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") <= _CONT_DF_CAP)
         .select("h")
     )
-    return posting0.join(keep, "h", "left_semi").cache()  # session-per-query
+    return pin(posting0.join(keep, "h", "left_semi"))
 
 
 def containment_shared_pairs(
@@ -357,17 +359,17 @@ def containment_shared_pairs(
     posting = capped_shingle_postings(spark, sf_dir)
     # sizes is referenced twice by root resolution's candidate filter
     # (inner + outer side) and once here — cache the doc-grain frame
-    sizes = posting.groupBy("doc_id").agg(
+    sizes = pin(posting.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("sz")
-    ).cache()  # session-per-query
+    ))
     a = posting.select(F.col("doc_id").alias("inner_doc"), "h")
     b = posting.select(F.col("doc_id").alias("outer_doc"), "h")
-    shared = (
+    shared = pin(  # two containment consumers
         a.join(b, "h")
         .filter(F.col("inner_doc") != F.col("outer_doc"))
         .groupBy("inner_doc", "outer_doc")
         .agg(F.count(F.lit(1)).alias("shared"))
-    ).cache()  # session-per-query (two containment consumers)
+    )
     return shared, sizes
 
 

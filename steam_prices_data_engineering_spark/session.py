@@ -21,7 +21,7 @@ import logging
 import os
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 log = logging.getLogger("steam_prices_spark")
 
@@ -106,3 +106,34 @@ def configure_session(spark: SparkSession) -> SparkSession:
             # session keeps its own value for this key.
             log.warning("configure_session: cannot set %s=%s (%s)", k, v, exc)
     return spark
+
+
+def session_scoped(store: dict, spark: SparkSession) -> dict:
+    """The live session's slot of a per-session `store` (keyed on
+    applicationId), created on first use. Every other application's slot
+    is dropped first: in local mode only one SparkContext runs at a time,
+    so any other id belongs to a stopped session whose plan objects and
+    blocks are already gone."""
+    app = spark.sparkContext.applicationId
+    for stale in [k for k in store if k != app]:
+        del store[stale]
+    return store.setdefault(app, {})
+
+
+# Cached frames of the query being built, per session. A builder pins a
+# frame that feeds the lazy plan it returns, so it cannot unpersist it
+# itself; `plans/registry.py:queries()` releases them before the next build.
+_PINS: dict[str, dict[int, DataFrame]] = {}
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Cache `df` until the session's next query build. Returns it."""
+    session_scoped(_PINS, df.sparkSession)[id(df)] = df
+    return df.cache()
+
+
+def release_pins(spark: SparkSession) -> None:
+    """Unpersist every frame pinned in this session since the last release."""
+    pins = session_scoped(_PINS, spark)
+    while pins:
+        pins.popitem()[1].unpersist()

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import session_scoped
+
 # Canonical schemas for the driver-generated fixture tables (FIXTURES.md §B;
 # verified against the parquet footers).
 TABLE_SCHEMAS: dict[str, T.StructType] = {
@@ -176,9 +178,9 @@ def table_path(sf_dir: str, name: str) -> str:
 # footer-sniff schema inference + file listing + py4j round-trips, ~40-80 ms
 # per call — which the bench pays inside every query's timed region (~1-3
 # read_table calls per builder; VERDICT r10 next-round #4, the fixed
-# per-query overhead floor). Keyed by applicationId so a new session (new
-# JVM state) never sees another session's plan objects.
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+# per-query overhead floor). Per session (`session.session_scoped`): a new
+# session never sees, and does not keep, a stopped session's plan objects.
+_TABLE_MEMO: dict[str, dict[tuple[str, str], DataFrame]] = {}
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -190,12 +192,10 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     fixture files already store the physical types we declare, so in practice
     the casts fold away to no-ops in the optimized plan.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    memo = _TABLE_MEMO.get(key)
-    if memo is not None:
-        return memo
-    df = _read_table_fresh(spark, sf_dir, name)
-    _TABLE_MEMO[key] = df
+    memo = session_scoped(_TABLE_MEMO, spark)
+    df = memo.get((sf_dir, name))
+    if df is None:
+        df = memo[(sf_dir, name)] = _read_table_fresh(spark, sf_dir, name)
     return df
 
 
@@ -235,10 +235,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     peek at the footer with a one-off batch read and adapt. FileStreamSource
     requires a directory — point it at the parent with a glob for the single
     events file."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _STREAM_MEMO.get(key)
-    if memo is not None:
-        return memo
+    memo = session_scoped(_STREAM_MEMO, spark)
+    if sf_dir in memo:
+        return memo[sf_dir]
     path = table_path(sf_dir, "events")
     base_dir, fname = os.path.split(path)
     physical = spark.read.parquet(path).schema["ts"].dataType
@@ -265,7 +264,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     elif not isinstance(physical, T.TimestampType):
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _STREAM_MEMO[key] = df
+    memo[sf_dir] = df
     return df
 
 
@@ -275,7 +274,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every streaming query (VERDICT r10 next-round #5). The memoized object is
 # an un-started lazy streaming plan; each stream started over it runs an
 # independent query.
-_STREAM_MEMO: dict[tuple[str, str], DataFrame] = {}
+_STREAM_MEMO: dict[str, dict[str, DataFrame]] = {}
 
 
 def values_frame(
@@ -283,11 +282,9 @@ def values_frame(
 ) -> DataFrame:
     """Static panel/grid as a SQL VALUES local relation. NOT
     createDataFrame: a LogicalRDD pays a py4j/RDD conversion per builder
-    call (~0.1 s of driver time each) and NEVER sameResult-matches across
-    calls (the CLAUDE.md cache gotcha) — any cache downstream of the
-    panel is invisible to CacheManager on the next invocation, so the
-    bench's warm rep re-executes the whole chain. VALUES plans with equal
-    literals DO match. Float literals get the D suffix — a bare decimal
+    call (~0.1 s of driver time each) and never sameResult-matches across
+    calls; VALUES plans with equal literals do.
+    Float literals get the D suffix — a bare decimal
     would type the column DECIMAL, not DOUBLE (the round7c trap),
     silently changing downstream arithmetic precision. Python ints type
     as INT; wrap values in a cast on the caller side when a BIGINT

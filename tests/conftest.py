@@ -35,21 +35,24 @@ def spark():
 # SAME immutable plan object the sweep collects from, which is exactly the
 # production calling pattern (one build, many consumers). Measured: suite
 # 1867s -> see OPTIMIZATION_r11.md. NOT result caching: collect/noop over
-# the memoized frame recomputes from parquet as before. Keyed on the
-# session's applicationId too, as sources/tables.py keys _TABLE_MEMO: a
-# test that restarts the session never gets a frame bound to a stopped
-# context.
+# the memoized frame recomputes from parquet as before. A frame whose pins
+# (`session.pin`) a later build released is rebuilt. Per session, as
+# sources/tables.py keeps _TABLE_MEMO: a test that restarts the session
+# never gets a frame bound to a stopped context.
 # ---------------------------------------------------------------------------
-_BUILT: dict[tuple[str, str, str], object] = {}
+_BUILT: dict[str, dict[tuple[str, str], tuple]] = {}
 
 
 def built_query(spark, name: str, sf_dir: str = SF_DIR):
     """Build (or fetch the memoized) registered query DataFrame."""
     from steam_prices_data_engineering_spark.plans import registry
+    from steam_prices_data_engineering_spark.session import _PINS, session_scoped
 
-    key = (spark.sparkContext.applicationId, name, sf_dir)
-    df = _BUILT.get(key)
-    if df is None:
+    built = session_scoped(_BUILT, spark)
+    df, pins = built.get((name, sf_dir), (None, []))
+    if df is None or not all(p.is_cached for p in pins):
+        # first build, or a later build released this one's pins: a
+        # rebuild gives the plan a caller of `queries()` would see
         df = registry.queries()[name](spark, sf_dir)
-        _BUILT[key] = df
+        built[(name, sf_dir)] = df, list(session_scoped(_PINS, spark).values())
     return df

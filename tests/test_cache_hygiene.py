@@ -1,23 +1,20 @@
-"""Cache-hygiene census (VERDICT.md r3 task 5).
+"""Cache-lifetime census.
 
 Every `.cache()` / `.persist()` in the package pins executor memory until
-someone unpersists it. Two lifetimes are acceptable, and every site must
-declare which one it has:
+someone unpersists it. Two lifetimes are allowed:
 
-1. **Loop-scoped** — the enclosing function itself calls `.unpersist()`
-   once an action has materialized the successor (the iterative-loop
-   discipline: bpe._learn_merges, iterative.cc_labels).
+1. **Query-scoped** — `session.pin(df)`. The pinned frame feeds the lazy
+   DataFrame a builder returns, so the builder cannot unpersist it; the
+   session records it and `plans/registry.py:queries()` releases it before
+   the next build. `pin` is the only place that calls `.cache()` for this.
 
-2. **Session-per-query** — the cached frame feeds the RETURNED lazy
-   DataFrame, so the builder cannot unpersist before the caller's action
-   runs. The pin lives until the session ends (the driver and bench run
-   one session per query / clear between rounds, so this is bounded in
-   practice, but a long-lived interactive session accumulates pins).
-   These sites carry a `# session-per-query` tag within two lines of the
-   cache call, which is the documented opt-in to that trade.
+2. **Loop-scoped** — the function that caches a frame unpersists it
+   itself, directly or through a plain alias (`prev = cur` ...
+   `prev.unpersist()`): the iterative-loop discipline of
+   `bpe._learn_merges` and `iterative.cc_labels`.
 
-This test fails on any cache site with NEITHER an unpersist in the same
-function NOR the tag — so new caches must pick a lifetime explicitly.
+The package never calls `catalog.clearCache()`: a query must not drop
+cached frames it does not own, such as a user's own caches.
 """
 
 from __future__ import annotations
@@ -27,69 +24,101 @@ from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "steam_prices_data_engineering_spark"
 
-TAG = "session-per-query"
 CACHE_METHODS = {"cache", "persist"}
 
 
-def _cache_sites(tree: ast.AST) -> list[int]:
-    """Line numbers of every .cache()/.persist() call."""
-    out = []
-    for node in ast.walk(tree):
-        if (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr in CACHE_METHODS
-        ):
-            # end_lineno of the func attribute = the line holding the
-            # literal `.cache` token (chains start lines earlier).
-            out.append(node.func.end_lineno or node.lineno)
-    return out
-
-
-def _function_spans(tree: ast.AST) -> list[tuple[int, int]]:
-    spans = []
+def _functions(tree: ast.AST):
     for node in ast.walk(tree):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            spans.append((node.lineno, node.end_lineno))
-    return spans
+            yield node
 
 
-def _unpersist_lines(tree: ast.AST) -> list[int]:
-    out = []
-    for node in ast.walk(tree):
-        if (
-            isinstance(node, ast.Call)
-            and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "unpersist"
-        ):
-            out.append(node.lineno)
-    return out
+def _own_nodes(fn):
+    """Nodes of `fn`'s body, not of the functions nested in it."""
+    stack = list(fn.body)
+    while stack:
+        node = stack.pop()
+        yield node
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            stack.extend(ast.iter_child_nodes(node))
 
 
-def test_every_cache_site_declares_its_lifetime():
-    offenders: list[str] = []
-    for path in sorted(PKG.rglob("*.py")):
-        src = path.read_text()
-        if ".cache()" not in src and ".persist(" not in src:
-            continue
-        tree = ast.parse(src)
-        lines = src.splitlines()
-        unpersists = _unpersist_lines(tree)
-        spans = _function_spans(tree)
-        for ln in _cache_sites(tree):
-            # innermost function containing the cache call
-            enclosing = [
-                (a, b) for a, b in spans if a <= ln <= b
-            ]
-            if enclosing:
-                a, b = max(enclosing, key=lambda s: s[0])
-                if any(a <= u <= b for u in unpersists):
-                    continue  # loop-scoped lifetime
-            window = lines[max(0, ln - 3) : min(len(lines), ln + 2)]
-            if any(TAG in w for w in window):
-                continue  # declared session-per-query
-            offenders.append(f"{path.relative_to(PKG.parent)}:{ln}")
-    assert not offenders, (
-        "cache sites with no unpersist in the enclosing function and no "
-        f"'# {TAG}' tag within 2 lines:\n  " + "\n  ".join(offenders)
+def _method_calls(nodes, names):
+    return [
+        n
+        for n in nodes
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr in names
+    ]
+
+
+def _unpersists_itself(fn, call) -> bool:
+    """The cache call's result is bound to a name that this function (or an
+    alias of it) unpersists."""
+    nodes = list(_own_nodes(fn))
+    target = next(
+        (
+            n.targets[0].id
+            for n in nodes
+            if isinstance(n, ast.Assign)
+            and n.value is call
+            and len(n.targets) == 1
+            and isinstance(n.targets[0], ast.Name)
+        ),
+        None,
     )
+    if target is None:
+        return False
+    aliases = {
+        (n.value.id, n.targets[0].id)
+        for n in nodes
+        if isinstance(n, ast.Assign)
+        and isinstance(n.value, ast.Name)
+        and len(n.targets) == 1
+        and isinstance(n.targets[0], ast.Name)
+    }
+    names, grew = {target}, True
+    while grew:
+        new = {dst for src, dst in aliases if src in names} - names
+        names |= new
+        grew = bool(new)
+    return any(
+        isinstance(c.func.value, ast.Name) and c.func.value.id in names
+        for c in _method_calls(nodes, {"unpersist"})
+    )
+
+
+def _offenders() -> tuple[list[str], list[str]]:
+    caches, clears = [], []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG.parent)
+        tree = ast.parse(path.read_text())
+        owner = {
+            id(n): fn for fn in _functions(tree) for n in _own_nodes(fn)
+        }
+        for call in _method_calls(ast.walk(tree), CACHE_METHODS):
+            fn = owner.get(id(call))  # None at module level
+            if fn is not None and (
+                (rel.name == "session.py" and fn.name == "pin")
+                or _unpersists_itself(fn, call)
+            ):
+                continue
+            caches.append(f"{rel}:{call.func.end_lineno}")
+        clears += [
+            f"{rel}:{c.lineno}" for c in _method_calls(ast.walk(tree), {"clearCache"})
+        ]
+    return caches, clears
+
+
+def test_every_cache_is_pinned_or_loop_scoped():
+    caches, _ = _offenders()
+    assert not caches, (
+        "cache sites outside session.pin whose function does not unpersist "
+        "the cached frame:\n  " + "\n  ".join(caches)
+    )
+
+
+def test_package_never_clears_the_whole_cache():
+    _, clears = _offenders()
+    assert not clears, "catalog.clearCache() in the package:\n  " + "\n  ".join(clears)
