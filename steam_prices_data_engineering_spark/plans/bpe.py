@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..session import pin
 from ..sources.tables import read_table
 from .registry import register
 
@@ -85,7 +86,7 @@ def _learn_merges(
     `seq` column, learned merges). Shared by the trainer query and the
     apply/compression query so both operate on the SAME learned merges."""
     d = read_table(spark, sf_dir, "documents")
-    words = (
+    words = pin(
         d.select(F.explode(tokens(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -98,7 +99,6 @@ def _learn_merges(
                 F.lit(" "),
             ).alias("seq"),
         )
-        .cache()
     )
 
     merges = []
@@ -140,21 +140,22 @@ def _learn_merges(
             break
         a, b, c = best[0].a, best[0].b, best[0].c
         merges.append((it, a, b, a + b, int(c)))
-        nxt = words.withColumn(
-            "seq",
-            F.replace(
-                F.col("seq"),
-                F.lit(f" {a} {b} "),
-                F.lit(f" {a}{b} "),
-            ),
-        ).cache()
+        nxt = pin(
+            words.withColumn(
+                "seq",
+                F.replace(
+                    F.col("seq"),
+                    F.lit(f" {a} {b} "),
+                    F.lit(f" {a}{b} "),
+                ),
+            )
+        )
         prev = words
         words = nxt
     # `prev` (the last superseded generation) stays cached until the final
     # vocab is materialized by the CALLER's first action — it is the final
     # table's direct parent, so dropping it here would force a full
-    # rebuild. Both tables are vocab-sized; callers that finish with the
-    # vocab (the trainer) unpersist explicitly.
+    # rebuild. Both are pinned, so the next query build releases them.
     return words, merges
 
 
@@ -175,8 +176,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     string replace on the delimited symbol sequence — greedy
     non-overlapping left-to-right in both engines, so e.g. 'aaa' under
     merge (a,a) becomes [aa, a] identically."""
-    words, merges = _learn_merges(spark, sf_dir)
-    words.unpersist()  # trainer only needs the collected merge rows
+    _, merges = _learn_merges(spark, sf_dir)
     return spark.createDataFrame(merges, _MERGES_SCHEMA)
 
 

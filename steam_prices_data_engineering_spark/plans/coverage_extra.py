@@ -15,6 +15,7 @@ from ..functions.rounding import dround, dround_sql as R
 from ..functions.text import token_hash_array
 from ..functions.vectors import cosine
 from ..operators.dedup import simhash_table
+from ..session import landing
 from ..sources.tables import read_table, spread
 from .registry import register
 
@@ -244,8 +245,6 @@ def simsearch_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 # original parquet — proving the CSV hop is lossless.
 # ---------------------------------------------------------------------------
 
-_CSV_DIR = "/root/repo/.scratch/nation_csv"
-
 _CSV_SQL = """
 SELECT r_name, CAST(count(*) AS BIGINT) AS n_nations
 FROM nation JOIN region ON n_regionkey = r_regionkey
@@ -260,7 +259,8 @@ def csv_source_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     select -> broadcast join). Catalyst prunes the unused n_name column out
     of the CSV scan (ReadSchema shows only the 2 needed columns)."""
     n = read_table(spark, sf_dir, "nation")
-    n.write.mode("overwrite").option("header", True).csv(_CSV_DIR)
+    csv_dir = landing(spark, "nation_csv", sf_dir)
+    n.write.option("header", True).csv(csv_dir)
     schema = T.StructType(
         [
             T.StructField("n_nationkey", T.IntegerType()),
@@ -271,7 +271,7 @@ def csv_source_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_csv = (
         spark.read.schema(schema)
         .option("header", True)
-        .csv(_CSV_DIR)
+        .csv(csv_dir)
         .select("n_nationkey", "n_regionkey")
     )
     r = read_table(spark, sf_dir, "region")

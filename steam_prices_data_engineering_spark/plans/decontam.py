@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround_sql as R
+from ..session import landing
 from ..sources.tables import read_table, spread, table_path
 from .registry import register
 
@@ -112,8 +113,6 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the oracle aggregates the original parquet — the JSON hop must be lossless.
 # ---------------------------------------------------------------------------
 
-_JSONL_DIR = "/root/repo/.scratch/events_jsonl"
-
 _JSONL_SQL = """
 SELECT event_type, CAST(count(*) AS BIGINT) AS n,
        CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
@@ -132,7 +131,8 @@ def jsonl_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    e.write.mode("overwrite").json(_JSONL_DIR)
+    jsonl_dir = landing(spark, "events_jsonl", sf_dir)
+    e.write.json(jsonl_dir)
     schema = T.StructType(
         [
             T.StructField("event_id", T.LongType()),
@@ -140,7 +140,7 @@ def jsonl_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("event_type", T.StringType()),
         ]
     )
-    back = spark.read.schema(schema).json(_JSONL_DIR)
+    back = spark.read.schema(schema).json(jsonl_dir)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("user_id").alias("n_users"),

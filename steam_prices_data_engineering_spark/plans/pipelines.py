@@ -39,6 +39,7 @@ from ..functions.prices import (
 )
 from ..functions.rounding import dround, dround_sql as R
 from ..operators.deviation import group_vs_global_avg
+from ..session import landing
 from ..sources.steam_api_source import API_PAYLOADS as _API_PAYLOADS
 from ..sources.steam_api_source import register_steam_source
 from ..sources.tables import read_table, values_frame
@@ -424,8 +425,6 @@ def streaming_steam_source_extract(spark: SparkSession, sf_dir: str) -> DataFram
 # Partitioned parquet sink + latest-run discovery (S7/S9 write, S6/O32 read).
 # ---------------------------------------------------------------------------
 
-_SINK_DIR = "/root/repo/.scratch/yearly_run_parts"
-
 _SINK_SQL = f"""
 WITH yearly AS (
     SELECT CAST(year(o_orderdate) AS INTEGER) AS yr,
@@ -453,13 +452,9 @@ def sink_partitioned_latest_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orders"),
         dround(F.sum("o_totalprice"), 2).alias("total"),
     )
-    (
-        yearly.repartition("yr")
-        .write.mode("overwrite")
-        .partitionBy("yr")
-        .parquet(_SINK_DIR)
-    )
-    landed = spark.read.parquet(_SINK_DIR)
+    sink = landing(spark, "yearly_run_parts", sf_dir)
+    yearly.repartition("yr").write.partitionBy("yr").parquet(sink)
+    landed = spark.read.parquet(sink)
     latest = landed.agg(F.max("yr").alias("latest_yr"))
     return (
         landed.join(F.broadcast(latest), landed.yr == latest.latest_yr)

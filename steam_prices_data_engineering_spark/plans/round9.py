@@ -36,14 +36,12 @@ same engine.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
-from ..session import pin
+from ..session import landing, pin
 from ..sources.tables import TABLE_SCHEMAS, read_table
 from ..streaming.sizing import run_stream
 from .registry import register
@@ -210,8 +208,8 @@ def longest_dup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a float sum feeding a dround-compared output can land on a rounding
 # half-boundary (the rolling_origin_backtest lesson, CLAUDE.md).
 #
-# Scale shape: per-invocation scratch dir (no shared-landing flock
-# hazard); state is per (hour, event_type) — the production form adds a
+# Scale shape: the source files and checkpoint sit in a session landing
+# (`session.landing`); state is per (hour, event_type) — the production form adds a
 # watermark to bound it; state partitions are sized from the landing
 # (streaming/sizing.py).
 # ===========================================================================
@@ -286,48 +284,45 @@ def streaming_restart_carryover(
     ev = read_table(spark, sf_dir, "events").filter(
         F.col("event_id").isNotNull()
     )
-    scratch = tempfile.mkdtemp(prefix="spde_restart_")
-    try:
-        src = os.path.join(scratch, "src")
-        ckpt = os.path.join(scratch, "ckpt")
-        evens = ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == 0)
-        odds = ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == 1)
-        # both parity counts in ONE scan (was two .count() jobs = two
-        # full passes over events; guide §1.2 — don't compute twice)
-        parity_counts = {
-            r["p"]: r["n"]
-            for r in ev.groupBy(
-                F.pmod(F.col("event_id"), F.lit(2)).alias("p")
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_even = parity_counts.get(0, 0)
-        n_odd = parity_counts.get(1, 0)
-        evens.write.mode("append").parquet(src)
-        run1 = _restart_run_once(spark, src, ckpt)
-        n1 = run1.agg(F.sum("n_events")).collect()[0][0] or 0
-        odds.write.mode("append").parquet(src)
-        run2 = _restart_run_once(spark, src, ckpt)
-        n2 = run2.agg(F.sum("n_events")).collect()[0][0] or 0
-        # exact carryover proof (empty-input safe: 0 == 0 on empty
-        # events): run 1 saw exactly the even batch; the restarted run's
-        # state covers even + odd — a rebuilt state would total only
-        # n_odd.
-        if n1 != n_even or n2 != n_even + n_odd:
-            raise RuntimeError(
-                f"checkpoint carryover violated: run1 totals {n1} "
-                f"(expected {n_even}), restarted run totals {n2} "
-                f"(expected {n_even + n_odd}) — state was rebuilt or "
-                "batch 2 leaked into run 1"
-            )
-        return run2.select(
-            "hour_start", "event_type", "n_events", "sum_value_micro"
+    scratch = landing(spark, "restart_carryover", sf_dir)
+    src = os.path.join(scratch, "src")
+    ckpt = os.path.join(scratch, "ckpt")
+    evens = ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == 0)
+    odds = ev.filter(F.pmod(F.col("event_id"), F.lit(2)) == 1)
+    # both parity counts in ONE scan (was two .count() jobs = two
+    # full passes over events; guide §1.2 — don't compute twice)
+    parity_counts = {
+        r["p"]: r["n"]
+        for r in ev.groupBy(
+            F.pmod(F.col("event_id"), F.lit(2)).alias("p")
         )
-    finally:
-        # the memory sink holds its rows driver-side — the returned
-        # frame does not read the scratch files or checkpoint again
-        shutil.rmtree(scratch, ignore_errors=True)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    n_even = parity_counts.get(0, 0)
+    n_odd = parity_counts.get(1, 0)
+    evens.write.mode("append").parquet(src)
+    run1 = _restart_run_once(spark, src, ckpt)
+    n1 = run1.agg(F.sum("n_events")).collect()[0][0] or 0
+    odds.write.mode("append").parquet(src)
+    run2 = _restart_run_once(spark, src, ckpt)
+    n2 = run2.agg(F.sum("n_events")).collect()[0][0] or 0
+    # exact carryover proof (empty-input safe: 0 == 0 on empty
+    # events): run 1 saw exactly the even batch; the restarted run's
+    # state covers even + odd — a rebuilt state would total only
+    # n_odd.
+    if n1 != n_even or n2 != n_even + n_odd:
+        raise RuntimeError(
+            f"checkpoint carryover violated: run1 totals {n1} "
+            f"(expected {n_even}), restarted run totals {n2} "
+            f"(expected {n_even + n_odd}) — state was rebuilt or "
+            "batch 2 leaked into run 1"
+        )
+    # the memory sink holds its rows driver-side — the returned frame
+    # does not read the landing or checkpoint again
+    return run2.select(
+        "hour_start", "event_type", "n_events", "sum_value_micro"
+    )
 
 
 # ===========================================================================
@@ -619,8 +614,8 @@ def embedding_source_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape: the state read is partition-parallel over the store's
 # own files (no shuffle until the bounded event_type rollup); the
-# streaming run is the same per-invocation-scratch discipline as
-# streaming_restart_carryover.
+# streaming run lands its source and checkpoint in a session landing, as
+# streaming_restart_carryover does.
 # ===========================================================================
 
 _SSI_SQL = """
@@ -649,48 +644,45 @@ def streaming_state_introspection(
     source; equals the batch hourly rollup (complete-mode state holds
     every window after one availableNow batch)."""
     ev = read_table(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="spde_ssi_")
-    try:
-        src = os.path.join(scratch, "src")
-        ckpt = os.path.join(scratch, "ckpt")
-        ev.write.parquet(src)
-        stream = (
-            spark.readStream.schema(TABLE_SCHEMAS["events"])
-            .format("parquet")
-            .load(src)
-        )
-        # (hour, event_type) state is hundreds of keys: state sized from
-        # the landing (floor=8) cuts both the commit I/O of the run AND
-        # the statestore read-back (one state file per partition).
-        # partition_id never reaches the compared output (CLAUDE.md).
-        run_stream(
-            stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n")),
-            "complete",
-            src,
-            floor=8,
-            checkpoint=ckpt,
-        )
-        state = spark.read.format("statestore").load(ckpt)
-        audited = state.groupBy(
-            F.col("key.event_type").alias("event_type")
-        ).agg(
-            F.count(F.lit(1)).cast("long").alias("n_state_rows"),
-            F.sum(F.col("value.count")).cast("long").alias("sum_state_count"),
-            F.min(F.col("key.window.start").cast("long"))
-            .cast("long")
-            .alias("first_hour"),
-            F.max(F.col("key.window.start").cast("long"))
-            .cast("long")
-            .alias("last_hour"),
-        )
-        # the statestore read is FILE-backed and lazy — materialize the
-        # bounded (event_type-grain) audit before the finally deletes
-        # the checkpoint, and hand back a local relation
-        rows = audited.collect()
-        return spark.createDataFrame(rows, audited.schema)
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
+    scratch = landing(spark, "state_introspection", sf_dir)
+    src = os.path.join(scratch, "src")
+    ckpt = os.path.join(scratch, "ckpt")
+    ev.write.parquet(src)
+    stream = (
+        spark.readStream.schema(TABLE_SCHEMAS["events"])
+        .format("parquet")
+        .load(src)
+    )
+    # (hour, event_type) state is hundreds of keys: state sized from
+    # the landing (floor=8) cuts both the commit I/O of the run AND
+    # the statestore read-back (one state file per partition).
+    # partition_id never reaches the compared output (CLAUDE.md).
+    run_stream(
+        stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n")),
+        "complete",
+        src,
+        floor=8,
+        checkpoint=ckpt,
+    )
+    state = spark.read.format("statestore").load(ckpt)
+    audited = state.groupBy(
+        F.col("key.event_type").alias("event_type")
+    ).agg(
+        F.count(F.lit(1)).cast("long").alias("n_state_rows"),
+        F.sum(F.col("value.count")).cast("long").alias("sum_state_count"),
+        F.min(F.col("key.window.start").cast("long"))
+        .cast("long")
+        .alias("first_hour"),
+        F.max(F.col("key.window.start").cast("long"))
+        .cast("long")
+        .alias("last_hour"),
+    )
+    # the statestore read is FILE-backed and lazy, and the next build of
+    # this query removes the checkpoint — materialize the bounded
+    # (event_type-grain) audit and hand back a local relation
+    rows = audited.collect()
+    return spark.createDataFrame(rows, audited.schema)
 
 # ===========================================================================
 # Pairwise longest-shared-span attribution (round 9b): the TRUE

@@ -7,11 +7,15 @@ single logical key exceeds what one task should hold.)
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.rounding import dround, dround_sql as R
+from ..session import landing
+from ..sources.io import _fs_and_path
 from ..sources.tables import events_stream as _events_stream
 from ..sources.tables import read_table, table_path
 from ..streaming.sizing import run_stream, start_sized
@@ -457,9 +461,6 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaying a batch rewrites exactly its own partition (idempotent).
     One availableNow batch => the read-back table equals the batch GROUP
     BY oracle."""
-    import shutil
-    import tempfile
-
     agg = (
         _events_stream(spark, sf_dir)
         .groupBy("event_type")
@@ -468,7 +469,7 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             dround(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    out_dir = tempfile.mkdtemp(prefix="spde_febatch_")
+    out_dir = landing(spark, "foreachbatch_sink", sf_dir)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -484,16 +485,14 @@ def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .outputMode("complete")
         .trigger(availableNow=True)
     )
-    try:
-        start_sized(writer, table_path(sf_dir, "events")).awaitTermination()
-        # the read-back is FILE-backed and lazy: collect the bounded
-        # (event_type-grain) table before the finally removes out_dir
-        result = spark.read.parquet(out_dir).select(
-            "event_type", "n_events", "sum_value"
-        )
-        return spark.createDataFrame(result.collect(), result.schema)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    start_sized(writer, table_path(sf_dir, "events")).awaitTermination()
+    # the read-back is FILE-backed and lazy, and the next build of this
+    # query removes out_dir: hand back the bounded (event_type-grain)
+    # table as a local relation
+    result = spark.read.parquet(out_dir).select(
+        "event_type", "n_events", "sum_value"
+    )
+    return spark.createDataFrame(result.collect(), result.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -802,76 +801,30 @@ GROUP BY o_orderstatus
 
 def _rebuild_bucketed(spark: SparkSession, sf_dir: str, name: str,
                       df: DataFrame, key: str) -> DataFrame:
-    """Land `df` as a bucketed+sorted catalog table and return it —
-    REUSING an existing landing for the same sf_dir (a `_source` marker
-    records provenance), because the landing write is the cost that is
-    "paid once, amortized over every join": re-landing per invocation
-    would make every bench/oracle run time the write instead of the
-    zero-shuffle join it demonstrates.
+    """Land `df` as a bucketed+sorted catalog table and return it.
 
-    The table is EXTERNAL with an explicit repo-local location — the
-    session's default warehouse is cwd-relative and the driver's cwd is
-    not guaranteed writable. The in-memory catalog forgets tables between
-    sessions but the directory persists; clear a stale location before
-    rewriting so saveAsTable can't hit LOCATION_ALREADY_EXISTS.
-
-    Concurrency: the landing is PER sf_dir (name suffix), so sessions on
-    different scale factors never touch each other's files — a shared
-    location let a sweep at sf0.01 rmtree the landing mid-read of a
-    pytest session at sf0.001 (observed: ROWCOUNT 0). Same-sf first
-    builds additionally serialize on an exclusive flock; once a landing
-    with a matching marker exists it is only ever REUSED, never
-    destroyed, so there is no rmtree path after first build."""
-    import fcntl
-    import os
-    import re
-    import shutil
-
-    sfkey = re.sub(r"\W+", "_", sf_dir).strip("_")
-    name = f"{name}_{sfkey}"
-    loc = f"/root/repo/.scratch/bucketed/{name}"
-    marker = f"/root/repo/.scratch/bucketed/{name}.source"
-    lockpath = f"/root/repo/.scratch/bucketed/{name}.lock"
-    os.makedirs(os.path.dirname(lockpath), exist_ok=True)
-
-    def landed() -> bool:
-        try:
-            return open(marker).read() == sf_dir
-        except OSError:
-            return False
-
-    if landed() and spark.catalog.tableExists(name):
-        return spark.table(name)
-    with open(lockpath, "w") as lock:
-        fcntl.flock(lock, fcntl.LOCK_EX)
-        if landed():
-            # Another process landed it (or this session's catalog merely
-            # forgot the table): register the EXISTING files via DDL —
-            # zero writes, so a concurrent reader's scan can never see a
-            # half-rewritten landing.
-            if not spark.catalog.tableExists(name):
-                cols = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}"
-                    for f in df.schema.fields
-                )
-                spark.sql(
-                    f"CREATE TABLE {name} ({cols}) USING parquet "
-                    f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-                    f"INTO 8 BUCKETS LOCATION '{loc}'"
-                )
-            return spark.table(name)
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(loc, ignore_errors=True)
+    The landing write is the cost the zero-shuffle join amortizes, so a
+    session reuses its table across builds, but only while the sources
+    are unchanged: the table name carries the sf key and the Hadoop
+    FileSystem's (modification time, length) of orders.parquet and
+    lineitem.parquet, so a fixture regenerated in place names a new table
+    and lands again. The table is EXTERNAL on a `session.landing` path
+    (the default warehouse is cwd-relative, and the cwd need not be
+    writable), which Spark deletes with the session."""
+    stamp = [sf_dir]
+    for source in ("orders", "lineitem"):
+        fs, path = _fs_and_path(spark, table_path(sf_dir, source))
+        status = fs.getFileStatus(path)
+        stamp += [status.getModificationTime(), status.getLen()]
+    table = re.sub(r"\W+", "_", "_".join(map(str, [name, *stamp])))
+    if not spark.catalog.tableExists(table):
         (
-            df.write.mode("overwrite")
-            .option("path", loc)
+            df.write.option("path", landing(spark, name, sf_dir))
             .bucketBy(8, key)
             .sortBy(key)
-            .saveAsTable(name)
+            .saveAsTable(table)
         )
-        with open(marker, "w") as fh:
-            fh.write(sf_dir)
-    return spark.table(name)
+    return spark.table(table)
 
 
 @register("bucketed_join_no_shuffle", _BUCKETED_JOIN_SQL)

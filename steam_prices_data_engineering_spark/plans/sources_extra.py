@@ -17,12 +17,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.rounding import dround, dround_sql as R
+from ..session import landing
 from ..sources.tables import read_table
 from .registry import register
-
-_ORC_DIR = "/root/repo/.scratch/orders_orc"
-_TEXT_DIR = "/root/repo/.scratch/documents_text"
-
 
 _ORC_SQL = f"""
 SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_orders,
@@ -41,7 +38,8 @@ def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    o.write.mode("overwrite").orc(_ORC_DIR)
+    orc_dir = landing(spark, "orders_orc", sf_dir)
+    o.write.orc(orc_dir)
     schema = T.StructType(
         [
             T.StructField("o_orderkey", T.LongType()),
@@ -49,7 +47,7 @@ def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("o_totalprice", T.DoubleType()),
         ]
     )
-    back = spark.read.schema(schema).orc(_ORC_DIR)
+    back = spark.read.schema(schema).orc(orc_dir)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         dround(F.sum("o_totalprice"), 2).alias("total"),
@@ -75,8 +73,9 @@ def text_source_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = read_table(spark, sf_dir, "documents").select(
         F.concat_ws("\t", "lang", "source").alias("value")
     )
-    d.write.mode("overwrite").text(_TEXT_DIR)
-    back = spark.read.text(_TEXT_DIR)
+    text_dir = landing(spark, "documents_text", sf_dir)
+    d.write.text(text_dir)
+    back = spark.read.text(text_dir)
     parts = F.split(F.col("value"), "\t")
     return (
         back.select(
@@ -94,7 +93,6 @@ def text_source_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # binaryFile source: the file-per-record ingestion path for multimodal data.
 # ---------------------------------------------------------------------------
 
-_BINARY_DIR = "/root/repo/.scratch/documents_bin"
 _BINARY_MAX_ID = 64  # bounded, sf-independent landing set
 
 _BINARYFILE_SQL = f"""
@@ -120,19 +118,18 @@ def binaryfile_source_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant across scale factors). Oracle recomputes both features from
     the canonical text, proving the bytes round-tripped unchanged."""
     import os
-    import shutil
 
     d = read_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _BINARY_MAX_ID
     )
     rows = d.select("doc_id", "text").collect()  # bounded: < 64 records
-    shutil.rmtree(_BINARY_DIR, ignore_errors=True)
-    os.makedirs(_BINARY_DIR, exist_ok=True)
+    bin_dir = landing(spark, "documents_bin", sf_dir)
+    os.makedirs(bin_dir)
     for r in rows:
-        with open(os.path.join(_BINARY_DIR, f"doc_{r.doc_id:05d}.bin"), "wb") as fh:
+        with open(os.path.join(bin_dir, f"doc_{r.doc_id:05d}.bin"), "wb") as fh:
             fh.write(r.text.encode("utf-8"))
 
-    back = spark.read.format("binaryFile").load(_BINARY_DIR)
+    back = spark.read.format("binaryFile").load(bin_dir)
     return back.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin$", 1)
         .cast("long")
@@ -141,8 +138,6 @@ def binaryfile_source_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.col("content")).alias("content_md5"),
     )
 
-
-_XML_DIR = "/root/repo/.scratch/supplier_xml"
 
 _XML_SQL = f"""
 SELECT s_nationkey, CAST(count(*) AS BIGINT) AS n_suppliers,
@@ -163,9 +158,8 @@ def xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = read_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey", "s_acctbal"
     )
-    s.write.mode("overwrite").format("xml").option("rowTag", "supplier").save(
-        _XML_DIR
-    )
+    xml_dir = landing(spark, "supplier_xml", sf_dir)
+    s.write.format("xml").option("rowTag", "supplier").save(xml_dir)
     schema = T.StructType(
         [
             T.StructField("s_suppkey", T.LongType()),
@@ -177,7 +171,7 @@ def xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.schema(schema)
         .format("xml")
         .option("rowTag", "supplier")
-        .load(_XML_DIR)
+        .load(xml_dir)
     )
     return back.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n_suppliers"),

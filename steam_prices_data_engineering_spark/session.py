@@ -19,6 +19,8 @@ from __future__ import annotations
 
 import logging
 import os
+import re
+import shutil
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -137,3 +139,20 @@ def release_pins(spark: SparkSession) -> None:
     pins = session_scoped(_PINS, spark)
     while pins:
         pins.popitem()[1].unpersist()
+
+
+def landing(spark: SparkSession, name: str, sf_dir: str) -> str:
+    """A path, not yet existing, where a builder lands scratch files named
+    `name` for the fixture at `sf_dir`; whatever an earlier build in this
+    session left there is removed first.
+
+    Every landing lives under the session's `SparkFiles` root, which is
+    under `SPARK_LOCAL_DIRS` and which Spark deletes on `spark.stop()`, so
+    no landing outlives its session and two sessions never share one. The
+    path is keyed on `sf_dir`, so builds at two scale factors in one
+    session never read each other's files."""
+    root = spark.sparkContext._jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    sf_key = re.sub(r"\W+", "_", sf_dir).strip("_")
+    path = os.path.join(root, "landings", f"{name}_{sf_key}")
+    shutil.rmtree(path, ignore_errors=True)
+    return path

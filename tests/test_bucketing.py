@@ -13,28 +13,23 @@ from steam_prices_data_engineering_spark.sources.tables import read_table
 SF = "/root/testdata/sf0.001"
 
 
-def test_bucketed_join_has_no_shuffle(spark):
+def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     o = read_table(spark, SF, "orders").select("o_orderkey", "o_totalprice")
     l = read_table(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    # The in-memory catalog forgets tables between sessions but their
-    # warehouse directories persist; clear them so saveAsTable can't hit
-    # LOCATION_ALREADY_EXISTS.
-    import shutil
-    from urllib.parse import urlparse
-
-    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for t in ("b_orders", "b_lineitem"):
-        shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
+    # EXTERNAL tables under tmp_path: the default warehouse is relative to
+    # the working directory, which may be the checkout.
     (
         o.write.mode("overwrite")
+        .option("path", str(tmp_path / "b_orders"))
         .bucketBy(8, "o_orderkey")
         .sortBy("o_orderkey")
         .saveAsTable("b_orders")
     )
     (
         l.write.mode("overwrite")
+        .option("path", str(tmp_path / "b_lineitem"))
         .bucketBy(8, "l_orderkey")
         .sortBy("l_orderkey")
         .saveAsTable("b_lineitem")

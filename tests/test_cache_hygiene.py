@@ -11,7 +11,7 @@ someone unpersists it. Two lifetimes are allowed:
 2. **Loop-scoped** — the function that caches a frame unpersists it
    itself, directly or through a plain alias (`prev = cur` ...
    `prev.unpersist()`): the iterative-loop discipline of
-   `bpe._learn_merges` and `iterative.cc_labels`.
+   `iterative.cc_labels`.
 
 The package never calls `catalog.clearCache()`: a query must not drop
 cached frames it does not own, such as a user's own caches.

@@ -663,11 +663,15 @@ def test_partitioned_landing_prunes_to_one_partition(spark):
     landing must become a PartitionFilter (directory pruning) — no data
     filter, no scan of other runs. This is the scan-side proof of the
     S6/O32 'latest run' design at scale."""
-    from steam_prices_data_engineering_spark.plans.pipelines import _SINK_DIR
+    import os
 
-    # Materialize the landing via the registered query, then re-read.
-    registry.queries()["sink_partitioned_latest_run"](spark, SF).collect()
-    landed = spark.read.parquet(_SINK_DIR)
+    # Materialize the landing via the registered query, then re-read the
+    # directory its scan reads from: <landing>/yr=<year>/part-*.parquet.
+    built = registry.queries()["sink_partitioned_latest_run"](spark, SF)
+    built.collect()
+    sink = {os.path.dirname(os.path.dirname(f)) for f in built.inputFiles()}
+    assert len(sink) == 1, sink
+    landed = spark.read.parquet(sink.pop())
     yrs = [r.yr for r in landed.select("yr").distinct().collect()]
     pick = sorted(yrs)[0]
     df = landed.filter(f"yr = {pick}")

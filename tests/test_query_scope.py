@@ -7,6 +7,7 @@ sessions (`session.session_scoped`)."""
 
 from __future__ import annotations
 
+import pytest
 from conftest import SF_DIR
 
 from steam_prices_data_engineering_spark import session
@@ -83,3 +84,17 @@ def test_foreachbatch_sink_result_survives_a_cache_clear(spark):
     before = sorted(df.collect())
     spark.catalog.clearCache()
     assert sorted(df.collect()) == before
+
+
+@pytest.mark.parametrize(
+    "name", ["bpe_train_merges", "bpe_apply_compression", "bpe_roundtrip_fidelity"]
+)
+def test_next_query_releases_the_bpe_vocab_generations(spark, name):
+    """The BPE learner caches one vocab generation per merge; the next
+    build releases the ones its loop did not."""
+    before = frozenset(_persistent_rdds(spark))
+    _build_and_collect(spark, name)
+    left = _persistent_rdds(spark, before)
+    assert left, "the learner cached no vocab generation"
+    registry.queries()[A](spark, SF_DIR)
+    assert not _persistent_rdds(spark, before) & left
