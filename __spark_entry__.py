@@ -36,7 +36,8 @@ def entry(spark: SparkSession) -> DataFrame:
     (world_map_transformer.py:120-125) on the fixture star schema.
     """
     configure_session(spark)
-    return _registry.flagship_nation_price_dev(spark, "/root/testdata/sf0.001")
+    flagship = _registry.queries()["flagship_nation_price_dev"]
+    return flagship(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

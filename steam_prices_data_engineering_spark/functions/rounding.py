@@ -10,6 +10,11 @@ rounding scale therefore hash-mismatches between the engines.
 10^s`` is pure IEEE-754 double arithmetic, bit-identical on the JVM and in
 C++ given the same input double. Both sides of every oracle comparison use
 this (Spark via `dround`, SQL via `dround_sql`).
+
+``dround_sql`` casts the floor to DOUBLE: Spark's ``floor`` returns BIGINT,
+and BIGINT divided by the DECIMAL literal ``10000.0`` types DECIMAL(28,7) in
+Spark SQL where DuckDB gives DOUBLE. With the cast both engines type the
+text DOUBLE and compute the same double as the Column ``dround``.
 """
 
 from __future__ import annotations
@@ -25,4 +30,4 @@ def dround(col: Column, scale: int) -> Column:
 
 def dround_sql(expr: str, scale: int) -> str:
     f = float(10**scale)
-    return f"floor(({expr}) * {f} + 0.5) / {f}"
+    return f"CAST(floor(({expr}) * {f} + 0.5) AS DOUBLE) / {f}"

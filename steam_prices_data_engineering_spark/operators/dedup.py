@@ -47,13 +47,6 @@ MINHASH_PARAMS: tuple[tuple[int, int], ...] = (
 MINHASH_BAND_ROWS = 2
 
 
-def exact_dedup_groups(df: DataFrame, key_col: str, id_col: str) -> DataFrame:
-    """One row per distinct key: deterministic keeper id + multiplicity."""
-    return df.groupBy(key_col).agg(
-        F.min(id_col).alias("keeper_id"), F.count(F.lit(1)).alias("n_copies")
-    )
-
-
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     """Keep exactly the min-id row per key group (deterministic, unlike
     dropDuplicates whose survivor depends on partition order)."""

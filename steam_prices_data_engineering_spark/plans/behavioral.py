@@ -16,9 +16,8 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.text import tokens
-from ..operators.similarity import group_pairs
 from ..sources.tables import read_table, values_frame
-from .registry import register
+from .registry import register, register_sql
 
 # ---------------------------------------------------------------------------
 # Ordered funnel: view -> click -> purchase. Stage N counts only events
@@ -590,49 +589,7 @@ JOIN freq fb ON fb.l_partkey = p.part_b
 CROSS JOIN n
 """
 
-
-@register("frequent_itempairs", _BASKET_SQL)
-def frequent_itempairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequent part pairs across order baskets with lift, minsup=3.
-    Apriori-pruned: only individually-frequent items enter the basket
-    self-join."""
-    li = read_table(spark, sf_dir, "lineitem")
-    bp = li.select("l_orderkey", "l_partkey").distinct()
-    freq = (
-        bp.groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= _BASKET_MINSUP)
-    )
-    fbp = bp.join(F.broadcast(freq.select("l_partkey")), "l_partkey", "left_semi")
-    # r10: posting-list pair expansion (operators/similarity.group_pairs)
-    # — one basket exchange instead of the double-shuffled self-join.
-    pairs = (
-        group_pairs(fbp, "l_orderkey", "l_partkey", ordered=True)
-        .groupBy(
-            F.col("ia").alias("part_a"),
-            F.col("ib").alias("part_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") >= _BASKET_MINSUP)
-    )
-    n = bp.agg(
-        F.count_distinct("l_orderkey").cast("double").alias("n_orders")
-    )
-    fa = freq.select(F.col("l_partkey").alias("part_a"), F.col("c").alias("ca"))
-    fb = freq.select(F.col("l_partkey").alias("part_b"), F.col("c").alias("cb"))
-    return (
-        pairs.join(F.broadcast(fa), "part_a")
-        .join(F.broadcast(fb), "part_b")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "part_a",
-            "part_b",
-            F.col("support").cast("long").alias("support"),
-            dround(
-                F.col("support") * F.col("n_orders") / (F.col("ca") * F.col("cb")), 6
-            ).alias("lift"),
-        )
-    )
+register_sql("frequent_itempairs", _BASKET_SQL)
 
 
 # ---------------------------------------------------------------------------

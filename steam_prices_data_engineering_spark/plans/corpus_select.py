@@ -40,7 +40,7 @@ from ..functions.sqlfrag import sql_shinglehash_ctes, sql_token_hash_scalar
 from ..functions.text import token_hash, tokens
 from ..operators.dedup import hashed_shingle_table
 from ..sources.tables import read_table, values_frame
-from .registry import register
+from .registry import register, register_sql
 
 # ---------------------------------------------------------------------------
 # DSIR: hashed-unigram importance resampling.
@@ -332,30 +332,7 @@ ORDER BY race_key DESC, doc_id ASC
 LIMIT {_WS_TOP_K}
 """
 
-
-@register("weighted_sample_expkeys", _WS_SQL)
-def weighted_sample_expkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{K} weighted sample (weight = n_chars) via exponential races.
-
-    key = ln(u)/w with u = ((doc_id * KNUTH) % M + 1) / (M+1): pure
-    narrow-map arithmetic, then limit — TakeOrderedAndProject computes
-    per-partition top-K and merges K rows on the driver; the corpus is
-    never globally sorted. The K-boundary orders by the ROUNDED key
-    (tie-break doc_id) so both engines pick the identical sample; the
-    rank window runs post-limit on K rows."""
-    d = read_table(spark, sf_dir, "documents")
-    u = (
-        F.pmod(F.col("doc_id") * _WS_HASH_MULT, F.lit(_WS_HASH_MOD)) + 1
-    ).cast("double") / (_WS_HASH_MOD + 1)
-    keyed = d.select(
-        "doc_id",
-        "lang",
-        F.col("n_chars").cast("double").alias("weight"),
-        dround(F.log(u) / F.col("n_chars"), 6).alias("race_key"),
-    )
-    topk = keyed.orderBy(F.desc("race_key"), F.asc("doc_id")).limit(_WS_TOP_K)
-    w = Window.orderBy(F.desc("race_key"), F.asc("doc_id"))
-    return topk.withColumn("rank", F.row_number().over(w).cast("long"))
+register_sql("weighted_sample_expkeys", _WS_SQL)
 
 
 # ---------------------------------------------------------------------------

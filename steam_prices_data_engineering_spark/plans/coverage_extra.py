@@ -17,7 +17,7 @@ from ..functions.vectors import cosine
 from ..operators.dedup import simhash_table
 from ..session import landing
 from ..sources.tables import read_table, spread
-from .registry import register
+from .registry import register, register_sql
 
 # ---------------------------------------------------------------------------
 # Left semi join (the one join type not yet exercised as itself).
@@ -33,22 +33,7 @@ WHERE EXISTS (
 GROUP BY c_nationkey
 """
 
-
-@register("semi_join_active_customers", _SEMI_JOIN_SQL)
-def semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left semi join: customers with >=1 open order, counted per nation.
-    Semi joins never duplicate the left side, so the probe needs no
-    distinct — one shuffle on the join key (or broadcast of the filtered
-    key set when it fits)."""
-    c = read_table(spark, sf_dir, "customer")
-    o = read_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus") == "O"
-    ).select("o_custkey")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_semi")
-        .groupBy("c_nationkey")
-        .agg(F.count(F.lit(1)).alias("n_active_cust"))
-    )
+register_sql("semi_join_active_customers", _SEMI_JOIN_SQL)
 
 
 # ---------------------------------------------------------------------------

@@ -15,8 +15,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
-from ..sources.tables import read_table, values_frame
-from .registry import register
+from ..sources.tables import read_table
+from .registry import register, register_sql
 
 # ===========================================================================
 # TPC-H Q4 shape: EXISTS correlated subquery -> left semi fact-fact join.
@@ -36,26 +36,7 @@ WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
 GROUP BY o_orderpriority
 """
 
-
-@register("tpch_q4_order_priority", _Q4_SQL)
-def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXISTS decorrelated to a LEFT SEMI join between two fact tables.
-    At scale this is the one join shape that cannot broadcast — both sides
-    shuffle on l_orderkey/o_orderkey and AQE picks SMJ/shuffled-hash; the
-    quarter filter on orders is pushed to the parquet scan first."""
-    o = read_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-07-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-10-01 00:00:00").cast("timestamp"))
-    )
-    l = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    matched = o.join(
-        l,
-        (o.o_orderkey == l.l_orderkey) & (l.l_shipdate > o.o_orderdate),
-        "left_semi",
-    )
-    return matched.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("order_count")
-    )
+register_sql("tpch_q4_order_priority", _Q4_SQL)
 
 
 # ===========================================================================
@@ -72,29 +53,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_quantity < 24
 """
 
-
-@register("tpch_q6_revenue_forecast", _Q6_SQL)
-def tpch_q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scan-heavy filter + single-row aggregate. All four predicates reach
-    the parquet scan (PushedFilters), so at 100 TB entire row groups are
-    skipped on l_shipdate min/max statistics; no shuffle at all (partial
-    aggs reduce to one row)."""
-    l = read_table(spark, sf_dir, "lineitem")
-    return (
-        l.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            dround(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias(
-                "revenue"
-            ),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
+register_sql("tpch_q6_revenue_forecast", _Q6_SQL)
 
 
 # ===========================================================================
@@ -114,29 +73,7 @@ ORDER BY revenue DESC, c_custkey ASC
 LIMIT 20
 """
 
-
-@register("tpch_q10_returned_items", _Q10_SQL)
-def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fact-fact join (lineitem⋈orders on the shared high-cardinality key)
-    + broadcast dims + grouped agg + top-k. The returnflag filter prunes
-    lineitem at the scan; top-20 is TakeOrderedAndProject (no global sort)."""
-    c = read_table(spark, sf_dir, "customer")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = read_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = read_table(spark, sf_dir, "nation")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(
-            dround(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
+register_sql("tpch_q10_returned_items", _Q10_SQL)
 
 
 # ===========================================================================
@@ -156,25 +93,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
 GROUP BY l_linestatus
 """
 
-
-@register("tpch_q12_priority_by_linestatus", _Q12_SQL)
-def tpch_q12_priority_by_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot-style conditional counts (sum-of-CASE) — the map-side-combinable
-    form of a pivot; 2 groups so partial aggregation does all the work."""
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    l = read_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).cast("long").alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).cast("long").alias("low_line_count"),
-        )
-    )
+register_sql("tpch_q12_priority_by_linestatus", _Q12_SQL)
 
 
 # ===========================================================================
@@ -189,24 +108,7 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
 """
 
-
-@register("tpch_q14_promo_revenue", _Q14_SQL)
-def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast dim join + two conditional sums folded into one ratio —
-    a single pass over the filtered fact scan."""
-    l = read_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
-    )
-    p = read_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
-    return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .agg(
-            dround(100.0 * F.sum(promo) / F.sum(rev), 6).alias("promo_revenue_pct")
-        )
-    )
+register_sql("tpch_q14_promo_revenue", _Q14_SQL)
 
 
 # ===========================================================================
@@ -245,21 +147,7 @@ SELECT event_id,
 FROM events
 """
 
-
-@register("moving_avg_user_value", _MOVING_AVG_SQL)
-def moving_avg_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-row trailing moving average per user (explicit ROWS frame) —
-    the time-series smoothing primitive; event_id tie-break keeps the
-    frame deterministic."""
-    e = read_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-2, Window.currentRow)
-    )
-    return e.select(
-        "event_id", dround(F.avg("value").over(w), 4).alias("mov_avg_3")
-    )
+register_sql("moving_avg_user_value", _MOVING_AVG_SQL)
 
 
 # ===========================================================================
@@ -450,47 +338,26 @@ FROM (
 WHERE dist <= 2
 """
 
-
-@register("fuzzy_match_levenshtein", _FUZZY_SQL)
-def fuzzy_match_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance theta join of a dirty-name list against the nation dim
-    (entity resolution / record linkage). Non-equi, so Spark broadcasts the
-    tiny candidate list and streams the dim — at scale the dirty side is the
-    fact table and the same plan holds with sides swapped."""
-    n = read_table(spark, sf_dir, "nation")
-    cands = values_frame(spark, [(c,) for c in _FUZZY_CANDIDATES], ["cand"])
-    dist = F.levenshtein(F.col("cand"), F.col("n_name"))
-    return (
-        n.crossJoin(F.broadcast(cands))
-        .select("cand", "n_name", dist.cast("long").alias("dist"))
-        .filter(F.col("dist") <= 2)
-    )
+register_sql("fuzzy_match_levenshtein", _FUZZY_SQL)
 
 
 # ===========================================================================
 # GROUPING SETS (explicit, between rollup and cube) via the shared-SQL-text
-# doorway — the same string runs on Catalyst and on DuckDB.
+# doorway — the same string runs on Catalyst and on DuckDB. Detail +
+# per-status + grand total in one pass: Spark expands to a single Expand +
+# hash aggregate, i.e. one shuffle however many sets are requested.
 # ===========================================================================
 
 _GROUPING_SETS_SQL = f"""
 SELECT coalesce(o_orderstatus, 'ALL') AS status,
        coalesce(o_orderpriority, 'ALL') AS priority,
        CAST(count(*) AS BIGINT) AS n_orders,
-       CAST({R('sum(o_totalprice)', 2)} AS DOUBLE) AS total
+       {R('sum(o_totalprice)', 2)} AS total
 FROM orders
 GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
 """
 
-
-@register("sql_grouping_sets", _GROUPING_SETS_SQL)
-def sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS (detail + per-status + grand total in one
-    pass) — Spark expands to a single Expand + hash aggregate, i.e. one
-    shuffle regardless of how many sets are requested. CAST..AS DOUBLE
-    wrapper because this exact text also runs on Spark SQL, which parses
-    the dround literals as DECIMAL (same pattern as sql_tpch_q18)."""
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_GROUPING_SETS_SQL)
+register_sql("sql_grouping_sets", _GROUPING_SETS_SQL)
 
 
 # ---------------------------------------------------------------------------

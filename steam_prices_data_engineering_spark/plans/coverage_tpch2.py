@@ -22,7 +22,7 @@ from ..functions.rounding import dround, dround_sql as R
 from ..functions.sqlfrag import sql_md5_hex6_to_int
 from ..operators.ranking import prefix_sums_binned
 from ..sources.tables import read_table, values_frame
-from .registry import register
+from .registry import register, register_sql
 
 # ===========================================================================
 # TPC-H Q13 shape: customer order-count distribution. LEFT OUTER join with a
@@ -41,30 +41,7 @@ FROM (
 GROUP BY c_count
 """
 
-
-@register("tpch_q13_customer_distribution", _Q13_SQL)
-def tpch_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-preserving distribution: the priority filter must live in the
-    JOIN CONDITION, not a WHERE (a post-join filter would drop the
-    order-less customers the histogram exists to count). First agg reuses
-    the join's hash partitioning on the customer key — no extra shuffle;
-    the second agg shuffles only |distinct counts| pre-combined rows."""
-    c = read_table(spark, sf_dir, "customer").select("c_custkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey",
-                                                   "o_orderpriority")
-    per_cust = (
-        c.join(
-            o,
-            (c.c_custkey == o.o_custkey)
-            & (o.o_orderpriority != "1-URGENT"),
-            "left",
-        )
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(
-        F.count(F.lit(1)).alias("custdist")
-    )
+register_sql("tpch_q13_customer_distribution", _Q13_SQL)
 
 
 # ===========================================================================
@@ -82,33 +59,7 @@ WHERE p_brand = 'Brand#23'
   )
 """
 
-
-@register("tpch_q17_small_quantity_revenue", _Q17_SQL)
-def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The correlated avg is decorrelated into groupBy(l_partkey).avg joined
-    back to the fact — one extra aggregation instead of a per-row subquery.
-    At scale the brand filter shrinks the part dim first and semi-filters
-    both the fact scan and the pre-aggregate via the broadcast dim, so the
-    per-part averages are only computed for the ~1/|brands| slice."""
-    p = (
-        read_table(spark, sf_dir, "part")
-        .filter(F.col("p_brand") == "Brand#23")
-        .select("p_partkey")
-    )
-    l = read_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    # Broadcast the brand slice into both the fact and the pre-agg input so
-    # per-part averages are computed only where the subquery is correlated.
-    l_brand = l.join(F.broadcast(p), l.l_partkey == p.p_partkey).drop("p_partkey")
-    thresholds = l_brand.groupBy("l_partkey").agg(
-        (F.lit(0.5) * F.avg("l_quantity")).alias("qty_threshold")
-    )
-    return (
-        l_brand.join(thresholds, "l_partkey")
-        .filter(F.col("l_quantity") < F.col("qty_threshold"))
-        .agg(dround(F.sum("l_extendedprice") / 7.0, 2).alias("avg_yearly"))
-    )
+register_sql("tpch_q17_small_quantity_revenue", _Q17_SQL)
 
 
 # ===========================================================================
@@ -127,31 +78,7 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
        AND l_quantity BETWEEN 20 AND 40)
 """
 
-
-@register("tpch_q19_disjunctive_revenue", _Q19_SQL)
-def tpch_q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OR-of-ANDs across both join sides. Catalyst derives the per-table
-    implied disjunctions — (brand/size ORs) push to the part scan and
-    (quantity ORs) to the lineitem scan — so both scans prune before the
-    join instead of filtering the full cross section after it."""
-    l = read_table(spark, sf_dir, "lineitem")
-    p = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    q, b, s = F.col("l_quantity"), F.col("p_brand"), F.col("p_size")
-    arms = (
-        ((b == "Brand#12") & s.between(1, 15) & q.between(1, 21))
-        | ((b == "Brand#23") & s.between(10, 30) & q.between(10, 30))
-        | ((b == "Brand#3") & s.between(20, 50) & q.between(20, 40))
-    )
-    return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .filter(arms)
-        .agg(
-            dround(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
+register_sql("tpch_q19_disjunctive_revenue", _Q19_SQL)
 
 
 # ===========================================================================
@@ -291,23 +218,7 @@ FROM lineitem
 GROUP BY l_returnflag
 """
 
-
-@register("stats_corr_regr_by_flag", _STATS_SQL)
-def stats_corr_regr_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass distributed moments: corr/covar/stddev/var/regr all
-    reduce to the same five partial sums (n, Σx, Σy, Σxy, Σx²), so the six
-    outputs cost one map-side-combinable aggregation — no second pass over
-    the data, the property that makes them usable at 100 TB."""
-    l = read_table(spark, sf_dir, "lineitem")
-    q, p, d = F.col("l_quantity"), F.col("l_extendedprice"), F.col("l_discount")
-    return l.groupBy("l_returnflag").agg(
-        dround(F.corr(q, p), 6).alias("corr_qty_price"),
-        dround(F.covar_samp(q, p), 2).alias("covar_qty_price"),
-        dround(F.stddev_samp(d), 6).alias("sd_disc"),
-        dround(F.var_samp(q), 4).alias("var_qty"),
-        dround(F.regr_slope(p, q), 4).alias("slope_price_qty"),
-        dround(F.regr_intercept(p, q), 2).alias("icept_price_qty"),
-    )
+register_sql("stats_corr_regr_by_flag", _STATS_SQL)
 
 
 # ===========================================================================
@@ -329,26 +240,7 @@ WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey),
               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
 """
 
-
-@register("window_distribution_funcs", _DISTRIB_SQL)
-def window_distribution_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quartiles and rank distributions per market segment. last_value and
-    nth_value require the explicit UNBOUNDED FOLLOWING frame (the default
-    frame stops at CURRENT ROW, silently returning the running value);
-    the c_custkey tie-break makes every output deterministic."""
-    c = read_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
-    wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    bal = F.col("c_acctbal")
-    return c.select(
-        "c_custkey",
-        F.ntile(4).over(w).cast("long").alias("bal_quartile"),
-        dround(F.percent_rank().over(w), 6).alias("pct_rank"),
-        dround(F.cume_dist().over(w), 6).alias("cume"),
-        dround(F.first(bal).over(wf), 2).alias("seg_min_bal"),
-        dround(F.last(bal).over(wf), 2).alias("seg_max_bal"),
-        dround(F.nth_value(bal, 2).over(wf), 2).alias("seg_2nd_bal"),
-    )
+register_sql("window_distribution_funcs", _DISTRIB_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -381,42 +273,7 @@ SELECT seg, region,
 FROM marg
 """
 
-
-@register("chisq_segment_region", _CHISQ_SQL)
-def chisq_segment_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square contingency cells for market segment vs region:
-    observed, expected-under-independence, and each cell's chi-square
-    contribution (their sum is the test statistic).
-
-    Plan: broadcast-join the nation dim, one grouped count over the
-    facts, then marginal windows over the <=25-cell aggregate — the
-    windows run on post-aggregate rows, so the unpartitioned total is
-    25 rows on one task, not the fact table."""
-    c = read_table(spark, sf_dir, "customer")
-    n = read_table(spark, sf_dir, "nation")
-    cells = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy(
-            F.col("c_mktsegment").alias("seg"),
-            F.col("n_regionkey").alias("region"),
-        )
-        .agg(F.count(F.lit(1)).alias("o"))
-    )
-    w_row = Window.partitionBy("seg")
-    w_col = Window.partitionBy("region")
-    w_all = Window.partitionBy()
-    exp = (
-        F.sum("o").over(w_row)
-        * F.sum("o").over(w_col)
-        / F.sum("o").over(w_all).cast("double")
-    )
-    return cells.select(
-        "seg",
-        "region",
-        F.col("o").cast("long").alias("observed"),
-        dround(exp, 4).alias("expected"),
-        dround(F.pow(F.col("o") - exp, 2) / exp, 6).alias("chi2_part"),
-    )
+register_sql("chisq_segment_region", _CHISQ_SQL)
 
 
 # ---------------------------------------------------------------------------

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
 from ..sources.tables import read_table
-from .registry import register
+from .registry import register, register_sql
 
 # ===========================================================================
 # TPC-H Q7 shape: bilateral trade volume between two nations by ship year.
@@ -45,57 +45,7 @@ FROM (
 GROUP BY supp_nation, cust_nation, l_year
 """
 
-
-@register("tpch_q7_bilateral_volume", _Q7_SQL)
-def tpch_q7_bilateral_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two independent broadcast copies of the nation dim resolve the
-    supplier-side and customer-side nations of the same lineitem; the only
-    shuffle is the orders⋈lineitem fact-fact join plus the final group.
-    The nation-pair disjunction filters AFTER both dims attach (it spans
-    both), but each dim's broadcast is pre-filtered to the two nations —
-    probe rows from other nations drop at the join itself."""
-    two = ("NATION_13", "NATION_19")
-    n1 = (
-        read_table(spark, sf_dir, "nation")
-        .filter(F.col("n_name").isin(*two))
-        .select(
-            F.col("n_nationkey").alias("s_nkey"),
-            F.col("n_name").alias("supp_nation"),
-        )
-    )
-    n2 = (
-        read_table(spark, sf_dir, "nation")
-        .filter(F.col("n_name").isin(*two))
-        .select(
-            F.col("n_nationkey").alias("c_nkey"),
-            F.col("n_name").alias("cust_nation"),
-        )
-    )
-    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = read_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-    )
-    return (
-        l.join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey"))
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey"))
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").cast("long").alias("l_year"),
-        )
-        .agg(
-            dround(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
-        )
-    )
+register_sql("tpch_q7_bilateral_volume", _Q7_SQL)
 
 
 # ===========================================================================
@@ -122,50 +72,7 @@ FROM (
 GROUP BY o_year
 """
 
-
-@register("tpch_q8_market_share", _Q8_SQL)
-def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """National market share inside a regional market: every dim broadcasts
-    (part filtered to one type FIRST, so the fact⋈part join is the primary
-    row-killer); the numerator/denominator pair folds into one conditional
-    aggregation — one pass, one shuffle on the single group key."""
-    p = (
-        read_table(spark, sf_dir, "part")
-        .filter(F.col("p_type") == "STANDARD")
-        .select("p_partkey")
-    )
-    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = read_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate"
-    )
-    n1 = read_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
-    )
-    n2 = read_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("c_nkey"), F.col("n_regionkey").alias("c_rkey")
-    )
-    r = (
-        read_table(spark, sf_dir, "region")
-        .filter(F.col("r_name") == "ASIA")
-        .select("r_regionkey")
-    )
-    l = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    from_n3 = F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(F.lit(0.0))
-    return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nkey"))
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nkey"))
-        .join(F.broadcast(r), F.col("c_rkey") == F.col("r_regionkey"))
-        .groupBy(F.year("o_orderdate").cast("long").alias("o_year"))
-        .agg(dround(F.sum(from_n3) / F.sum(vol), 6).alias("mkt_share"))
-    )
+register_sql("tpch_q8_market_share", _Q8_SQL)
 
 
 # ===========================================================================
@@ -189,44 +96,7 @@ FROM (
 GROUP BY nation, o_year
 """
 
-
-@register("tpch_q9_product_profit", _Q9_SQL)
-def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Profit rollup over a LIKE-filtered part slice. The contains-filter
-    on p_name prunes the broadcast dim driver-free; profit is a pure
-    scalar expression so the whole pre-aggregation pipeline stays in one
-    codegen stage between the scan and the group-by shuffle."""
-    p = (
-        read_table(spark, sf_dir, "part")
-        .filter(F.col("p_name").contains("widget"))
-        .select("p_partkey", "p_retailprice")
-    )
-    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    n = read_table(spark, sf_dir, "nation").select(
-        "n_nationkey", F.col("n_name").alias("nation")
-    )
-    l = read_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey",
-        "l_quantity", "l_extendedprice", "l_discount",
-    )
-    amount = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("p_retailprice") * F.col("l_quantity")
-    )
-    return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .groupBy("nation", F.year("o_orderdate").cast("long").alias("o_year"))
-        # Scale 4, not 2: the true sum has exactly 4 decimal digits
-        # (2-dec price x 2-dec discount), so a half-cent boundary value like
-        # .9350 is COMMON at scale 2 and the engines' different summation
-        # orders flip it by one ulp; at scale >= the intrinsic precision the
-        # rounding boundary is unreachable (SURVEY.md §7.3 float-agg row).
-        .agg(dround(F.sum(amount), 4).alias("sum_profit"))
-    )
+register_sql("tpch_q9_product_profit", _Q9_SQL)
 
 
 # ===========================================================================
@@ -299,30 +169,4 @@ WHERE p_brand <> 'Brand#1'
 GROUP BY p_type, p_size
 """
 
-
-@register("tpch_q16_supplier_diversity", _Q16_SQL)
-def tpch_q16_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NOT IN over a non-nullable key decorrelates to a LEFT ANTI join
-    (with nullable keys NOT IN needs null-aware anti join — s_suppkey is
-    NOT NULL by schema, so the cheap form is sound). The distinct count
-    shuffles (type, size, suppkey) pre-deduped partials."""
-    p = (
-        read_table(spark, sf_dir, "part")
-        .filter(
-            (F.col("p_brand") != "Brand#1")
-            & F.col("p_size").isin(5, 15, 25, 35, 45)
-        )
-        .select("p_partkey", "p_type", "p_size")
-    )
-    excluded = (
-        read_table(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") < 1000.0)
-        .select("s_suppkey")
-    )
-    l = read_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    return (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .join(F.broadcast(excluded), l.l_suppkey == excluded.s_suppkey, "left_anti")
-        .groupBy("p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
+register_sql("tpch_q16_supplier_diversity", _Q16_SQL)

@@ -16,13 +16,13 @@ Shapes covered:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
 from ..session import pin
 from ..sources.tables import read_table
-from .registry import register
+from .registry import register, register_sql
 
 # ===========================================================================
 # TPC-H Q2 shape: cheapest supplier per part within a region.
@@ -47,57 +47,7 @@ FROM (
 WHERE unit_cost = min_cost
 """
 
-
-@register("tpch_q2_min_cost_supplier", _Q2_SQL)
-def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2's correlated `= (SELECT min(..) WHERE same part)` decorrelates to
-    ONE window-min over the part key — a single hash-partition shuffle —
-    instead of a re-scan + self-join of the filtered fact. All four dims
-    broadcast; ties (several suppliers at the min) survive, matching the
-    original's multi-row-per-part semantics. Reference-parity lineage:
-    min-per-group + equality fill is the same pattern as the EU max-fill
-    (world_map_transformer.py:209-211), O29 in SURVEY §2a."""
-    p = (
-        read_table(spark, sf_dir, "part")
-        .filter(F.col("p_size") == 15)
-        .select("p_partkey", "p_name")
-    )
-    s = read_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_name", "s_nationkey"
-    )
-    n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
-    r = (
-        read_table(spark, sf_dir, "region")
-        .filter(F.col("r_name") == "EUROPE")
-        .select("r_regionkey")
-    )
-    l = read_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_extendedprice", "l_quantity"
-    )
-    costs = (
-        l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select(
-            "p_partkey",
-            "p_name",
-            "s_name",
-            (F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost"),
-        )
-    )
-    w = Window.partitionBy("p_partkey")
-    return (
-        costs.withColumn("min_cost", F.min("unit_cost").over(w))
-        .filter(F.col("unit_cost") == F.col("min_cost"))
-        .select(
-            "p_partkey",
-            "p_name",
-            "s_name",
-            dround(F.col("unit_cost"), 4).alias("unit_cost"),
-        )
-        .distinct()
-    )
+register_sql("tpch_q2_min_cost_supplier", _Q2_SQL)
 
 
 # ===========================================================================

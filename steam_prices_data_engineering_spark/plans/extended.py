@@ -11,8 +11,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
-from ..sources.tables import read_table, values_frame
-from .registry import register
+from ..sources.tables import read_table
+from .registry import register, register_sql
 
 # ---------------------------------------------------------------------------
 # Set operations (union / intersect / except)
@@ -31,25 +31,7 @@ UNION ALL
 SELECT 'any' AS bucket, CAST(count(*) AS BIGINT) AS n FROM all_
 """
 
-
-@register("setops_custkeys", _SETOPS_SQL)
-def setops_custkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION / INTERSECT / EXCEPT over customer-key sets. At scale these
-    are hash aggregations + shuffles on the key — same cost model as
-    distinct; AQE coalesces the small outputs."""
-    o = read_table(spark, sf_dir, "orders")
-    f = o.filter(F.col("o_orderstatus") == "F").select("o_custkey").distinct()
-    op = o.filter(F.col("o_orderstatus") == "O").select("o_custkey").distinct()
-    both = f.intersect(op).agg(F.count(F.lit(1)).alias("n")).select(
-        F.lit("both").alias("bucket"), "n"
-    )
-    only_f = f.exceptAll(op).agg(F.count(F.lit(1)).alias("n")).select(
-        F.lit("only_f").alias("bucket"), "n"
-    )
-    any_ = f.union(op).distinct().agg(F.count(F.lit(1)).alias("n")).select(
-        F.lit("any").alias("bucket"), "n"
-    )
-    return both.unionAll(only_f).unionAll(any_)
+register_sql("setops_custkeys", _SETOPS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -65,26 +47,7 @@ FROM orders
 GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 """
 
-
-@register("rollup_status_priority", _ROLLUP_SQL)
-def rollup_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ROLLUP aggregation: detail rows + per-status subtotal + grand total
-    in one pass (Spark expands grouping sets before the shuffle, so it is
-    still a single partial-aggregated exchange)."""
-    o = read_table(spark, sf_dir, "orders")
-    return (
-        o.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            dround(F.sum("o_totalprice"), 2).alias("total"),
-        )
-        .select(
-            F.coalesce(F.col("o_orderstatus"), F.lit("<all>")).alias("status"),
-            F.coalesce(F.col("o_orderpriority"), F.lit("<all>")).alias("priority"),
-            "n_orders",
-            "total",
-        )
-    )
+register_sql("rollup_status_priority", _ROLLUP_SQL)
 
 
 _CUBE_SQL = f"""
@@ -96,23 +59,7 @@ FROM lineitem
 GROUP BY CUBE (l_returnflag, l_linestatus)
 """
 
-
-@register("cube_returnflag_linestatus", _CUBE_SQL)
-def cube_returnflag_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = read_table(spark, sf_dir, "lineitem")
-    return (
-        l.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            dround(F.avg("l_quantity"), 4).alias("avg_qty"),
-        )
-        .select(
-            F.coalesce(F.col("l_returnflag"), F.lit("<all>")).alias("rflag"),
-            F.coalesce(F.col("l_linestatus"), F.lit("<all>")).alias("lstatus"),
-            "n",
-            "avg_qty",
-        )
-    )
+register_sql("cube_returnflag_linestatus", _CUBE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -138,37 +85,7 @@ SELECT c_nationkey, c_custkey,
 FROM ranked WHERE rn <= 3
 """
 
-
-@register("ranking_top_customers", _RANKING_SQL)
-def ranking_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """row_number / rank / dense_rank / lag / lead over a per-nation
-    ordering; top-3 per nation. One shuffle on the partition key."""
-    c = read_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy(
-        F.desc("c_acctbal"), F.asc("c_custkey")
-    )
-    return (
-        c.select(
-            "c_nationkey",
-            "c_custkey",
-            "c_acctbal",
-            F.row_number().over(w).alias("rn"),
-            F.rank().over(w).alias("rnk"),
-            F.dense_rank().over(w).alias("drnk"),
-            F.lag("c_acctbal").over(w).alias("prev_bal"),
-            F.lead("c_acctbal").over(w).alias("next_bal"),
-        )
-        .filter(F.col("rn") <= 3)
-        .select(
-            "c_nationkey",
-            "c_custkey",
-            F.col("rn").cast("long").alias("rn"),
-            F.col("rnk").cast("long").alias("rnk"),
-            F.col("drnk").cast("long").alias("drnk"),
-            dround(F.col("c_acctbal") - F.col("prev_bal"), 2).alias("gap_prev"),
-            dround(F.col("next_bal") - F.col("c_acctbal"), 2).alias("gap_next"),
-        )
-    )
+register_sql("ranking_top_customers", _RANKING_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -233,28 +150,7 @@ FROM part JOIN bands ON p_retailprice >= lo AND p_retailprice < hi
 GROUP BY band
 """
 
-
-@register("range_join_price_bands", _RANGE_JOIN_SQL)
-def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval/band theta join against a tiny literal dim — broadcast
-    nested loop on 3 rows; the fact side streams once."""
-    p = read_table(spark, sf_dir, "part")
-    bands = values_frame(
-        spark,
-        [("budget", 0.0, 500.0), ("mid", 500.0, 1200.0), ("premium", 1200.0, 1e9)],
-        ["band", "lo", "hi"],
-    )
-    return (
-        p.join(
-            F.broadcast(bands),
-            (p.p_retailprice >= bands.lo) & (p.p_retailprice < bands.hi),
-        )
-        .groupBy("band")
-        .agg(
-            F.count(F.lit(1)).alias("n_parts"),
-            dround(F.avg("p_retailprice"), 4).alias("avg_price"),
-        )
-    )
+register_sql("range_join_price_bands", _RANGE_JOIN_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -312,22 +208,7 @@ SELECT s_suppkey,
 FROM supplier
 """
 
-
-@register("math_scalar_funcs", _MATH_FUNCS_SQL)
-def math_scalar_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """abs/ceil/floor/sqrt/square/sign — the IEEE-exact scalar set (log and
-    exp are excluded from oracle outputs: libm vs JVM can differ in the
-    last ulp)."""
-    s = read_table(spark, sf_dir, "supplier")
-    return s.select(
-        "s_suppkey",
-        dround(F.abs(F.col("s_acctbal")), 4).alias("abs_bal"),
-        F.ceil("s_acctbal").cast("long").alias("ceil_bal"),
-        F.floor("s_acctbal").cast("long").alias("floor_bal"),
-        dround(F.sqrt(F.abs(F.col("s_acctbal"))), 6).alias("sqrt_bal"),
-        dround(F.col("s_acctbal") * F.col("s_acctbal"), 4).alias("sq_bal"),
-        F.signum("s_acctbal").cast("double").alias("sign_bal"),
-    )
+register_sql("math_scalar_funcs", _MATH_FUNCS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -343,17 +224,7 @@ FROM orders
 GROUP BY o_orderstatus
 """
 
-
-@register("distinct_agg_per_status", _DISTINCT_AGG_SQL)
-def distinct_agg_per_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixed distinct + plain aggregates in one grouping (Spark plans the
-    two-phase expand/aggregate automatically)."""
-    o = read_table(spark, sf_dir, "orders")
-    return o.groupBy("o_orderstatus").agg(
-        F.countDistinct("o_custkey").alias("n_cust"),
-        dround(F.sum_distinct(F.col("o_totalprice")), 2).alias("sum_distinct_price"),
-        F.count(F.lit(1)).alias("n"),
-    )
+register_sql("distinct_agg_per_status", _DISTINCT_AGG_SQL)
 
 
 _STRING_AGG_SQL = """
@@ -519,27 +390,7 @@ SELECT o_orderkey,
 FROM orders
 """
 
-
-@register("try_arithmetic_funcs", _TRY_FUNCS_SQL)
-def try_arithmetic_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The try_*/NULL-absorbing expression family — the engine-level form
-    of the reference's per-row try/except -> NaN policy (O33,
-    steam_prices_transformer.py:119-132): division by zero and failed
-    casts yield NULL in-row, never an exception that kills the partition.
-    `try_divide` ≡ `a / nullif(b, 0)` in the oracle; `try_cast` exists in
-    both engines. The coalesce(-1) shows the quarantine-with-sentinel
-    variant."""
-    o = read_table(spark, sf_dir, "orders")
-    prio1 = F.left(F.col("o_orderpriority"), F.lit(1)).try_cast("int")
-    return o.select(
-        "o_orderkey",
-        dround(
-            F.try_divide(F.col("o_totalprice"), F.col("o_custkey") % 5), 4
-        ).alias("per_bucket"),
-        F.col("o_orderpriority").try_cast("int").cast("long").alias("prio_raw"),
-        prio1.cast("long").alias("prio_num"),
-        F.coalesce(prio1, F.lit(-1)).cast("long").alias("prio_filled"),
-    )
+register_sql("try_arithmetic_funcs", _TRY_FUNCS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -557,29 +408,7 @@ SELECT coalesce(c.k, s.k) AS nationkey, c.n_cust, s.n_supp
 FROM c FULL JOIN s ON c.k = s.k
 """
 
-
-@register("full_outer_join_nation_counts", _FULL_OUTER_SQL)
-def full_outer_join_nation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL OUTER equi join (absent from the reference — pandas `merge`
-    how='outer' is never used; SURVEY.md §2a "explicitly absent"). Both
-    sides are pre-aggregated so the join input is tiny regardless of fact
-    size; at scale the outer join itself shuffles both sides on the key
-    (broadcast cannot implement full-outer for the unmatched build side)."""
-    c = (
-        read_table(spark, sf_dir, "customer")
-        .filter(F.col("c_nationkey") % 2 == 0)
-        .groupBy(F.col("c_nationkey").alias("ck"))
-        .agg(F.count(F.lit(1)).alias("n_cust"))
-    )
-    s = (
-        read_table(spark, sf_dir, "supplier")
-        .filter(F.col("s_nationkey") % 3 == 0)
-        .groupBy(F.col("s_nationkey").alias("sk"))
-        .agg(F.count(F.lit(1)).alias("n_supp"))
-    )
-    return c.join(s, c.ck == s.sk, "full_outer").select(
-        F.coalesce("ck", "sk").alias("nationkey"), "n_cust", "n_supp"
-    )
+register_sql("full_outer_join_nation_counts", _FULL_OUTER_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -598,22 +427,7 @@ SELECT coalesce(a.k, '<null>') AS status_key, a.n_orders, b.total
 FROM a JOIN b ON a.k IS NOT DISTINCT FROM b.k
 """
 
-
-@register("nullsafe_join_status", _NULLSAFE_JOIN_SQL)
-def nullsafe_join_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Null-safe equi join via `eqNullSafe` (SQL `<=>`). A plain equality
-    join silently drops NULL-keyed rows; `<=>` keeps them AND still plans
-    as a hash-partitionable equi join (Catalyst treats `<=>` as a join
-    key, so this shuffles on the key like any equi join — no fallback to
-    nested-loop). The 'P' status is nulled out to manufacture a NULL key
-    class from the fixture data."""
-    o = read_table(spark, sf_dir, "orders")
-    k = F.nullif(F.col("o_orderstatus"), F.lit("P"))
-    a = o.groupBy(k.alias("ka")).agg(F.count(F.lit(1)).alias("n_orders"))
-    b = o.groupBy(k.alias("kb")).agg(dround(F.sum("o_totalprice"), 2).alias("total"))
-    return a.join(b, a.ka.eqNullSafe(b.kb)).select(
-        F.coalesce("ka", F.lit("<null>")).alias("status_key"), "n_orders", "total"
-    )
+register_sql("nullsafe_join_status", _NULLSAFE_JOIN_SQL)
 
 
 # ---------------------------------------------------------------------------

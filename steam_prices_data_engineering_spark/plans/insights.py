@@ -50,7 +50,7 @@ from ..operators.similarity import group_pairs
 from ..operators.ranking import ntile_scores
 from ..session import pin
 from ..sources.tables import read_table, values_frame
-from .registry import register
+from .registry import register, register_sql
 
 # ---------------------------------------------------------------------------
 # Item-item collaborative filtering (cosine over co-occurrence): the
@@ -95,59 +95,7 @@ SELECT item_a, CAST(rec_rank AS BIGINT) AS rec_rank, item_b,
 FROM ranked WHERE rec_rank <= {_CF_TOPK}
 """
 
-
-@register("item_item_cosine", _ITEM_CF_SQL)
-def item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 item-item neighbors by co-occurrence cosine, minsup=3.
-
-    Apriori-pruned like `frequent_itempairs`; both pair directions are
-    generated so the per-item top-k window sees every neighbor."""
-    li = read_table(spark, sf_dir, "lineitem")
-    bp = li.select("l_orderkey", "l_partkey").distinct()
-    freq = (
-        bp.groupBy("l_partkey")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") >= _CF_MINSUP)
-    )
-    fbp = bp.join(F.broadcast(freq.select("l_partkey")), "l_partkey", "left_semi")
-    # r10: posting-list pair expansion (operators/similarity.group_pairs) —
-    # one basket exchange instead of the double-shuffled self-join.
-    co = (
-        group_pairs(fbp, "l_orderkey", "l_partkey", ordered=False)
-        .groupBy(
-            F.col("ia").alias("item_a"),
-            F.col("ib").alias("item_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("support"))
-        .filter(F.col("support") >= _CF_MINSUP)
-    )
-    fa = freq.select(F.col("l_partkey").alias("item_a"), F.col("c").alias("ca"))
-    fb = freq.select(F.col("l_partkey").alias("item_b"), F.col("c").alias("cb"))
-    scored = (
-        co.join(F.broadcast(fa), "item_a")
-        .join(F.broadcast(fb), "item_b")
-        .select(
-            "item_a",
-            "item_b",
-            "support",
-            (
-                F.col("support")
-                / F.sqrt(F.col("ca").cast("double") * F.col("cb"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("item_a").orderBy(F.desc("cosine"), F.asc("item_b"))
-    return (
-        scored.withColumn("rec_rank", F.row_number().over(w))
-        .filter(F.col("rec_rank") <= _CF_TOPK)
-        .select(
-            "item_a",
-            F.col("rec_rank").cast("long").alias("rec_rank"),
-            "item_b",
-            F.col("support").cast("long").alias("support"),
-            dround(F.col("cosine"), 6).alias("cosine"),
-        )
-    )
+register_sql("item_item_cosine", _ITEM_CF_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -505,63 +453,7 @@ _MI_SQL = (
     + _mi_sql("o_orderpriority", "o_orderpriority", "orders")
 )
 
-
-def _mi_frame(joint: DataFrame, feature_name: str) -> DataFrame:
-    """(feature, n_classes, mi, h_label, nmi) from a (fx, y, c) joint
-    count table; marginals via window sums, entropy over distinct y."""
-    wf = Window.partitionBy("fx")
-    wy = Window.partitionBy("y")
-    wn = Window.partitionBy()
-    wr = Window.partitionBy("y").orderBy("fx")
-    staged = joint.select(
-        "fx",
-        "y",
-        F.col("c").cast("double").alias("c"),
-        F.sum("c").over(wf).cast("double").alias("cf"),
-        F.sum("c").over(wy).cast("double").alias("cy"),
-        F.sum("c").over(wn).cast("double").alias("n"),
-        F.row_number().over(wr).alias("rn"),
-    )
-    mi = F.sum((F.col("c") / F.col("n")) * F.log(F.col("c") * F.col("n") / (F.col("cf") * F.col("cy"))))
-    h = F.sum(
-        F.when(
-            F.col("rn") == 1,
-            -(F.col("cy") / F.col("n")) * F.log(F.col("cy") / F.col("n")),
-        ).otherwise(F.lit(0.0))
-    )
-    return staged.agg(
-        F.lit(feature_name).alias("feature"),
-        F.count_distinct("fx").cast("long").alias("n_classes"),
-        dround(mi, 6).alias("mi"),
-        dround(h, 6).alias("h_label"),
-        dround(mi / h, 6).alias("nmi"),
-    )
-
-
-@register("mutual_info_features", _MI_SQL)
-def mutual_info_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MI(feature; order status) for c_mktsegment and o_orderpriority:
-    joint-count aggregation per feature, marginals by window sums."""
-    o = read_table(spark, sf_dir, "orders")
-    cust = read_table(spark, sf_dir, "customer")
-    seg_joint = (
-        o.join(
-            F.broadcast(cust.select("c_custkey", "c_mktsegment")),
-            o["o_custkey"] == cust["c_custkey"],
-        )
-        .groupBy(
-            F.col("c_mktsegment").alias("fx"),
-            F.col("o_orderstatus").alias("y"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    pri_joint = o.groupBy(
-        F.col("o_orderpriority").alias("fx"),
-        F.col("o_orderstatus").alias("y"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    return _mi_frame(seg_joint, "c_mktsegment").unionByName(
-        _mi_frame(pri_joint, "o_orderpriority")
-    )
+register_sql("mutual_info_features", _MI_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -804,26 +696,7 @@ FROM part GROUP BY p_name
 HAVING count(*) > 1
 """
 
-
-@register("golden_record_consolidation", _GOLDEN_SQL)
-def golden_record_consolidation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Survivorship per duplicated part name: canonical key (min id),
-    brand-conflict flag, price spread, merged price."""
-    p = read_table(spark, sf_dir, "part")
-    return (
-        p.groupBy("p_name")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_records"),
-            F.min("p_partkey").cast("long").alias("canonical_partkey"),
-            F.count_distinct("p_brand").cast("long").alias("n_brands"),
-            (F.count_distinct("p_brand") > 1).alias("brand_conflict"),
-            dround(F.max("p_retailprice") - F.min("p_retailprice"), 2).alias(
-                "price_spread"
-            ),
-            dround(F.avg("p_retailprice"), 4).alias("merged_price"),
-        )
-        .filter(F.col("n_records") > 1)
-    )
+register_sql("golden_record_consolidation", _GOLDEN_SQL)
 
 
 # ---------------------------------------------------------------------------

@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.sqlfrag import sql_md5_hex6_to_int
 from ..session import pin
-from ..sources.tables import read_table, values_frame
-from .registry import register
+from ..sources.tables import read_table
+from .registry import register, register_sql
 
 # ---------------------------------------------------------------------------
 # PCA top component via power iteration (Mises-Pollaczek 1929; the
@@ -192,58 +192,7 @@ SELECT CAST(n AS BIGINT) AS n_rows,
 FROM beta
 """
 
-
-@register("ols_normal_equations", _OLS_SQL)
-def ols_normal_equations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-feature OLS (quantity, discount -> extendedprice): moment
-    sums from one scan, Cramer's-rule solve, R^2 from residual algebra."""
-    li = read_table(spark, sf_dir, "lineitem")
-    x1 = F.col("l_quantity")
-    x2 = F.col("l_discount")
-    y = F.col("l_extendedprice")
-    m = li.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(x1).alias("s1"),
-        F.sum(x2).alias("s2"),
-        F.sum(x1 * x1).alias("s11"),
-        F.sum(x1 * x2).alias("s12"),
-        F.sum(x2 * x2).alias("s22"),
-        F.sum(y).alias("sy"),
-        F.sum(x1 * y).alias("sy1"),
-        F.sum(x2 * y).alias("sy2"),
-        F.sum(y * y).alias("syy"),
-    )
-    c = {k: F.col(k) for k in ("n", "s1", "s2", "s11", "s12", "s22", "sy", "sy1", "sy2", "syy")}
-    dd = (
-        c["n"] * (c["s11"] * c["s22"] - c["s12"] * c["s12"])
-        - c["s1"] * (c["s1"] * c["s22"] - c["s12"] * c["s2"])
-        + c["s2"] * (c["s1"] * c["s12"] - c["s11"] * c["s2"])
-    )
-    b0 = (
-        c["sy"] * (c["s11"] * c["s22"] - c["s12"] * c["s12"])
-        - c["s1"] * (c["sy1"] * c["s22"] - c["s12"] * c["sy2"])
-        + c["s2"] * (c["sy1"] * c["s12"] - c["s11"] * c["sy2"])
-    ) / dd
-    b1 = (
-        c["n"] * (c["sy1"] * c["s22"] - c["sy2"] * c["s12"])
-        - c["sy"] * (c["s1"] * c["s22"] - c["s12"] * c["s2"])
-        + c["s2"] * (c["s1"] * c["sy2"] - c["sy1"] * c["s2"])
-    ) / dd
-    b2 = (
-        c["n"] * (c["s11"] * c["sy2"] - c["s12"] * c["sy1"])
-        - c["s1"] * (c["s1"] * c["sy2"] - c["sy1"] * c["s2"])
-        + c["sy"] * (c["s1"] * c["s12"] - c["s11"] * c["s2"])
-    ) / dd
-    r2 = 1 - (c["syy"] - b0 * c["sy"] - b1 * c["sy1"] - b2 * c["sy2"]) / (
-        c["syy"] - c["sy"] * c["sy"] / c["n"]
-    )
-    return m.select(
-        F.col("n").cast("long").alias("n_rows"),
-        dround(b0, 4).alias("beta0"),
-        dround(b1, 4).alias("beta1"),
-        dround(b2, 4).alias("beta2"),
-        dround(r2, 6).alias("r2"),
-    )
+register_sql("ols_normal_equations", _OLS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -645,14 +594,11 @@ def logreg_newton_irls(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale design: ONE training-split scan produces the 10 moment sums; the
 # per-lambda solves are Cramer determinant algebra on that single row
-# crossJoined with a CONSTANT 5-row lambda frame (lambda enters the
+# cross-joined with a CONSTANT 5-row lambda relation (lambda enters the
 # determinants as a column — no per-lambda unrolling, no extra scans);
-# ONE holdout scan crossJoins the broadcast 5-row beta table and scores
-# every lambda at once. Two fact passes total, independent of |lambdas|.
-#
-# Cross-engine exactness: every determinant is ONE shared SQL string
-# (_det3) evaluated by DuckDB directly and by Spark via F.expr — the
-# arithmetic tree is literally identical, so dround(4) outputs match.
+# ONE holdout scan cross-joins the 5-row beta table and scores every
+# lambda at once. Two fact passes total, independent of |lambdas|. Both
+# engines run this one text, determinants (_det3) included.
 # ---------------------------------------------------------------------------
 
 _RIDGE_LAMBDAS = (0.0, 0.1, 1.0, 10.0, 100.0)
@@ -727,59 +673,4 @@ CROSS JOIN betas b
 GROUP BY b.lam, b.b0, b.b1, b.b2
 """
 
-
-@register("ridge_lambda_sweep", _ridge_sql())
-def ridge_lambda_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ridge fits of (quantity, discount -> extendedprice) at 5 lambdas
-    with holdout RMSE per lambda: one training scan (10 moment sums),
-    Cramer solves with lambda as a COLUMN over the 5-row sweep frame,
-    one holdout scan scoring all lambdas via a broadcast crossJoin."""
-    from .trainset import knuth_hash
-
-    li = read_table(spark, sf_dir, "lineitem")
-    base = li.select(
-        (knuth_hash("l_orderkey") % 10).alias("bucket"),
-        F.col("l_quantity").alias("x1"),
-        F.col("l_discount").alias("x2"),
-        F.col("l_extendedprice").alias("y"),
-    )
-    x1, x2, y = F.col("x1"), F.col("x2"), F.col("y")
-    m = base.filter(F.col("bucket") < 8).agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(x1).alias("s1"),
-        F.sum(x2).alias("s2"),
-        F.sum(x1 * x1).alias("s11"),
-        F.sum(x1 * x2).alias("s12"),
-        F.sum(x2 * x2).alias("s22"),
-        F.sum(y).alias("sy"),
-        F.sum(x1 * y).alias("sy1"),
-        F.sum(x2 * y).alias("sy2"),
-    )
-    lams = values_frame(spark, [(float(v),) for v in _RIDGE_LAMBDAS], ["lam"])
-    # F.expr over the SAME strings the oracle runs — one arithmetic tree.
-    betas = m.crossJoin(F.broadcast(lams)).select(
-        "lam",
-        (F.expr(_RIDGE_B0) / F.expr(_RIDGE_DD)).alias("b0"),
-        (F.expr(_RIDGE_B1) / F.expr(_RIDGE_DD)).alias("b1"),
-        (F.expr(_RIDGE_B2) / F.expr(_RIDGE_DD)).alias("b2"),
-    )
-    ev = base.filter(F.col("bucket") >= 8)
-    err = y - (F.col("b0") + F.col("b1") * x1 + F.col("b2") * x2)
-    return (
-        ev.crossJoin(F.broadcast(betas))
-        .groupBy("lam", "b0", "b1", "b2")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_eval"),
-            dround(
-                F.sqrt(F.sum(err * err) / F.count(F.lit(1))), 4
-            ).alias("rmse_holdout"),
-        )
-        .select(
-            dround(F.col("lam"), 2).alias("lam"),
-            dround(F.col("b0"), 4).alias("beta0"),
-            dround(F.col("b1"), 4).alias("beta1"),
-            dround(F.col("b2"), 4).alias("beta2"),
-            "n_eval",
-            "rmse_holdout",
-        )
-    )
+register_sql("ridge_lambda_sweep", _ridge_sql())

@@ -42,7 +42,7 @@ from ..functions.rounding import dround, dround_sql as R
 from ..functions.sqlfrag import sql_md5_hex6_to_int
 from ..functions.text import quality_score, tokens
 from ..sources.tables import read_table
-from .registry import register
+from .registry import register, register_sql
 
 # The canonical deterministic doc split (plans/trainset.py) — composed,
 # never re-derived, per the shared-hash-arithmetic rule. Both twins come
@@ -486,42 +486,7 @@ FROM base b JOIN loo l ON l.fold = b.fold AND l.pri = b.pri
 GROUP BY b.fold
 """
 
-
-@register("cv_fold_rmse", _cv_sql())
-def cv_fold_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-fold RMSE/MAE of the leave-one-fold-out per-priority mean
-    predictor of o_totalprice, K=5 hash folds. One training pass for all
-    K models (grid leave-one-out arithmetic on a bounded broadcast), one
-    scoring pass."""
-    from .trainset import knuth_hash
-
-    o = read_table(spark, sf_dir, "orders")
-    base = o.select(
-        (knuth_hash("o_orderkey") % _CV_K).alias("fold"),
-        F.col("o_orderpriority").alias("pri"),
-        F.col("o_totalprice").alias("y"),
-    )
-    fp = base.groupBy("fold", "pri").agg(
-        F.sum("y").alias("s"), F.count(F.lit(1)).cast("double").alias("n")
-    )
-    tot = fp.groupBy("pri").agg(
-        F.sum("s").alias("st"), F.sum("n").alias("nt")
-    )
-    loo = fp.join(tot, "pri").select(
-        "fold",
-        "pri",
-        ((F.col("st") - F.col("s")) / (F.col("nt") - F.col("n"))).alias("pred"),
-    )
-    err = F.col("y") - F.col("pred")
-    return (
-        base.join(F.broadcast(loo), ["fold", "pri"])
-        .groupBy(F.col("fold").cast("long").alias("fold"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_eval"),
-            dround(F.sqrt(F.sum(err * err) / F.count(F.lit(1))), 4).alias("rmse"),
-            dround(F.avg(F.abs(err)), 4).alias("mae"),
-        )
-    )
+register_sql("cv_fold_rmse", _cv_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -580,65 +545,7 @@ JOIN ntr t ON t.train_buckets = p.train_buckets
 GROUP BY p.train_buckets, t.n_train_grid
 """
 
-
-@register("learning_curve_scaling", _lc_sql())
-def learning_curve_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Held-out RMSE of the per-priority mean predictor at nested
-    training-set sizes (2/4/6/8 of 10 hash buckets; eval = buckets 8-9).
-    The canonical "is more data still buying accuracy" curve, computed
-    with one training scan + one eval scan regardless of how many
-    subset sizes are on the curve.
-
-    n_train_grid is aggregated from the BOUNDED pred grid (subset sizes
-    x priorities, <=20 rows) before the eval join — summing DISTINCT cn
-    through the replicated eval rows would silently collapse two
-    priorities whose cumulative counts happen to tie (ADVICE r4)."""
-    from .trainset import knuth_hash
-
-    o = read_table(spark, sf_dir, "orders")
-    base = o.select(
-        (knuth_hash("o_orderkey") % 10).alias("bucket"),
-        F.col("o_orderpriority").alias("pri"),
-        F.col("o_totalprice").alias("y"),
-    )
-    grid = (
-        base.filter(F.col("bucket") < 8)
-        .groupBy("bucket", "pri")
-        .agg(F.sum("y").alias("s"), F.count(F.lit(1)).cast("double").alias("n"))
-    )
-    w = (
-        Window.partitionBy("pri")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = grid.select(
-        "bucket",
-        "pri",
-        F.sum("s").over(w).alias("cs"),
-        F.sum("n").over(w).alias("cn"),
-    )
-    pred = cum.filter(
-        (F.col("bucket") + 1).isin(list(_LC_SUBSETS))
-    ).select(
-        (F.col("bucket") + 1).alias("train_buckets"),
-        "pri",
-        (F.col("cs") / F.col("cn")).alias("pred"),
-        "cn",
-    )
-    ntr = pred.groupBy(
-        F.col("train_buckets").cast("long").alias("train_buckets")
-    ).agg(F.sum("cn").cast("long").alias("n_train_grid"))
-    ev = base.filter(F.col("bucket") >= 8).select("pri", "y")
-    err = F.col("y") - F.col("pred")
-    return (
-        ev.join(F.broadcast(pred), "pri")
-        .groupBy(F.col("train_buckets").cast("long").alias("train_buckets"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_eval"),
-            dround(F.sqrt(F.sum(err * err) / F.count(F.lit(1))), 4).alias("rmse"),
-        )
-        .join(F.broadcast(ntr), "train_buckets")
-    )
+register_sql("learning_curve_scaling", _lc_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -682,42 +589,7 @@ CROSS JOIN prior p
 WHERE {sample}
 """
 
-
-@register("target_encoding_loo", _target_enc_sql())
-def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Leave-one-out (and m=10-smoothed) target encoding of order
-    priority against o_totalprice, emitted for a hash-bounded row sample
-    (~0.5% of orders) so the row-level arithmetic is value-verified at
-    any scale. Category stats are one broadcast aggregate; the encoding
-    itself is windowless per-row arithmetic."""
-    from .trainset import knuth_hash
-
-    o = read_table(spark, sf_dir, "orders")
-    g = o.groupBy(F.col("o_orderpriority").alias("pri")).agg(
-        F.sum("o_totalprice").alias("s"),
-        F.count(F.lit(1)).cast("double").alias("n"),
-    )
-    prior = g.agg((F.sum("s") / F.sum("n")).alias("mu"))
-    y = F.col("o_totalprice")
-    m = F.lit(_TE_SMOOTH_M)
-    return (
-        o.filter(knuth_hash("o_orderkey") % 997 < 5)
-        .join(
-            F.broadcast(g), o["o_orderpriority"] == g["pri"]
-        )
-        .crossJoin(F.broadcast(prior))
-        .select(
-            F.col("o_orderkey").alias("orderkey"),
-            "pri",
-            dround(y, 2).alias("y"),
-            dround((F.col("s") - y) / (F.col("n") - 1), 6).alias("loo_enc"),
-            dround(
-                (F.col("s") - y + m * F.col("mu"))
-                / (F.col("n") - 1 + m),
-                6,
-            ).alias("loo_enc_smoothed"),
-        )
-    )
+register_sql("target_encoding_loo", _target_enc_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -825,38 +697,4 @@ FROM base b JOIN loo l ON l.fold = b.fold AND l.pri = b.pri
 GROUP BY b.fold
 """
 
-
-@register("cv_groupkfold_rmse", _group_cv_sql())
-def cv_groupkfold_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group K-fold CV of the leave-one-fold-out per-priority mean
-    predictor: fold = hash of o_custkey, so a customer's orders never
-    straddle train and eval. Same two-fact-scan plan as cv_fold_rmse."""
-    from .trainset import knuth_hash
-
-    o = read_table(spark, sf_dir, "orders")
-    base = o.select(
-        (knuth_hash("o_custkey") % _CV_K).alias("fold"),
-        F.col("o_orderpriority").alias("pri"),
-        F.col("o_totalprice").alias("y"),
-    )
-    fp = base.groupBy("fold", "pri").agg(
-        F.sum("y").alias("s"), F.count(F.lit(1)).cast("double").alias("n")
-    )
-    tot = fp.groupBy("pri").agg(
-        F.sum("s").alias("st"), F.sum("n").alias("nt")
-    )
-    loo = fp.join(tot, "pri").select(
-        "fold",
-        "pri",
-        ((F.col("st") - F.col("s")) / (F.col("nt") - F.col("n"))).alias("pred"),
-    )
-    err = F.col("y") - F.col("pred")
-    return (
-        base.join(F.broadcast(loo), ["fold", "pri"])
-        .groupBy(F.col("fold").cast("long").alias("fold"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_eval"),
-            dround(F.sqrt(F.sum(err * err) / F.count(F.lit(1))), 4).alias("rmse"),
-            dround(F.avg(F.abs(err)), 4).alias("mae"),
-        )
-    )
+register_sql("cv_groupkfold_rmse", _group_cv_sql())

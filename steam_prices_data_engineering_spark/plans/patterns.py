@@ -26,7 +26,7 @@ from ..functions.sqlfrag import sql_md5_hex6_to_int
 from ..functions.text import md5_hex6_to_int
 from ..session import pin
 from ..sources.tables import read_table, values_frame
-from .registry import register
+from .registry import register, register_sql
 
 # ---------------------------------------------------------------------------
 # CEP: regex pattern matching over per-session event-symbol strings.
@@ -147,18 +147,10 @@ def event_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quantity sold: maximize, best unit price: minimize) — no other part
 # both sells more AND is cheaper (strict somewhere).
 #
-# Scale design (skyline is distributive: skyline(A ∪ B) =
-# skyline(skyline(A) ∪ skyline(B))): (1) reduce to the distinct-qty
-# grain first (same lesson as record linkage: consolidate before
-# comparing), (2) bucket the grain by qty range; the cross-bucket
-# dominance test needs only the per-bucket min price (a TINY broadcast
-# relation — one row per bucket), and the within-bucket test is a window
-# PARTITIONED by bucket, so no global single-task sort ever happens.
-# The oracle is the textbook NOT EXISTS dominance definition — agreement
-# proves the whole bucket decomposition, not just the window algebra.
+# The text reduces to the distinct-qty grain first (consolidate before
+# comparing), then keeps the grain rows no other row dominates: the
+# textbook NOT EXISTS dominance definition, run as-is by both engines.
 # ---------------------------------------------------------------------------
-
-_SKYLINE_BUCKET_W = 50.0
 
 _SKYLINE_SQL = f"""
 WITH per_part AS (
@@ -184,62 +176,7 @@ WHERE NOT EXISTS (
 )
 """
 
-
-@register("pareto_frontier_parts", _SKYLINE_SQL)
-def pareto_frontier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-D skyline over parts: maximize total quantity sold, minimize the
-    best observed unit price. Distributed form: qty-grain reduce, then a
-    bucket decomposition — cross-bucket dominance via the broadcast
-    per-bucket running-min-price table, within-bucket dominance via a
-    bucket-partitioned window. No global-ordered window (which would drag
-    the full grain to one task; cf. the top1_recency rule).
-
-    l_quantity is integer-valued and unit price is a single IEEE
-    division, so qty sums and price mins are bit-identical across
-    engines; comparisons here are exact, rounding only decorates the
-    output column."""
-    li = read_table(spark, sf_dir, "lineitem")
-    per_part = li.groupBy("l_partkey").agg(
-        F.sum("l_quantity").alias("qty"),
-        F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("price"),
-    )
-    grain = per_part.groupBy("qty").agg(
-        F.min("price").alias("price"),
-        F.count(F.lit(1)).cast("long").alias("n_parts"),
-        F.min("l_partkey").cast("long").alias("rep_partkey"),
-    ).withColumn("bucket", F.floor(F.col("qty") / _SKYLINE_BUCKET_W))
-    # Per-bucket min price, then the running min over STRICTLY HIGHER
-    # buckets (bucket b+1.. all have qty > any qty in bucket b because
-    # floor is monotone). One row per bucket: broadcastable by design.
-    bucket_mins = grain.groupBy("bucket").agg(F.min("price").alias("bmin"))
-    wb = Window.orderBy(F.col("bucket").desc()).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    higher_min = bucket_mins.select(
-        "bucket", F.min("bmin").over(wb).alias("higher_bucket_min")
-    )
-    ww = (
-        Window.partitionBy("bucket")
-        .orderBy(F.col("qty").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    scored = (
-        grain.join(F.broadcast(higher_min), "bucket")
-        .withColumn("within_min", F.min("price").over(ww))
-    )
-    dominated = (
-        (F.col("higher_bucket_min") <= F.col("price"))
-        | (F.col("within_min") <= F.col("price"))
-    )
-    return (
-        scored.filter(~F.coalesce(dominated, F.lit(False)))
-        .select(
-            F.col("qty").cast("long").alias("total_qty"),
-            dround(F.col("price"), 4).alias("best_unit_price"),
-            "n_parts",
-            "rep_partkey",
-        )
-    )
+register_sql("pareto_frontier_parts", _SKYLINE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -709,33 +646,7 @@ SELECT l_returnflag,
 FROM cum GROUP BY l_returnflag
 """
 
-
-@register("weighted_median_price", _WMEDIAN_SQL)
-def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantity-weighted median unit price per return flag: distinct-price
-    grain reduce, per-flag cumulative-weight window over the grain, then
-    the first price where cumulative weight covers half the total."""
-    li = read_table(spark, sf_dir, "lineitem")
-    grain = li.groupBy(
-        "l_returnflag",
-        (F.col("l_extendedprice") / F.col("l_quantity")).alias("price"),
-    ).agg(F.sum("l_quantity").alias("w"))
-    wf = Window.partitionBy("l_returnflag")
-    wcum = wf.orderBy("price").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = grain.select(
-        "l_returnflag",
-        "price",
-        F.sum("w").over(wcum).alias("cw"),
-        F.sum("w").over(wf).alias("tw"),
-    )
-    return cum.groupBy("l_returnflag").agg(
-        dround(
-            F.min(F.when(F.col("cw") * 2 >= F.col("tw"), F.col("price"))), 4
-        ).alias("weighted_median_price"),
-        F.min("tw").cast("long").alias("total_weight"),
-    )
+register_sql("weighted_median_price", _WMEDIAN_SQL)
 
 
 # ---------------------------------------------------------------------------

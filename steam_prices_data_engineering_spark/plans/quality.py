@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.sqlfrag import sql_md5_hex6_to_int
 from ..sources.tables import read_table
-from .registry import register
+from .registry import register, register_sql
 
 # ===========================================================================
 # Constraint validation report: one row per rule.
@@ -48,43 +48,7 @@ FROM orders
 WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)
 """
 
-
-@register("dq_validation_report", _DQ_SQL)
-def dq_validation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Four constraint classes in two fact passes: null/range/uniqueness
-    fold into ONE aggregation over orders (conditional sums + a distinct
-    count); referential integrity is a broadcast LEFT ANTI against the
-    customer key set, counted. The report is rows, not exceptions — at
-    100 TB a validator that throws on first violation is useless."""
-    o = read_table(spark, sf_dir, "orders")
-    c = read_table(spark, sf_dir, "customer").select("c_custkey")
-
-    base = o.agg(
-        F.sum(F.col("o_custkey").isNull().cast("long")).alias("null_custkey"),
-        F.sum((F.col("o_totalprice") <= 0).cast("long")).alias(
-            "nonpositive_totalprice"
-        ),
-        (F.count(F.lit(1)) - F.countDistinct("o_orderkey")).alias(
-            "duplicate_orderkey"
-        ),
-    )
-    orphans = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey, "left_anti")
-        .agg(F.count(F.lit(1)).alias("orphan_custkey"))
-    )
-    wide = base.crossJoin(F.broadcast(orphans))
-    long = wide.unpivot(
-        ids=[],
-        values=[
-            "null_custkey",
-            "nonpositive_totalprice",
-            "duplicate_orderkey",
-            "orphan_custkey",
-        ],
-        variableColumnName="rule",
-        valueColumnName="n_violations",
-    )
-    return long.select("rule", F.col("n_violations").cast("long"))
+register_sql("dq_validation_report", _DQ_SQL)
 
 
 # ===========================================================================
@@ -421,31 +385,7 @@ FROM dev
 GROUP BY l_returnflag
 """
 
-
-@register("robust_stats_mad", _MAD_SQL)
-def robust_stats_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Median absolute deviation per group — the outlier-robust spread
-    measure (quality gates prefer MAD over stddev because one corrupt
-    price doesn't move it). Two median passes are inherent, but both ride
-    ONE hash partitioning on the group key: the per-row median arrives via
-    a window, the MAD via a groupBy on the same key — one scan, one
-    shuffle, exactly the winsorization plan shape. Both engines
-    interpolate percentile_cont-style, so the oracle is exact."""
-    l = read_table(spark, sf_dir, "lineitem")
-    w = Window.partitionBy("l_returnflag")
-    med = F.expr("percentile(l_extendedprice, 0.5)").over(w)
-    dev = l.select(
-        "l_returnflag",
-        med.alias("med"),
-        F.col("l_extendedprice"),
-    )
-    return dev.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        dround(F.min("med"), 4).alias("median_price"),
-        dround(
-            F.expr("percentile(abs(l_extendedprice - med), 0.5)"), 4
-        ).alias("mad_price"),
-    )
+register_sql("robust_stats_mad", _MAD_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -579,8 +519,8 @@ del_orders AS (
 ),
 c AS (
     SELECT 'customer' AS table_name, count(*) AS rows_before,
-           CAST(sum(CASE WHEN {_GDPR_PRED} THEN 1 ELSE 0 END) AS BIGINT)
-             AS rows_purged
+           CAST(coalesce(sum(CASE WHEN {_GDPR_PRED} THEN 1 ELSE 0 END), 0)
+                AS BIGINT) AS rows_purged
     FROM customer
 ),
 o AS (
@@ -607,59 +547,7 @@ FROM (SELECT * FROM c UNION ALL SELECT * FROM o
       UNION ALL SELECT * FROM l UNION ALL SELECT * FROM e) t
 """
 
-
-@register("gdpr_delete_cascade", _GDPR_SQL)
-def gdpr_delete_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Erasure-cascade accounting: customers matching the deletion
-    predicate, their orders, those orders' lineitems, and their events —
-    one (table_name, rows_before, rows_purged, rows_after) row per
-    table. The purge itself is each table anti-joined on the same
-    keysets (the MERGE DELETE lowering); this plan proves the blast
-    radius before the rewrite."""
-    cust = read_table(spark, sf_dir, "customer")
-    orders = read_table(spark, sf_dir, "orders")
-    lineitem = read_table(spark, sf_dir, "lineitem")
-    events = read_table(spark, sf_dir, "events")
-
-    del_cust = cust.filter(_GDPR_PRED).select("c_custkey")
-    del_orders = orders.join(
-        F.broadcast(del_cust), orders.o_custkey == del_cust.c_custkey, "left_semi"
-    ).select("o_orderkey")
-
-    def report(name: str, base: DataFrame, purged: DataFrame) -> DataFrame:
-        n = base.agg(F.count(F.lit(1)).cast("long").alias("rows_before"))
-        p = purged.agg(F.count(F.lit(1)).cast("long").alias("rows_purged"))
-        return (
-            n.crossJoin(p)
-            .select(
-                F.lit(name).alias("table_name"),
-                "rows_before",
-                "rows_purged",
-                (F.col("rows_before") - F.col("rows_purged"))
-                .cast("long")
-                .alias("rows_after"),
-            )
-        )
-
-    rep_c = report("customer", cust, del_cust)
-    rep_o = report("orders", orders, del_orders)
-    rep_l = report(
-        "lineitem",
-        lineitem,
-        lineitem.join(
-            F.broadcast(del_orders),
-            lineitem.l_orderkey == del_orders.o_orderkey,
-            "left_semi",
-        ),
-    )
-    rep_e = report(
-        "events",
-        events,
-        events.join(
-            F.broadcast(del_cust), events.user_id == del_cust.c_custkey, "left_semi"
-        ),
-    )
-    return rep_c.unionByName(rep_o).unionByName(rep_l).unionByName(rep_e)
+register_sql("gdpr_delete_cascade", _GDPR_SQL)
 
 
 # ===========================================================================
@@ -682,16 +570,7 @@ FROM customer
 GROUP BY 1, 2
 """
 
-
-@register("k_anonymity_report", _KANON_SQL)
-def k_anonymity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cell sizes over the (nation, market segment) quasi-identifier
-    tuple with the k=10 re-identification flag."""
-    c = read_table(spark, sf_dir, "customer")
-    return c.groupBy("c_nationkey", "c_mktsegment").agg(
-        F.count(F.lit(1)).cast("long").alias("cell_size"),
-        (F.count(F.lit(1)) < _KANON_K).alias("at_risk"),
-    )
+register_sql("k_anonymity_report", _KANON_SQL)
 
 
 # ===========================================================================
@@ -745,47 +624,7 @@ SELECT change_type,
 FROM j GROUP BY change_type
 """
 
-
-@register("snapshot_diff_report", _SNAPDIFF_SQL)
-def snapshot_diff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fingerprint-based diff of two table snapshots (added / deleted /
-    changed / unchanged), reduced to per-class counts and key bounds.
-
-    Plan: each side projects (key, md5 fingerprint) — 2 narrow scans —
-    then ONE full-outer sort-merge join on the primary key and a 4-group
-    aggregation. Row payloads never shuffle (only key + 32-char hash);
-    at 100 TB both sides hash-partition on the same key so the join is
-    the only exchange, and the report is constant-size."""
-    o = read_table(spark, sf_dir, "orders")
-    def cents(c):
-        return F.floor(c * 100 + F.lit(0.5)).cast("long")
-
-    fp_a = F.md5(
-        F.concat_ws("|", F.col("o_orderstatus"), cents(F.col("o_totalprice")))
-    )
-    price_b = F.when(
-        F.col("o_orderstatus") == "P", F.col("o_totalprice") * 1.1
-    ).otherwise(F.col("o_totalprice"))
-    fp_b = F.md5(F.concat_ws("|", F.col("o_orderstatus"), cents(price_b)))
-    a = o.filter(F.col("o_orderkey") % 89 != 0).select(
-        F.col("o_orderkey").alias("ka"), fp_a.alias("fpa")
-    )
-    b = o.filter(F.col("o_orderkey") % 97 != 0).select(
-        F.col("o_orderkey").alias("kb"), fp_b.alias("fpb")
-    )
-    j = a.join(b, a.ka == b.kb, "full_outer").select(
-        F.coalesce("ka", "kb").alias("k"),
-        F.when(F.col("ka").isNull(), "added")
-        .when(F.col("kb").isNull(), "deleted")
-        .when(F.col("fpa") != F.col("fpb"), "changed")
-        .otherwise("unchanged")
-        .alias("change_type"),
-    )
-    return j.groupBy("change_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        F.min("k").cast("long").alias("min_key"),
-        F.max("k").cast("long").alias("max_key"),
-    )
+register_sql("snapshot_diff_report", _SNAPDIFF_SQL)
 
 
 # ===========================================================================
@@ -1160,35 +999,7 @@ SELECT c_nationkey, c_mktsegment,
 FROM cells
 """
 
-
-@register("l_diversity_report", _LDIV_SQL)
-def l_diversity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct + entropy l-diversity of the acctbal band within each
-    (nation, segment) QI cell, with the l < 3 homogeneity-risk flag."""
-    c = read_table(spark, sf_dir, "customer")
-    cb = c.groupBy(
-        "c_nationkey",
-        "c_mktsegment",
-        F.floor(F.col("c_acctbal") / 1000.0).cast("long").alias("band"),
-    ).agg(F.count(F.lit(1)).cast("double").alias("n"))
-    wcell = Window.partitionBy("c_nationkey", "c_mktsegment")
-    staged = cb.withColumn("cell_n", F.sum("n").over(wcell))
-    cells = staged.groupBy("c_nationkey", "c_mktsegment").agg(
-        F.sum("n").cast("long").alias("cell_size"),
-        F.count(F.lit(1)).cast("long").alias("l_distinct"),
-        F.sum(
-            -(F.col("n") / F.col("cell_n"))
-            * F.log(F.col("n") / F.col("cell_n"))
-        ).alias("h"),
-    )
-    return cells.select(
-        "c_nationkey",
-        "c_mktsegment",
-        "cell_size",
-        "l_distinct",
-        dround(F.exp(F.col("h")), 6).alias("entropy_l"),
-        (F.col("l_distinct") < _LDIV_L).alias("at_risk"),
-    )
+register_sql("l_diversity_report", _LDIV_SQL)
 
 
 # ===========================================================================

@@ -16,7 +16,7 @@ work (see repo contract in `__spark_entry__.py` docstring):
 - Timestamps never appear raw in an output: both engines emit epoch-seconds
   longs (Spark ``cast(ts as long)``, DuckDB ``floor(epoch(ts))``).
 
-Each builder cites the reference operator rows (SURVEY.md §2a O-numbers /
+Each query cites the reference operator rows (SURVEY.md §2a O-numbers /
 file:line of `/root/reference`) it re-expresses.
 """
 
@@ -25,10 +25,10 @@ from __future__ import annotations
 import functools
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.prices import parse_price_usd, parse_price_usd_sql
+from ..functions.prices import parse_price_usd_sql
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.text import (
     avg_token_length,
@@ -39,14 +39,12 @@ from ..functions.text import (
     tokens,
 )
 from ..operators.dedup import (
-    exact_dedup_groups,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
 )
-from ..operators.deviation import group_vs_global_avg
 from ..operators.similarity import knn_join, topk_cosine
 from ..session import release_pins
-from ..sources.tables import read_table, values_frame
+from ..sources.tables import read_table, table_views
 from ..streaming.windows import (
     session_stats,
     sliding_counts,
@@ -67,6 +65,23 @@ def register(name: str, oracle: str | None):
         return fn
 
     return deco
+
+
+# Names registered through `register_sql`.
+SQL_QUERIES: set[str] = set()
+
+
+def register_sql(name: str, sql: str) -> None:
+    """Register a query whose Spark plan is its oracle text: one SQL
+    string, run by both engines, over temp views of the fixture tables it
+    names (`table_views`; no view outlives the build)."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        with table_views(spark, sf_dir, sql):
+            return spark.sql(sql)
+
+    register(name, sql)(build)
+    SQL_QUERIES.add(name)
 
 
 # The driver's CORRECTNESS gate samples the FIRST 50 entries of `queries()`,
@@ -204,27 +219,7 @@ SELECT
 FROM per_group, world
 """
 
-
-@register("flagship_nation_price_dev", _FLAGSHIP_SQL)
-def flagship_nation_price_dev(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation avg order value vs world avg with perc/abs deviation —
-    the reference's analytical core transplanted onto the star schema
-    (world_map_transformer.py:120-125; SURVEY.md §7.4)."""
-    orders = read_table(spark, sf_dir, "orders")
-    customer = read_table(spark, sf_dir, "customer")
-    nation = read_table(spark, sf_dir, "nation")
-    joined = orders.join(
-        customer, orders.o_custkey == customer.c_custkey
-    ).join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-    dev = group_vs_global_avg(
-        joined.select("n_name", "o_totalprice"), "n_name", "o_totalprice"
-    )
-    return dev.select(
-        "n_name",
-        dround(F.col("usd_price"), 4).alias("usd_price"),
-        dround(F.col("perc_dif"), 6).alias("perc_dif"),
-        dround(F.col("usd_dif"), 4).alias("usd_dif"),
-    )
+register_sql("flagship_nation_price_dev", _FLAGSHIP_SQL)
 
 
 # ===========================================================================
@@ -237,21 +232,7 @@ FROM customer
 WHERE c_mktsegment = 'BUILDING' AND c_acctbal IS NOT NULL AND c_acctbal > 100.0
 """
 
-
-@register("proj_filter_customers", _PROJ_FILTER_SQL)
-def proj_filter_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Projection + equality/not-null/range predicates (O16-O19,
-    world_map_transformer.py:120,172,181,210). The filter and the 3-column
-    projection both reach the parquet scan (PushedFilters/ReadSchema)."""
-    c = read_table(spark, sf_dir, "customer")
-    return (
-        c.filter(
-            (F.col("c_mktsegment") == "BUILDING")
-            & F.col("c_acctbal").isNotNull()
-            & (F.col("c_acctbal") > 100.0)
-        )
-        .select("c_custkey", "c_name", dround(F.col("c_acctbal"), 2).alias("acctbal"))
-    )
+register_sql("proj_filter_customers", _PROJ_FILTER_SQL)
 
 
 # ===========================================================================
@@ -268,13 +249,7 @@ FROM customer
 GROUP BY 1
 """
 
-
-@register("case_remap_counts", _CASE_REMAP_SQL)
-def case_remap_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = read_table(spark, sf_dir, "customer")
-    seg = F.lower(F.col("c_mktsegment"))
-    remapped = F.when(seg == "building", F.lit("bldg")).otherwise(seg)
-    return c.groupBy(remapped.alias("segment")).agg(F.count(F.lit(1)).alias("n"))
+register_sql("case_remap_counts", _CASE_REMAP_SQL)
 
 
 # ===========================================================================
@@ -306,21 +281,7 @@ SELECT p_partkey, price_str,
 FROM priced
 """
 
-
-@register("price_parse_locale", _PRICE_PARSE_SQL)
-def price_parse_locale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-hypothesis locale price parse as pure expressions (O20-O21),
-    evaluated from the oracle's own SQL strings."""
-    priced = read_table(spark, sf_dir, "part").selectExpr(
-        "p_partkey",
-        f"{_PRICE_STR_SQL} AS price_str",
-        "CAST(1 + p_partkey % 7 AS DOUBLE) AS ex_rate",
-    )
-    return priced.select(
-        "p_partkey",
-        "price_str",
-        dround(parse_price_usd("price_str", "ex_rate"), 6).alias("usd_price"),
-    )
+register_sql("price_parse_locale", _PRICE_PARSE_SQL)
 
 
 # ===========================================================================
@@ -358,6 +319,8 @@ def broadcast_join_orders_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Left outer join keeping unmatched dim rows with NULL stats (O14,
+# world_map_transformer.py:205-208).
 _LEFT_JOIN_SQL = f"""
 SELECT n_name,
        CAST(coalesce(cs.n_cust, 0) AS BIGINT) AS n_cust,
@@ -369,42 +332,22 @@ LEFT JOIN (
 ) cs ON n_nationkey = c_nationkey
 """
 
-
-@register("left_join_nation_customer_stats", _LEFT_JOIN_SQL)
-def left_join_nation_customer_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left outer join keeping unmatched dim rows with NULL stats (O14,
-    world_map_transformer.py:205-208)."""
-    n = read_table(spark, sf_dir, "nation")
-    c = read_table(spark, sf_dir, "customer")
-    stats = c.groupBy("c_nationkey").agg(
-        F.count(F.lit(1)).alias("n_cust0"), F.avg("c_acctbal").alias("avg_bal0")
-    )
-    return (
-        n.join(stats, n.n_nationkey == stats.c_nationkey, "left")
-        .select(
-            "n_name",
-            F.coalesce(F.col("n_cust0"), F.lit(0)).cast("long").alias("n_cust"),
-            dround(F.col("avg_bal0"), 2).alias("avg_bal"),
-        )
-    )
+register_sql("left_join_nation_customer_stats", _LEFT_JOIN_SQL)
 
 
+# Cross product of two small dims (O10: the apps x countries nested loop,
+# steam_prices_transformer.py:154-156).
 _CROSS_JOIN_SQL = """
 SELECT r_name, s.o_orderstatus
 FROM region
 CROSS JOIN (SELECT DISTINCT o_orderstatus FROM orders) s
 """
 
-
-@register("cross_join_region_status", _CROSS_JOIN_SQL)
-def cross_join_region_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross product of two small dims (O10: the apps x countries nested
-    loop, steam_prices_transformer.py:154-156)."""
-    r = read_table(spark, sf_dir, "region").select("r_name")
-    s = read_table(spark, sf_dir, "orders").select("o_orderstatus").distinct()
-    return r.crossJoin(s)
+register_sql("cross_join_region_status", _CROSS_JOIN_SQL)
 
 
+# Substring-predicate (theta) anti join (O15: the sub-prefix file filter,
+# external_resources.py:93-97).
 _ANTI_JOIN_SQL = """
 SELECT lang, CAST(count(*) AS BIGINT) AS n_docs
 FROM documents d
@@ -415,21 +358,7 @@ WHERE NOT EXISTS (
 GROUP BY lang
 """
 
-
-@register("anti_join_substring", _ANTI_JOIN_SQL)
-def anti_join_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring-predicate (theta) anti join (O15: the sub-prefix file
-    filter, external_resources.py:93-97). Non-equi, so Spark plans a
-    broadcast nested loop — correct call here because the probe side is a
-    tiny literal list; the fact side still streams."""
-    d = read_table(spark, sf_dir, "documents")
-    prefixes = values_frame(spark, [("src1",), ("src3",)], ["pref"])
-    kept = d.join(
-        F.broadcast(prefixes),
-        F.col("source").contains(F.col("pref")),
-        "left_anti",
-    )
-    return kept.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
+register_sql("anti_join_substring", _ANTI_JOIN_SQL)
 
 
 # ===========================================================================
@@ -443,19 +372,7 @@ SELECT o_orderkey,
 FROM orders
 """
 
-
-@register("window_max_fill", _WINDOW_FILL_SQL)
-def window_max_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Conditional fill from a windowed group max — the EU max-fill pattern
-    (O29, world_map_transformer.py:209-211). Shuffles once on the partition
-    key; at scale the key (customer) is high-cardinality so the window
-    parallelizes cleanly."""
-    o = read_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey")
-    filled = F.when(
-        F.col("o_orderstatus") == "P", F.max("o_totalprice").over(w)
-    ).otherwise(F.col("o_totalprice"))
-    return o.select("o_orderkey", dround(filled, 2).alias("filled_price"))
+register_sql("window_max_fill", _WINDOW_FILL_SQL)
 
 
 _TOP1_SQL = f"""
@@ -493,18 +410,7 @@ SELECT CAST(count(*) AS BIGINT) AS n_rows,
 FROM orders
 """
 
-
-@register("global_agg_stats", _GLOBAL_AGG_SQL)
-def global_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ungrouped aggregates (O27 world mean, O30 min/max color bounds)."""
-    o = read_table(spark, sf_dir, "orders")
-    return o.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("o_custkey").alias("n_cust"),
-        dround(F.avg("o_totalprice"), 4).alias("avg_price"),
-        dround(F.min("o_totalprice"), 2).alias("min_price"),
-        dround(F.max("o_totalprice"), 2).alias("max_price"),
-    )
+register_sql("global_agg_stats", _GLOBAL_AGG_SQL)
 
 
 # ===========================================================================
@@ -526,28 +432,7 @@ WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
 """
 
-
-@register("tpch_q1_pricing_summary", _Q1_SQL)
-def tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1 shape: wide grouped aggregate over the fact table. The
-    shipdate predicate is pushed to the parquet scan; the groupBy has ~6
-    groups so partial (map-side) aggregation does nearly all the work."""
-    l = read_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        l.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dround(F.sum("l_quantity"), 2).alias("sum_qty"),
-            dround(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            dround(F.sum(disc_price), 2).alias("sum_disc_price"),
-            dround(F.sum(disc_price * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
-            dround(F.avg("l_quantity"), 4).alias("avg_qty"),
-            dround(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            dround(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
+register_sql("tpch_q1_pricing_summary", _Q1_SQL)
 
 
 _Q3_SQL = f"""
@@ -654,18 +539,11 @@ FROM documents
 GROUP BY text
 """
 
-
-@register("dedup_exact_groups", _DEDUP_EXACT_SQL)
-def dedup_exact_groups_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup via hash groupBy with deterministic min-id keeper."""
-    d = read_table(spark, sf_dir, "documents")
-    return exact_dedup_groups(d, "text", "doc_id").select(
-        "text",
-        F.col("keeper_id").cast("long").alias("keeper_id"),
-        "n_copies",
-    )
+register_sql("dedup_exact_groups", _DEDUP_EXACT_SQL)
 
 
+# Exact dedup keyed on a CONTENT HASH — the 100 TB form of
+# dedup_exact_groups: the shuffle carries 32 bytes per doc, not its body.
 _DEDUP_HASH_SQL = """
 SELECT md5(text) AS content_hash,
        CAST(min(doc_id) AS BIGINT) AS keeper_id,
@@ -674,23 +552,7 @@ FROM documents
 GROUP BY 1
 """
 
-
-@register("dedup_exact_by_hash", _DEDUP_HASH_SQL)
-def dedup_exact_by_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup keyed on a CONTENT HASH — the 100 TB form of
-    dedup_exact_groups. Grouping by raw text shuffles every document body
-    as its own grouping key; grouping by md5 shuffles 32 bytes per doc
-    and the map-side partial aggregate already collapses local
-    duplicates. Collision risk at 128 bits is ~n^2/2^129 — zero in
-    practice (and a paranoid deployment re-verifies within groups)."""
-    d = read_table(spark, sf_dir, "documents")
-    return (
-        d.groupBy(F.md5(F.col("text").cast("binary")).alias("content_hash"))
-        .agg(
-            F.min("doc_id").cast("long").alias("keeper_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-    )
+register_sql("dedup_exact_by_hash", _DEDUP_HASH_SQL)
 
 
 # Shared SQL fragments for shingle-based dedup. DuckDB list_slice is 1-based

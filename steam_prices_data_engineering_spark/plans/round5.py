@@ -31,8 +31,8 @@ from ..functions.rounding import dround, dround_sql as R
 from ..functions.text import tokens
 from ..operators.similarity import group_pairs
 from ..session import pin
-from ..sources.tables import read_table, values_frame
-from .registry import register
+from ..sources.tables import read_table
+from .registry import register, register_sql
 
 # ===========================================================================
 # Sequential A/B monitoring (SPRT, Wald 1945): group-sequential log-
@@ -314,62 +314,7 @@ SELECT CAST(n_.n AS BIGINT) AS n_docs,
 FROM mi CROSS JOIN hs CROSS JOIN hl CROSS JOIN n_
 """
 
-
-@register("cluster_eval_nmi_purity", _NMI_SQL)
-def cluster_eval_nmi_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NMI and purity of the source partition against the lang classes.
-
-    The contingency table is the only fact-grain reduction; cs/cl
-    marginals and the MI/entropy sums are all table-grain. Joins to the
-    marginals are hint-free — the source domain can grow with the
-    corpus, so the strategy stays size-based (AQE)."""
-    d = read_table(spark, sf_dir, "documents")
-    ct = d.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).cast("double").alias("c")
-    )
-    n_ = ct.agg(F.sum("c").alias("n"))
-    cs = ct.groupBy("source").agg(
-        F.sum("c").alias("csum"), F.max("c").alias("cmax")
-    )
-    cl = ct.groupBy("lang").agg(F.sum("c").alias("lsum"))
-    mi = (
-        ct.join(cs, "source")
-        .join(cl, "lang")
-        .crossJoin(F.broadcast(n_))
-        .agg(
-            F.sum(
-                (F.col("c") / F.col("n"))
-                * F.log(
-                    F.col("c") * F.col("n") / (F.col("csum") * F.col("lsum"))
-                )
-            ).alias("i")
-        )
-    )
-    hs = cs.crossJoin(F.broadcast(n_)).agg(
-        (-F.sum(
-            (F.col("csum") / F.col("n")) * F.log(F.col("csum") / F.col("n"))
-        )).alias("h"),
-        F.sum("cmax").alias("maxsum"),
-    )
-    hl = cl.crossJoin(F.broadcast(n_)).agg(
-        (-F.sum(
-            (F.col("lsum") / F.col("n")) * F.log(F.col("lsum") / F.col("n"))
-        )).alias("h2")
-    )
-    return (
-        mi.crossJoin(F.broadcast(hs))
-        .crossJoin(F.broadcast(hl))
-        .crossJoin(F.broadcast(n_))
-        .select(
-            F.col("n").cast("long").alias("n_docs"),
-            dround(F.col("i") / F.sqrt(F.col("h") * F.col("h2")), 6).alias(
-                "nmi"
-            ),
-            dround(F.col("maxsum") / F.col("n"), 6).alias("purity"),
-            dround(F.col("h"), 6).alias("h_cluster"),
-            dround(F.col("h2"), 6).alias("h_class"),
-        )
-    )
+register_sql("cluster_eval_nmi_purity", _NMI_SQL)
 
 
 # ===========================================================================
@@ -1391,82 +1336,7 @@ SELECT event_type, {R('az', 4)} AS z_abs, p_value, p_rank, bh_crit,
 FROM cut
 """
 
-
-@register("ab_benjamini_hochberg", _BH_SQL)
-def ab_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BH step-up over per-event-type z-tests (even/odd user arms).
-
-    One conditional-sum fact pass (the ab_test_welch monoid columns);
-    everything after runs on the bounded segment grain — the global
-    windows cover |event-type vocabulary| rows (census-allowlisted)."""
-    e = read_table(spark, sf_dir, "events")
-    arm_a = F.col("user_id") % 2 == 0
-
-    def cs(cond, col):
-        return F.sum(F.when(cond, col))
-
-    agg = e.groupBy("event_type").agg(
-        F.count(F.when(arm_a, F.lit(1))).cast("double").alias("na"),
-        cs(arm_a, F.col("value")).alias("sa"),
-        cs(arm_a, F.col("value") * F.col("value")).alias("qa"),
-        F.count(F.when(~arm_a, F.lit(1))).cast("double").alias("nb"),
-        cs(~arm_a, F.col("value")).alias("sb"),
-        cs(~arm_a, F.col("value") * F.col("value")).alias("qb"),
-    )
-    va = (F.col("qa") - F.col("sa") * F.col("sa") / F.col("na")) / (
-        F.col("na") - 1
-    )
-    vb = (F.col("qb") - F.col("sb") * F.col("sb") / F.col("nb")) / (
-        F.col("nb") - 1
-    )
-    az = F.abs(
-        (F.col("sa") / F.col("na") - F.col("sb") / F.col("nb"))
-        / F.sqrt(va / F.col("na") + vb / F.col("nb"))
-    )
-    ps = agg.filter((F.col("na") > 1) & (F.col("nb") > 1)).select(
-        "event_type",
-        az.alias("az"),
-    ).select(
-        "event_type",
-        "az",
-        dround(F.expr(_sql_pvalue_two_sided("az")), 6).alias("p_value"),
-    )
-    wall = Window.orderBy("p_value", "event_type")
-    ranked = ps.select(
-        "event_type",
-        "az",
-        "p_value",
-        F.row_number().over(wall).cast("long").alias("p_rank"),
-        F.count(F.lit(1)).over(
-            Window.partitionBy()
-        ).cast("double").alias("m"),
-    )
-    q = float(_BH_Q)
-    crit = dround(F.col("p_rank") * q / F.col("m"), 6)
-    cut = ranked.select(
-        "event_type",
-        "az",
-        "p_value",
-        "p_rank",
-        crit.alias("bh_crit"),
-        F.max(
-            F.when(F.col("p_value") <= crit, F.col("p_rank"))
-        ).over(
-            Window.partitionBy().rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("k"),
-    )
-    return cut.select(
-        "event_type",
-        dround(F.col("az"), 4).alias("z_abs"),
-        "p_value",
-        "p_rank",
-        "bh_crit",
-        F.coalesce(F.col("p_rank") <= F.col("k"), F.lit(False)).alias(
-            "rejected"
-        ),
-    )
+register_sql("ab_benjamini_hochberg", _BH_SQL)
 
 
 # ===========================================================================
@@ -1829,29 +1699,7 @@ SELECT CAST(c.bands AS BIGINT) AS bands, CAST(c.rws AS BIGINT) AS rws,
 FROM cfg c CROSS JOIN grid g
 """
 
-
-@register("lsh_parameter_curve", _LSH_CURVE_SQL)
-def lsh_parameter_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S-curves for the (b, r) splits of a 16-signature MinHash budget."""
-    cfg = values_frame(spark, list(_LSH_CONFIGS), ["bands", "rws"]).select(
-        F.col("bands").cast("long"), F.col("rws").cast("long")
-    )
-    grid = values_frame(spark, [(float(s),) for s in _LSH_GRID], ["s"])
-    p = 1.0 - F.pow(
-        1.0 - F.pow(F.col("s"), F.col("rws")), F.col("bands")
-    )
-    # broadcast: a plain crossJoin of two parallelized literal frames is
-    # a CartesianProduct whose partition count MULTIPLIES (32 x 32 =
-    # 1024 tasks for 76 rows — measured 19.6s of pure scheduling).
-    return cfg.crossJoin(F.broadcast(grid)).select(
-        "bands",
-        "rws",
-        dround(F.col("s"), 2).alias("jaccard_s"),
-        dround(p, 6).alias("p_candidate"),
-        dround(
-            F.pow(1.0 / F.col("bands"), 1.0 / F.col("rws")), 6
-        ).alias("threshold_50"),
-    )
+register_sql("lsh_parameter_curve", _LSH_CURVE_SQL)
 
 
 # ===========================================================================

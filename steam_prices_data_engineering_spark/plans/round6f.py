@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import dround, dround_sql as R
 from ..functions.text import token_count, tokens
 from ..sources.tables import read_table, values_frame
-from .registry import register
+from .registry import register, register_sql
 
 # ===========================================================================
 # Chinchilla compute-optimal allocation (Hoffmann et al. 2022): under
@@ -283,38 +283,4 @@ SELECT level,
 FROM labeled GROUP BY level
 """
 
-
-@register("kanon_generalization_sweep", _KANON_SQL)
-def kanon_generalization_sweep(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Min group size + sub-k mass at each QI generalization level."""
-    c = read_table(spark, sf_dir, "customer")
-    band = F.floor(F.col("c_acctbal") / 500.0).cast("long")
-    cell = c.rollup(
-        F.col("c_nationkey"), F.col("c_mktsegment"), band.alias("band")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
-    # mirrors the oracle's empty-input pin (no-op on any real corpus)
-    cell = cell.filter(F.col("n") > 0)
-    labeled = cell.select(
-        F.when(F.col("band").isNotNull(), "nation+segment+band")
-        .when(F.col("c_mktsegment").isNotNull(), "nation+segment")
-        .when(F.col("c_nationkey").isNotNull(), "nation")
-        .otherwise("all")
-        .alias("level"),
-        "n",
-    )
-    return labeled.groupBy("level").agg(
-        F.count(F.lit(1)).cast("long").alias("n_groups"),
-        F.min("n").cast("long").alias("k_min"),
-        dround(
-            F.sum(
-                F.when(
-                    F.col("n") < _KANON_K, F.col("n").cast("double")
-                ).otherwise(0.0)
-            )
-            / F.sum("n"),
-            6,
-        ).alias("pct_rows_below_k"),
-        (F.min("n") >= _KANON_K).alias("k_anonymous"),
-    )
+register_sql("kanon_generalization_sweep", _KANON_SQL)

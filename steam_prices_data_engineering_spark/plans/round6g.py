@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
 from ..sources.tables import read_table
-from .registry import register
+from .registry import register, register_sql
 
 # ===========================================================================
 # Join-cardinality estimation audit: per hash bucket of the join key,
@@ -76,53 +76,7 @@ FROM ob JOIN lb ON lb.bucket = ob.bucket
 LEFT JOIN ex ON ex.bucket = ob.bucket
 """
 
-
-@register("join_cardinality_audit", _JCA_SQL)
-def join_cardinality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Selinger bucket estimate vs exact orders-lineitem join size."""
-    o = read_table(spark, sf_dir, "orders")
-    li = read_table(spark, sf_dir, "lineitem")
-    ok = o.groupBy(F.col("o_orderkey").alias("k")).agg(
-        F.count(F.lit(1)).cast("double").alias("co")
-    )
-    lk = li.groupBy(F.col("l_orderkey").alias("k")).agg(
-        F.count(F.lit(1)).cast("double").alias("cl")
-    )
-    bucket = F.pmod(F.col("k"), F.lit(_JCA_B))
-    ob = ok.groupBy(bucket.alias("bucket")).agg(
-        F.sum("co").alias("n_o"),
-        F.count(F.lit(1)).cast("double").alias("d_o"),
-    )
-    lb = lk.groupBy(bucket.alias("bucket")).agg(
-        F.sum("cl").alias("n_l"),
-        F.count(F.lit(1)).cast("double").alias("d_l"),
-    )
-    ex = (
-        ok.join(lk, "k")
-        .groupBy(bucket.alias("bucket"))
-        .agg(F.sum(F.col("co") * F.col("cl")).alias("exact_join"))
-    )
-    est = F.col("n_o") * F.col("n_l") / F.greatest(
-        F.col("d_o"), F.col("d_l")
-    )
-    return (
-        ob.join(lb, "bucket")
-        .join(ex, "bucket", "left")
-        .select(
-            F.col("bucket").cast("long").alias("bucket"),
-            F.col("n_o").cast("long").alias("n_orders"),
-            F.col("n_l").cast("long").alias("n_lineitem"),
-            F.col("d_o").cast("long").alias("d_orders"),
-            F.col("d_l").cast("long").alias("d_lineitem"),
-            dround(est, 2).alias("est_join"),
-            F.coalesce(F.col("exact_join"), F.lit(0.0))
-            .cast("long")
-            .alias("exact_join"),
-            dround(
-                est / F.nullif(F.col("exact_join"), F.lit(0.0)), 6
-            ).alias("est_over_exact"),
-        )
-    )
+register_sql("join_cardinality_audit", _JCA_SQL)
 
 
 # ===========================================================================

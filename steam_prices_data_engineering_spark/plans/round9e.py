@@ -22,7 +22,7 @@ jumping, and local differential privacy.
   pi-expansion estimator (see its docstring): the inference step that
   makes the existing weighted/reservoir sampling family actionable.
 - `fd_violation_audit` — functional-dependency profiling across the
-  warehouse (see its docstring): the dependency check run before
+  warehouse: the dependency check run before
   trusting a column as a dimension key.
 
 No counterpart in the reference (a single-threaded pandas ETL,
@@ -53,7 +53,7 @@ from ..functions.sqlfrag import sql_md5_hex6_to_int, sql_shinglehash_ctes
 from ..functions.text import md5_hex6_to_int
 from ..session import pin
 from ..sources.tables import read_table
-from .registry import register
+from .registry import register, register_sql
 
 # ---------------------------------------------------------------------------
 # BFS hop distribution over the near-dup candidate graph
@@ -596,42 +596,4 @@ FROM (
 )""")
     return "\nUNION ALL\n".join(parts)
 
-
-@register("fd_violation_audit", _fd_sql())
-def fd_violation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-profiling FD audit (the Metanome-style dependency check a
-    warehouse runs before trusting a column as a dimension key): per
-    candidate X -> Y, the LHS-group census — groups, violating groups
-    (more than one distinct non-NULL Y), worst fan-out, and how many
-    rows sit inside violating groups. One map-side-combined aggregate
-    per table; the LHS shuffle is the only exchange per candidate."""
-    outs = []
-    for tbl, lhs, rhs in _FD_CANDIDATES:
-        t = (
-            read_table(spark, sf_dir, tbl)
-            .filter(F.col(lhs).isNotNull() & F.col(rhs).isNotNull())
-            .select(lhs, rhs)
-        )
-        grp = t.groupBy(lhs).agg(
-            F.countDistinct(rhs).alias("n_rhs"),
-            F.count(F.lit(1)).alias("grp_rows"),
-        )
-        outs.append(
-            grp.agg(
-                F.lit(f"{tbl}.{lhs}->{rhs}").alias("fd"),
-                F.count(F.lit(1)).cast("long").alias("n_groups"),
-                F.sum(F.when(F.col("n_rhs") > 1, 1).otherwise(0))
-                .cast("long")
-                .alias("n_violating"),
-                F.max("n_rhs").cast("long").alias("max_distinct_rhs"),
-                F.sum(
-                    F.when(F.col("n_rhs") > 1, F.col("grp_rows")).otherwise(0)
-                )
-                .cast("long")
-                .alias("rows_in_violating"),
-            )
-        )
-    out = outs[0]
-    for extra in outs[1:]:
-        out = out.unionByName(extra)
-    return out
+register_sql("fd_violation_audit", _fd_sql())

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround, dround_sql as R
-from ..sources.tables import read_table
+from ..sources.tables import read_table, table_views
 from .registry import register
 
 # ===========================================================================
@@ -101,13 +101,9 @@ def udtf_token_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield t, i
 
     spark.udtf.register("token_explode", TokenExplode)
-    read_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "udtf_docs_v"
-    )
-    exploded = spark.sql(
-        "SELECT doc_id, t.tok, t.pos FROM udtf_docs_v, "
-        "LATERAL token_explode(text) t"
-    )
+    sql = "SELECT doc_id, t.tok, t.pos FROM documents, LATERAL token_explode(text) t"
+    with table_views(spark, sf_dir, sql):
+        exploded = spark.sql(sql)
     return (
         exploded.groupBy(
             F.floor(F.col("pos") / 8).cast("long").alias("pos_band")

@@ -1,8 +1,9 @@
 """SQL-entry-point surface: the same engine driven through `spark.sql` over
-registered temp views — scalar subqueries, HAVING, and IN-subqueries, which
-exercise Catalyst's subquery decorrelation. The reference has no SQL layer
-(SURVEY.md §3: eager pandas dataflow); this is the Spark-native query
-doorway a user of the engine gets for free.
+build-scoped temp views (`sources.tables.table_views`) — scalar
+subqueries, HAVING, and IN-subqueries, which exercise Catalyst's subquery
+decorrelation. The reference has no SQL layer (SURVEY.md §3: eager pandas
+dataflow); this is the Spark-native query doorway a user of the engine
+gets for free.
 """
 
 from __future__ import annotations
@@ -10,17 +11,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.rounding import dround_sql as R
-from ..sources.tables import read_table
-from .registry import register
-
-
-def _register_views(spark: SparkSession, sf_dir: str, names: list[str]) -> None:
-    for name in names:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
+from ..sources.tables import read_table, table_views
+from .registry import register, register_sql
 
 # Scalar subquery: customers whose balance beats the global average —
-# Catalyst plans the scalar subquery as a broadcast one-row join.
+# Catalyst plans the scalar subquery as a broadcast one-row join. The SQL
+# text doubles as its own oracle — both engines parse the same query.
 _SCALAR_SUBQ = f"""
 SELECT c_nationkey, CAST(count(*) AS BIGINT) AS n_above_avg
 FROM customer
@@ -28,23 +24,18 @@ WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer)
 GROUP BY c_nationkey
 """
 
-
-@register("sql_scalar_subquery", _SCALAR_SUBQ)
-def sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """spark.sql + scalar subquery (above-global-average filter). The SQL
-    text doubles as its own oracle — both engines parse the same query."""
-    _register_views(spark, sf_dir, ["customer"])
-    return spark.sql(_SCALAR_SUBQ)
+register_sql("sql_scalar_subquery", _SCALAR_SUBQ)
 
 
-# HAVING + IN-subquery: TPC-H Q18 shape (large-order customers).
-# CAST(... AS DOUBLE) because this exact text runs on BOTH engines and
-# Spark SQL parses the 10^s literals inside dround_sql as DECIMAL (the
-# DataFrame-API dround uses Python float literals and never hits this).
+# HAVING + IN-subquery: TPC-H Q18 shape (large-order customers): grouped
+# HAVING over the fact table, joined back to orders, top-20. The HAVING
+# aggregation shuffles on l_orderkey once; the join back to orders reuses
+# high-cardinality keys (sort-merge or shuffled-hash under AQE); top-k is
+# TakeOrderedAndProject.
 _Q18_SQL = f"""
 SELECT o.o_orderkey,
-       CAST({R('agg.qty', 2)} AS DOUBLE) AS total_qty,
-       CAST({R('o.o_totalprice', 2)} AS DOUBLE) AS o_totalprice
+       {R('agg.qty', 2)} AS total_qty,
+       {R('o.o_totalprice', 2)} AS o_totalprice
 FROM orders o
 JOIN (
     SELECT l_orderkey, sum(l_quantity) AS qty
@@ -56,18 +47,11 @@ ORDER BY o.o_totalprice DESC, o.o_orderkey ASC
 LIMIT 20
 """
 
-
-@register("sql_tpch_q18_large_orders", _Q18_SQL)
-def sql_tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape via spark.sql: grouped HAVING over the fact table,
-    joined back to orders, top-20. The HAVING aggregation shuffles on
-    l_orderkey once; the join back to orders reuses high-cardinality keys
-    (sort-merge or shuffled-hash under AQE); top-k is TakeOrderedAndProject."""
-    _register_views(spark, sf_dir, ["orders", "lineitem"])
-    return spark.sql(_Q18_SQL)
+register_sql("sql_tpch_q18_large_orders", _Q18_SQL)
 
 
-# IN-subquery (decorrelated to a semi join by Catalyst).
+# IN-subquery: Catalyst decorrelates it into a left semi join (same
+# physical shape as semi_join_active_customers).
 _IN_SUBQ_SQL = """
 SELECT p_brand, CAST(count(*) AS BIGINT) AS n_parts
 FROM part
@@ -77,13 +61,7 @@ WHERE p_partkey IN (
 GROUP BY p_brand
 """
 
-
-@register("sql_in_subquery", _IN_SUBQ_SQL)
-def sql_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IN-subquery via spark.sql — Catalyst decorrelates it into a left semi
-    join (same physical shape as semi_join_active_customers)."""
-    _register_views(spark, sf_dir, ["part", "lineitem"])
-    return spark.sql(_IN_SUBQ_SQL)
+register_sql("sql_in_subquery", _IN_SUBQ_SQL)
 
 
 # Unpivot (melt): wide measure columns -> long (measure, value) pairs.
@@ -134,22 +112,25 @@ GROUP BY o_orderpriority
 """
 
 
+_PARAM_SQL = f"""
+SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
+       {R('sum(o_totalprice)', 2)} AS revenue
+FROM orders
+WHERE o_orderdate >= :since AND o_totalprice > :min_total
+GROUP BY o_orderpriority
+"""
+
+
 @register("sql_parameterized_query", _PARAM_SQL_ORACLE)
 def sql_parameterized_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """spark.sql with named parameter markers (:since, :min_total) — the
     SQL doorway's prepared-statement form. Literals bind AFTER parsing,
     so the pushed-down filters are identical to inlined constants."""
-    _register_views(spark, sf_dir, ["orders"])
-    return spark.sql(
-        """
-        SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
-               CAST({R} AS DOUBLE) AS revenue
-        FROM orders
-        WHERE o_orderdate >= :since AND o_totalprice > :min_total
-        GROUP BY o_orderpriority
-        """.replace("{R}", R("sum(o_totalprice)", 2)),
-        args={"since": "1996-01-01 00:00:00", "min_total": 1000.0},
-    )
+    with table_views(spark, sf_dir, _PARAM_SQL):
+        return spark.sql(
+            _PARAM_SQL,
+            args={"since": "1996-01-01 00:00:00", "min_total": 1000.0},
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -192,14 +173,15 @@ def sql_recursive_cte_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     Each recursion step is a join against the (tiny, broadcastable) edge
     relation; the depth guard bounds the iteration exactly like the
     unrolled-CTE PageRank oracle, but here the ENGINE drives the loop."""
-    _register_views(spark, sf_dir, ["events"])
-    return spark.sql(_RECURSIVE_PATHS)
+    with table_views(spark, sf_dir, _RECURSIVE_PATHS):
+        return spark.sql(_RECURSIVE_PATHS)
 
 
 # ---------------------------------------------------------------------------
-# LATERAL correlated subquery: top-3 customers by balance per nation.
-# Catalyst decorrelates the lateral into a ranked window under the hood;
-# the SQL stays the natural "for each row, run this subquery" shape.
+# LATERAL correlated subquery (Spark 4): top-3 customers by balance per
+# nation, written as a per-row subquery. Catalyst rewrites the
+# decorrelated form into a partitioned rank — same physical shape as the
+# explicit window, so the ergonomic SQL costs nothing extra.
 # ---------------------------------------------------------------------------
 
 _LATERAL_TOPN = """
@@ -214,15 +196,7 @@ LATERAL (
 ) t
 """
 
-
-@register("sql_lateral_topn", _LATERAL_TOPN)
-def sql_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LATERAL subquery (Spark 4): per-nation top-3 customers by account
-    balance, written as a correlated per-row subquery. Catalyst rewrites
-    the decorrelated form into a partitioned rank — same physical shape
-    as the explicit window, so the ergonomic SQL costs nothing extra."""
-    _register_views(spark, sf_dir, ["nation", "customer"])
-    return spark.sql(_LATERAL_TOPN)
+register_sql("sql_lateral_topn", _LATERAL_TOPN)
 
 
 # ---------------------------------------------------------------------------
@@ -246,19 +220,19 @@ def sql_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     the follow-up query — Catalyst constant-folds it, so the filter
     arrives at the scan as a plain comparison (same plan as hand-inlining
     the number, minus the injection-prone string templating)."""
-    _register_views(spark, sf_dir, ["orders"])
-    spark.sql("DECLARE OR REPLACE VARIABLE price_bar DOUBLE")
-    spark.sql(
-        "SET VARIABLE price_bar = (SELECT avg(o_totalprice) FROM orders)"
-    )
-    return spark.sql(
-        """
-        SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_above
-        FROM orders
-        WHERE o_totalprice > price_bar
-        GROUP BY 1
-        """
-    )
+    with table_views(spark, sf_dir, _VARIABLES_ORACLE):
+        spark.sql("DECLARE OR REPLACE VARIABLE price_bar DOUBLE")
+        spark.sql(
+            "SET VARIABLE price_bar = (SELECT avg(o_totalprice) FROM orders)"
+        )
+        return spark.sql(
+            """
+            SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_above
+            FROM orders
+            WHERE o_totalprice > price_bar
+            GROUP BY 1
+            """
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -288,25 +262,25 @@ def sql_scripting_while_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs driver-side over scalar state; each data-touching statement is
     still a full Catalyst plan — procedural glue, declarative heavy
     lifting."""
-    _register_views(spark, sf_dir, ["orders"])
     prev = spark.conf.get("spark.sql.scripting.enabled", None)
     spark.conf.set("spark.sql.scripting.enabled", "true")
     try:
-        return spark.sql(
-            """
-            BEGIN
-              DECLARE bar DOUBLE;
-              DECLARE p DOUBLE DEFAULT 1.0;
-              DECLARE iters INT DEFAULT 0;
-              SET bar = (SELECT avg(o_totalprice) FROM orders);
-              WHILE p <= bar DO
-                SET p = p * 2;
-                SET iters = iters + 1;
-              END WHILE;
-              SELECT CAST(iters AS BIGINT) AS doublings, p AS pow2_above;
-            END
-            """
-        )
+        with table_views(spark, sf_dir, _SCRIPTING_ORACLE):
+            return spark.sql(
+                """
+                BEGIN
+                  DECLARE bar DOUBLE;
+                  DECLARE p DOUBLE DEFAULT 1.0;
+                  DECLARE iters INT DEFAULT 0;
+                  SET bar = (SELECT avg(o_totalprice) FROM orders);
+                  WHILE p <= bar DO
+                    SET p = p * 2;
+                    SET iters = iters + 1;
+                  END WHILE;
+                  SELECT CAST(iters AS BIGINT) AS doublings, p AS pow2_above;
+                END
+                """
+            )
     finally:
         if prev is None:
             spark.conf.unset("spark.sql.scripting.enabled")

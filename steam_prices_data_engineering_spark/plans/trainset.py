@@ -25,7 +25,7 @@ from ..functions.text import (
 )
 from ..sources.tables import read_table, spread
 from .decontam import _BENCH_MAX_ID, _SHINGLE_P, _SQL_TOKEN_HASH
-from .registry import register
+from .registry import register, register_sql
 
 _KEEP_LANGS = ("en", "de", "fr", "es")
 _MIN_TOKENS = 8
@@ -316,31 +316,7 @@ WHERE {knuth_sql('d.doc_id')} % 100 < floor(s.keep_rate * 100 + 0.5)
 GROUP BY d.lang
 """
 
-
-@register("corpus_mixture_resample", _MIX_SQL)
-def corpus_mixture_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language keep rates = target weight / observed count, scaled so
-    the scarcest language keeps 100%; each doc's keep decision hashes its
-    id against the rate. The rates come from a broadcast-scale aggregate
-    joined back onto the corpus — one fact pass to count, one to filter."""
-    d = read_table(spark, sf_dir, "documents")
-    w_expr = F.lit(0.0)
-    for lang, w in _TARGET_MIX.items():
-        w_expr = F.when(F.col("lang") == lang, F.lit(w)).otherwise(w_expr)
-    counted = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    rated = counted.select("lang", (w_expr / F.col("n")).alias("wpn"))
-    max_wpn = rated.agg(F.max("wpn").alias("max_wpn"))
-    scaled = rated.crossJoin(F.broadcast(max_wpn)).select(
-        "lang",
-        F.least(F.lit(1.0), F.col("wpn") / F.col("max_wpn")).alias("keep_rate"),
-    )
-    bucket = knuth_hash() % 100
-    return (
-        d.join(F.broadcast(scaled), "lang")
-        .filter(bucket < F.floor(F.col("keep_rate") * 100 + F.lit(0.5)))
-        .groupBy("lang")
-        .agg(F.count(F.lit(1)).alias("n_kept"))
-    )
+register_sql("corpus_mixture_resample", _MIX_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -362,25 +338,7 @@ FROM (
 WHERE rn <= {_STRAT_K}
 """
 
-
-@register("stratified_sample_per_lang", _STRAT_SQL)
-def stratified_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sample: the first K documents per language
-    in multiplicative-hash order — a reproducible stand-in for per-stratum
-    random sampling (Spark's sample()/sampleBy() depend on partitioning;
-    this is a pure function of the data). The rank filter sits directly on
-    its window, so WindowGroupLimit prunes each partition to K rows before
-    the full sort completes. This is the "inspect K examples per slice" /
-    "cap per-source contribution" primitive in corpus curation."""
-    d = read_table(spark, sf_dir, "documents")
-    hash_order = knuth_hash()
-    w = Window.partitionBy("lang").orderBy(hash_order.asc(), F.col("doc_id").asc())
-    return (
-        d.select("lang", "doc_id", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= _STRAT_K)
-        .select("lang", F.col("doc_id").cast("long").alias("doc_id"),
-                F.col("rn").cast("long").alias("rn"))
-    )
+register_sql("stratified_sample_per_lang", _STRAT_SQL)
 
 
 # ---------------------------------------------------------------------------

@@ -21,6 +21,7 @@ import logging
 import os
 import re
 import shutil
+import tempfile
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -73,6 +74,9 @@ def get_spark(
         # read as long and convert ns->us in the IO layer (DuckDB truncates
         # ns->us identically, keeping the oracle aligned).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # The catalog's default warehouse is `<cwd>/spark-warehouse`, made on
+        # the first catalog call; keep it out of the working directory.
+        .config("spark.sql.warehouse.dir", _warehouse_dir())
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
     )
@@ -81,9 +85,18 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def _warehouse_dir() -> str:
+    """A fixed catalog warehouse under the first SPARK_LOCAL_DIRS entry,
+    else the temp dir. No builder writes a managed table there."""
+    local = os.environ.get("SPARK_LOCAL_DIRS", "").split(",")[0]
+    return os.path.join(local or tempfile.gettempdir(), "spark-graft-warehouse")
+
+
 def configure_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine defaults to an externally-provided
-    session (the driver hands us one; we can't rebuild the JVM)."""
+    session (the driver hands us one; we can't rebuild the JVM). Static
+    settings stay the session's own: `spark.sql.warehouse.dir` among them,
+    so a handed-in session may still make `<cwd>/spark-warehouse`."""
     runtime = {
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.ansi.enabled": "false",

@@ -28,6 +28,9 @@ pipelines call before writing.
 from __future__ import annotations
 
 import os
+import re
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -223,6 +226,24 @@ def _read_table_fresh(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     else:
         df = df.select(*[f.name for f in schema.fields])
     return df
+
+
+@contextmanager
+def table_views(spark: SparkSession, sf_dir: str, sql: str) -> Iterator[None]:
+    """Temp views, over `read_table`, of the fixture tables that `sql`
+    names, dropped on exit. `spark.sql` analyses eagerly, so a frame it
+    returned inside the block keeps its relations after the drop, and no
+    build leaves a view in the session catalog. (Dropping a view also
+    uncaches a cached frame with the view's exact plan; no builder caches
+    a bare `read_table` frame.)"""
+    names = [t for t in TABLE_NAMES if re.search(rf"\b{t}\b", sql)]
+    for t in names:
+        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
+    try:
+        yield
+    finally:
+        for t in names:
+            spark.catalog.dropTempView(t)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

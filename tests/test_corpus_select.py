@@ -10,12 +10,12 @@ import pytest
 
 from tests.conftest import SF_DIR
 
+from steam_prices_data_engineering_spark.plans import registry
 from steam_prices_data_engineering_spark.plans.corpus_select import (
     bloom_prefilter_decontam,
     cms_heavy_hitters,
     doc_char_entropy,
     dsir_importance_select,
-    weighted_sample_expkeys,
 )
 
 
@@ -60,6 +60,7 @@ def test_weighted_sample_partitioning_independent(spark):
     """The exponential-race sample is a pure function of (doc_id, weight):
     the same 30 winners in the same rank order regardless of input
     partitioning."""
+    weighted_sample_expkeys = registry.queries()["weighted_sample_expkeys"]
     base = weighted_sample_expkeys(spark, SF_DIR).orderBy("rank").collect()
     assert [r.rank for r in base] == list(range(1, 31))
     # the race key is strictly a per-row function, so the winners are

@@ -339,6 +339,25 @@ def test_gdpr_cascade_reports_four_zero_rows_on_empty(spark, empty_dir):
                for r in rows)
 
 
+def test_gdpr_oracle_reports_four_zero_rows_on_empty(empty_dir):
+    """The oracle text gives the same four all-zero rows in DuckDB: `sum`
+    over no rows is NULL, so the customer row's purge count coalesces to
+    0 (one text now runs on both engines)."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLE_SCHEMAS:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{empty_dir}/{t}.parquet/*.parquet')"
+        )
+    rows = con.execute(registry.oracle_sql()["gdpr_delete_cascade"]).fetchall()
+    con.close()
+    assert sorted(rows) == [
+        (t, 0, 0, 0) for t in ("customer", "events", "lineitem", "orders")
+    ]
+
+
 def test_datasheet_reports_empty_corpus_as_one_zero_row(spark, empty_dir):
     """A datasheet over an empty landing is itself a valid report: one row
     with zero volume (global aggregates return a row, not nothing) —

@@ -7,10 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from steam_prices_data_engineering_spark.operators.dedup import (
-    exact_dedup,
-    exact_dedup_groups,
-)
+from steam_prices_data_engineering_spark.operators.dedup import exact_dedup
 from steam_prices_data_engineering_spark.operators.deviation import (
     group_vs_global_avg,
 )
@@ -51,8 +48,6 @@ def test_exact_dedup_deterministic(spark):
     )
     kept = exact_dedup(df, ["k"], "id").collect()
     assert sorted((r["k"], r["id"]) for r in kept) == [("x", 1), ("y", 9)]
-    groups = {r["k"]: r for r in exact_dedup_groups(df, "k", "id").collect()}
-    assert groups["x"]["keeper_id"] == 1 and groups["x"]["n_copies"] == 3
 
 
 def test_session_window_gap_edge(spark):

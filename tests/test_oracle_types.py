@@ -118,3 +118,67 @@ def test_decimal_allowlist_matches_spark(spark):
                 f"{name}.{c} is no longer DoubleType on the Spark side; "
                 f"update the oracle and the allowlist together"
             )
+
+
+@pytest.mark.parametrize(
+    "x, scale", [(4201.31499999, 2), (9007199254.740992, 6)]
+)
+def test_dround_sql_is_double_and_bit_identical(spark, duck, x, scale):
+    """`dround_sql` types DOUBLE in Spark SQL and in DuckDB and gives the
+    Column `dround`'s double to the bit: a value just under a decimal
+    half, and one near 2^53/1e6 where DECIMAL arithmetic would part from
+    double math."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from steam_prices_data_engineering_spark.functions.rounding import (
+        dround,
+        dround_sql,
+    )
+
+    lit = repr(x)
+    s_df = spark.sql(
+        f"SELECT {dround_sql('x', scale)} AS r FROM VALUES ({lit}D) t(x)"
+    )
+    assert isinstance(s_df.schema["r"].dataType, T.DoubleType)
+    d_sql = (
+        f"SELECT {dround_sql('x', scale)} AS r "
+        f"FROM (SELECT CAST('{lit}' AS DOUBLE) AS x)"
+    )
+    assert duck.execute("DESCRIBE " + d_sql).fetchall()[0][1] == "DOUBLE"
+    col = spark.sql(f"SELECT {lit}D AS x").select(
+        dround(F.col("x"), scale).alias("r")
+    )
+    got = {
+        "spark_sql": s_df.collect()[0].r,
+        "duckdb": duck.execute(d_sql).fetchone()[0],
+        "column": col.collect()[0].r,
+    }
+    assert len({v.hex() for v in got.values()}) == 1, got
+
+
+def test_sql_queries_spark_types_match_duckdb(spark, duck):
+    """A `register_sql` query's Spark plan is its oracle text, so its
+    analysed Spark schema (no job runs) must give DuckDB's DESCRIBE types
+    column for column, under tools/audit_oracle_dtypes.py's mapping
+    (numeric widths compared too)."""
+    from tools.audit_oracle_dtypes import duck_family, spark_family
+
+    def key(fam):
+        return fam if fam[0] in ("int", "float") else fam[0]
+
+    assert registry.SQL_QUERIES
+    qs, oracles = registry.queries(), registry.oracle_sql()
+    mismatched = {}
+    for name in sorted(registry.SQL_QUERIES):
+        s_cols = [
+            (f.name, key(spark_family(f.dataType)))
+            for f in qs[name](spark, SF_DIR).schema.fields
+        ]
+        d_cols = [
+            (c[0], key(duck_family(c[1])))
+            for c in duck.execute("DESCRIBE " + oracles[name]).fetchall()
+        ]
+        if s_cols != d_cols:
+            mismatched[name] = (s_cols, d_cols)
+    assert not mismatched, mismatched

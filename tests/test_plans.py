@@ -922,7 +922,6 @@ _GLOBAL_WINDOW_ALLOWED = {
     "hybrid_rrf_fusion": "post-limit top-K fused frame",
     # constant bucket grids (10 deciles / fixed score buckets)
     "histogram_extendedprice": "10-row decile grid",
-    "pareto_frontier_parts": "constant bucket decomposition grid",
     # calendar-bounded grains (days), independent of fact volume
     "survival_km_curve": "duration-days grain (calendar-bounded)",
     "cusum_changepoint": "day grain (calendar-bounded)",

@@ -3,7 +3,8 @@
 `registry.queries()` releases the previous build's pins (`session.pin`)
 before it builds, so a session holds at most one query's cached blocks and
 a rebuild starts cold. Per-session memos drop the entries of stopped
-sessions (`session.session_scoped`)."""
+sessions (`session.session_scoped`), and no build leaves a temp view in
+the session catalog."""
 
 from __future__ import annotations
 
@@ -98,3 +99,29 @@ def test_next_query_releases_the_bpe_vocab_generations(spark, name):
     assert left, "the learner cached no vocab generation"
     registry.queries()[A](spark, SF_DIR)
     assert not _persistent_rdds(spark, before) & left
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "sql_scalar_subquery",
+        "sql_tpch_q18_large_orders",
+        "sql_in_subquery",
+        "sql_lateral_topn",
+        "sql_grouping_sets",
+        "sql_parameterized_query",
+        "udtf_token_positions",
+        "tpch_q1_pricing_summary",
+    ],
+)
+def test_build_leaves_no_temp_view(spark, name):
+    """A query that runs SQL text over temp views drops them before it
+    returns; its frame, analysed already, still collects."""
+    before = _temp_views(spark)
+    df = registry.queries()[name](spark, SF_DIR)
+    assert _temp_views(spark) - before == set()
+    assert df.collect()
