@@ -2,9 +2,10 @@
 
 All pure Column expressions over `documents.text` (space-separated tokens):
 tokenization, shingling, quality scoring, language scoring, fingerprinting.
-No UDFs — each builder compiles to JVM-side higher-order-function expressions
-(`transform`/`aggregate`/`filter`), which keep the hot path inside codegen and
-scale linearly with input splits (no shuffle is introduced by any of them).
+No UDFs — each builder compiles to JVM-side expressions, some of them
+higher-order functions (`transform`/`aggregate`/`filter`). Those run
+interpreted, outside codegen, so a lambda must never re-evaluate a
+document-sized input per element. None introduces a shuffle.
 """
 
 from __future__ import annotations
@@ -66,19 +67,35 @@ def stopword_ratio(text: Column) -> Column:
     return (stop + _null_gate(text)).cast("double") / F.size(t)
 
 
-def shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles (order-sensitive), for near-dup detection.
+def token_ngrams(t: Column, n: int) -> Column:
+    """Word n-grams of a token array as `array<struct<g0, ..., g{n-1}>>`:
+    `arrays_zip(slice(t,1,k), ..., slice(t,n,k))` with `k = size(t) - n + 1`.
+    The j-th shifted slice holds every gram's j-th token, so `t` is
+    evaluated O(n) times per row and no lambda is involved — linear in the
+    document. (A lambda that slices `t` itself re-evaluates it per gram:
+    O(tokens^2), since higher-order functions run interpreted.) Empty when
+    `t` has fewer than n tokens; NULL when `t` is NULL."""
+    k = F.greatest(F.size(t) - (n - 1), F.lit(0))
+    slices = [F.slice(t, j + 1, k).alias(f"g{j}") for j in range(n)]
+    return F.arrays_zip(*slices)
 
-    `transform(sequence(1, size-n+1), i -> concat_ws(' ', slice(tokens,i,n)))`
-    — empty array when the document has fewer than n tokens.
+
+def shingles(text: Column, n: int = 3) -> Column:
+    """Word n-gram shingles (order-sensitive), for near-dup detection: each
+    `token_ngrams` struct joined by `concat_ws(' ', s.g0, ..., s.g{n-1})`,
+    a lambda that reads only its struct variable.
+
+    Empty array when the document has fewer than n tokens, NULL text
+    included under the session's legacy `size(NULL) = -1`. Empty tokens
+    from repeated, leading or trailing spaces stay members of their grams.
     """
     t = tokens(text)
     return F.when(
         F.size(t) < n, F.array().cast("array<string>")
     ).otherwise(
         F.transform(
-            F.sequence(F.lit(1), F.size(t) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(t, i, n)),
+            token_ngrams(t, n),
+            lambda s: F.concat_ws(" ", *[s[f"g{j}"] for j in range(n)]),
         )
     )
 
@@ -164,13 +181,6 @@ def fingerprint_from_hashes(hashes: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: F.pmod(acc * 31 + x, F.lit(FINGERPRINT_MOD)),
     )
-
-
-def fingerprint(text: Column) -> Column:
-    """Order-sensitive rolling document fingerprint: polynomial hash over
-    per-token arithmetic hashes, mod 1e9+7. Reproducible in DuckDB via
-    list_reduce, so it is oracle-checkable."""
-    return fingerprint_from_hashes(F.transform(tokens(text), token_hash))
 
 
 def quality_score(text: Column) -> Column:

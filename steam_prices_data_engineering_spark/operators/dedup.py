@@ -15,8 +15,8 @@ Four tiers, all shuffle-conscious:
   reproducible in ANSI SQL — the DuckDB oracle can check LSH candidate
   generation itself, not just the final verify step. Candidates join on band
   equality (equi shuffle join, never a cross product).
-- simhash: 64-bit-ish simhash over token hashes via bit-majority, expressed
-  with explode + groupBy (documented here, exposed through plans/registry).
+- simhash_table: 64-bit-ish simhash over token hashes via bit-majority,
+  expressed with explode + groupBy (exposed through plans/registry).
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
 
-from ..functions.text import shingles, token_hash, tokens
+from ..functions.text import shingles
 from ..session import pin
 
 # Universal-hash parameters for MinHash: (a, b) pairs, h_i(x) = (a*x + b) mod P.
@@ -288,35 +288,6 @@ def minhash_lsh_pairs(
     return verified_jaccard_pairs(cand, hashed, threshold)
 
 
-def simhash_from_hashes(hashes: F.Column, bits: int = 16) -> F.Column:
-    """SimHash over a precomputed token-hash array: per-bit majority vote,
-    expression-only.
-
-    For each bit position, count tokens whose hash has that bit set; the
-    fingerprint sets the bit when the count exceeds half the tokens.
-    bits=16 keeps the expression tree small; collision behavior is
-    deterministic and mirrored in the SQL oracle.
-    """
-    n = F.size(hashes)
-
-    def _bit_test(bit: int):
-        return lambda h: F.shiftright(h, bit).bitwiseAND(1) == 1
-
-    acc = F.lit(0).cast("long")
-    for bit in range(bits):
-        ones = F.size(F.filter(hashes, _bit_test(bit)))
-        acc = acc + F.when(ones * 2 > n, F.lit(1 << bit).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return acc
-
-
-def simhash(text_col: F.Column, bits: int = 16) -> F.Column:
-    """SimHash computed directly from text (see simhash_from_hashes)."""
-    hashes = F.transform(tokens(text_col), token_hash)
-    return simhash_from_hashes(hashes, bits)
-
-
 def simhash_table(
     docs: DataFrame,
     hashes: F.Column,
@@ -329,9 +300,10 @@ def simhash_table(
     token-hash array and majority-vote every bit with codegen'd
     conditional sums in ONE grouped aggregation.
 
-    This is the fast path over `simhash_from_hashes`, whose per-bit
-    `F.filter` lambdas run interpreted (outside whole-stage codegen) — 16
-    passes over every hash array, measured 4.4x slower at sf0.1. The
+    This is the fast path over the expression form (a per-bit
+    `size(filter(hashes, h -> bit set))` majority test), whose lambdas run
+    interpreted (outside whole-stage codegen) — 16 passes over every hash
+    array, measured 4.4x slower at sf0.1. The
     explode shuffles (id, hash) pairs but map-side partial aggregation
     collapses them to one row of 17 longs per doc before the exchange —
     the same trick as the MinHash signature stage. Results are

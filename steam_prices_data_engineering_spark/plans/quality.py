@@ -284,7 +284,7 @@ def incremental_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_simhash16(hs: str) -> str:
     """16-bit SimHash over a BIGINT hash list, bit-parallel majority vote —
-    mirrors operators/dedup.py:simhash_from_hashes."""
+    the bit rule of operators/dedup.py:simhash_table."""
     bits = " + ".join(
         f"(CASE WHEN 2 * len(list_filter({hs}, h -> (h >> {bit}) & 1 = 1)) "
         f"> len({hs}) THEN {1 << bit} ELSE 0 END)"
@@ -683,8 +683,6 @@ def _decile_bucket_expr():
         for i in range(1, 10)
     )
 
-
-_EQD_BUCKETS = 10
 
 _EQD_SQL = f"""
 WITH src AS (SELECT l_extendedprice AS v FROM lineitem),

@@ -606,8 +606,6 @@ def neardup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(d, n=3, threshold=0.5, band_width=100)
 
 
-_SHINGLE_HASH_PRIME = 2_147_483_647
-
 _NEARDUP_MINHASH_SQL = f"""
 WITH {_sql_minhash_sig_band_ctes()},
 cand AS (

@@ -845,7 +845,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 _RO_HORIZONS = (1, 3, 7)
-_RO_ORIGINS = 8  # origins M-14 .. M-7 (all targets lie inside the data)
 
 _ROLLING_ORIGIN_SQL = f"""
 WITH daily AS MATERIALIZED (
@@ -1012,15 +1011,12 @@ def bigram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r10 shape: both the unigram and the bigram stream derive from the
     SHARED cached corpus_tokens projection (one text scan + split per
-    session instead of two scans here). The old bigram path exploded
-    `shingles(text, 2)` — an HOF inside when().otherwise(), i.e. the
-    CodegenFallback-conditional trap (CLAUDE.md) — straight off the
-    parquet scan; now the bigram array is a staged transform over the
-    CACHED token arrays, itself cached BEFORE the explode (the
-    cache-before-explode rule: Generate re-evaluates an interpreted
-    chain per exploded row). Docs with <2 tokens are filtered (empty
-    shingle array before; no rows either way), so results are
-    identical."""
+    session instead of two scans here). The bigram array is a staged
+    transform over the CACHED token arrays, itself cached BEFORE the
+    explode (the cache-before-explode rule: Generate re-evaluates an
+    interpreted chain per exploded row). Docs with <2 tokens are
+    filtered; `shingles(text, 2)` gives them an empty array, so they
+    add no rows either way."""
     from .retrieval import corpus_bigrams, corpus_tokens
 
     ct = corpus_tokens(spark, sf_dir)

@@ -671,25 +671,25 @@ FROM sc GROUP BY source
 def kneser_ney_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Val-split per-source perplexity under the train KN bigram LM."""
     from ..functions.text import md5_hex6_to_int as _md5i
-    from ..functions.text import shingles, tokens
+    from ..functions.text import token_ngrams, tokens
 
     d = read_table(spark, sf_dir, "documents")
     bucket = _md5i(F.concat_ws("", F.lit("gh_"), F.col("source"))) % 10
+    # One token array per row feeds both the bigram stream and `vsz`.
     tagged = d.select(
         F.when(bucket == 0, "val").otherwise("train").alias("split"),
         "source",
-        "text",
+        tokens(F.col("text")).alias("t"),
     )
-    big = tagged.select(
+    # (v, w) straight from the token array's bigram structs: no joined
+    # gram string to split again.
+    bsp = tagged.select(
+        "split", "source", F.explode(token_ngrams(F.col("t"), 2)).alias("bg")
+    ).select(
         "split",
         "source",
-        F.explode(shingles(F.col("text"), 2)).alias("bg"),
-    )
-    bsp = big.select(
-        "split",
-        "source",
-        F.split(F.col("bg"), " ").getItem(0).alias("v"),
-        F.split(F.col("bg"), " ").getItem(1).alias("w"),
+        F.col("bg.g0").alias("v"),
+        F.col("bg.g1").alias("w"),
     )
     tb = (
         bsp.filter(F.col("split") == "train")
@@ -707,7 +707,7 @@ def kneser_ney_bigram_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     n1dd = tb.agg(F.count(F.lit(1)).cast("double").alias("n1dd"))
     vsz = (
         tagged.filter(F.col("split") == "train")
-        .select(F.explode(tokens(F.col("text"))).alias("tok"))
+        .select(F.explode("t").alias("tok"))
         .agg(F.countDistinct("tok").cast("double").alias("vsz"))
     )
     ev = (

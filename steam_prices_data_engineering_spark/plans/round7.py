@@ -620,7 +620,6 @@ def spearman_scorer_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 _SPLIT_SEED = "split7"
-_SPLIT_FRACS = (("train", 0.8), ("val", 0.1), ("test", 0.1))
 
 
 def _split_sql() -> str:

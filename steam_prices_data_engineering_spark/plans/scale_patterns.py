@@ -11,7 +11,6 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.rounding import dround, dround_sql as R
 from ..session import landing

@@ -10,18 +10,14 @@ uploaded to object storage (`external_resources.py:54-68`,
 
 This container ships no matplotlib/geopandas, so the renderer here is a
 dependency-free PNG encoder (stdlib zlib + struct — PNG is zlib-deflated
-filtered scanlines). Two renderers share it:
-
-- `render_choropleth_png` (the S8 artifact): an equirectangular world
-  raster where each country's polygon outline (COUNTRY_POLYGONS — a
-  coarse hand-digitized atlas; scanline even-odd fill) is colored by the
-  deviation value's position between the min/max bounds (O30's
-  Normalize(vmin, vmax) in the reference), NULL-valued countries grey,
-  coastline 1-px darkened, ocean light blue — the reference's geopandas
-  choropleth visual contract (`world_map_transformer.py:214-254`) with
-  simplified geometry (naturalearth isn't shipped in this container).
-- `render_heatmap_png`: the one-column-per-key strip, kept as the
-  compact artifact for non-geographic aggregates.
+filtered scanlines). `render_choropleth_png` (the S8 artifact) draws an
+equirectangular world raster where each country's polygon outline
+(COUNTRY_POLYGONS — a coarse hand-digitized atlas; scanline even-odd fill)
+is colored by the deviation value's position between the min/max bounds
+(O30's Normalize(vmin, vmax) in the reference), NULL-valued countries grey,
+coastline 1-px darkened, ocean light blue — the reference's geopandas
+choropleth visual contract (`world_map_transformer.py:214-254`) with
+simplified geometry (naturalearth isn't shipped in this container).
 
 A real deployment swaps the coarse atlas for naturalearth polygon rings
 one-for-one (the scanline fill consumes any ring list); `save_png`
@@ -57,34 +53,6 @@ def _color(t: float) -> tuple[int, int, int]:
         return int(255 * s), int(255 * s), 255
     s = (t - 0.5) * 2.0
     return 255, int(255 * (1.0 - s)), int(255 * (1.0 - s))
-
-
-def render_heatmap_png(
-    values: list[float | None], height: int = 32, col_width: int = 4
-) -> bytes:
-    """Encode one heat column per value (NULL -> grey) as an RGB PNG."""
-    vals = [v for v in values if v is not None]
-    lo = min(vals) if vals else 0.0
-    hi = max(vals) if vals else 1.0
-    span = (hi - lo) or 1.0
-    colors = [
-        (_color((v - lo) / span) if v is not None else (128, 128, 128))
-        for v in values
-    ]
-    width = max(1, len(colors) * col_width)
-    row = bytearray()
-    for c in colors:
-        row.extend(bytes(c) * col_width)
-    if not colors:
-        row.extend(b"\x80\x80\x80" * width)
-    raw = b"".join(b"\x00" + bytes(row) for _ in range(height))  # filter 0
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)  # 8-bit RGB
-    return (
-        _PNG_SIG
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(raw, 9))
-        + _chunk(b"IEND", b"")
-    )
 
 
 # Approximate country bounding boxes (lon_min, lon_max, lat_min, lat_max),

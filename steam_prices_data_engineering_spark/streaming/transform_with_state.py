@@ -23,7 +23,6 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _ROCKSDB_PROVIDER = (

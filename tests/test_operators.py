@@ -173,6 +173,40 @@ def test_observe_metrics_ride_the_job(spark):
     assert got["total_price"] > 0
 
 
+def _py_shingles(text, n):
+    """Reference word n-grams: Java's split(" ", -1) is Python's
+    split(" "), so repeated, leading and trailing spaces yield empty
+    tokens. NULL text gives [] because the session runs legacy
+    size(NULL) = -1, which is below every n."""
+    if text is None:
+        return []
+    t = text.split(" ")
+    return [" ".join(t[i : i + n]) for i in range(len(t) - n + 1)]
+
+
+@pytest.mark.parametrize("n", [2, 3, 5])
+def test_shingles_match_python_reference(spark, n):
+    """`shingles` equals the reference element for element on the edge
+    inputs: NULL, '', one token, exactly n tokens, doubled, leading and
+    trailing spaces, and a document longer than n."""
+    from steam_prices_data_engineering_spark.functions.text import shingles
+
+    texts = [
+        None,
+        "",
+        "a",
+        " ".join(f"w{j}" for j in range(n)),
+        "a  b c",
+        " a b ",
+        "the cat sat on the mat and the cat sat",
+    ]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    rows = df.select("text", shingles(F.col("text"), n).alias("g")).collect()
+    assert [r.text for r in rows] == texts
+    for r in rows:
+        assert r.g == _py_shingles(r.text, n), r.text
+
+
 def test_ngram_jaccard_adjacent_band_recall(spark):
     """Near-dups straddling a length-band edge (98 vs 104 chars around the
     100-char boundary) ARE compared — the (lang, shingle) equi join keeps

@@ -955,6 +955,30 @@ _GLOBAL_WINDOW_ALLOWED = {
 }
 
 
+_OPTIMIZED: dict[str, dict[str, str]] = {}
+
+
+def _optimized_plans(spark) -> dict[str, str]:
+    """Every registered query's optimized plan text, per session, for the
+    whole-registry censuses below. Built once through the shared
+    `built_query` memo: a walk over all queries releases each build's pins
+    on the next build, so a second walk would rebuild every pinning query."""
+    from conftest import built_query
+
+    from steam_prices_data_engineering_spark.session import session_scoped
+
+    plans = session_scoped(_OPTIMIZED, spark)
+    if not plans:
+        for name in registry.queries():
+            plans[name] = (
+                built_query(spark, name, SF)
+                ._jdf.queryExecution()
+                .optimizedPlan()
+                .toString()
+            )
+    return plans
+
+
 def test_no_unbounded_global_windows_anywhere(spark):
     """Census over EVERY registered query's optimized plan: a
     partition-less windowspecdefinition (first spec argument is a sort
@@ -963,19 +987,8 @@ def test_no_unbounded_global_windows_anywhere(spark):
     stale allowances fail too."""
     import re
 
-    from conftest import built_query
-
-    from steam_prices_data_engineering_spark.plans import registry
-
-    qs = registry.queries()
     offenders = set()
-    for name in qs:
-        opt = (
-            built_query(spark, name, SF)
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .toString()
-        )
+    for name, opt in _optimized_plans(spark).items():
         for m in re.finditer(r"windowspecdefinition\(([^)]*)", opt):
             first = m.group(1).split(",")[0]
             if " ASC" in first or " DESC" in first:
@@ -984,6 +997,43 @@ def test_no_unbounded_global_windows_anywhere(spark):
     assert offenders == set(_GLOBAL_WINDOW_ALLOWED), (
         f"unexpected global windows: {sorted(offenders - set(_GLOBAL_WINDOW_ALLOWED))}; "
         f"stale allowances: {sorted(set(_GLOBAL_WINDOW_ALLOWED) - offenders)}"
+    )
+
+
+# Queries whose plan may tokenize inside a lambda body. Empty: a lambda
+# that calls split() re-tokenizes the whole document once per element,
+# since higher-order functions run interpreted — O(tokens^2) per row.
+_SPLIT_IN_LAMBDA_ALLOWED: dict[str, str] = {}
+
+
+def _lambda_bodies(plan: str):
+    """The text of every `lambdafunction(...)` in a plan, parentheses
+    balanced within its line (a plan prints each node on one line)."""
+    for line in plan.splitlines():
+        start = line.find("lambdafunction(")
+        while start != -1:
+            depth, i = 0, start + len("lambdafunction")
+            for i in range(i, len(line)):
+                depth += {"(": 1, ")": -1}.get(line[i], 0)
+                if depth == 0:
+                    break
+            yield line[start : i + 1]
+            start = line.find("lambdafunction(", start + 1)
+
+
+def test_no_tokenizer_inside_lambda_anywhere(spark):
+    """Census over EVERY registered query's optimized plan: no lambda body
+    calls split(). Stage the token array outside the lambda (a projected
+    column, or shifted slices zipped as in `functions/text.py:shingles`).
+    Exact equality with the allowlist, so stale allowances fail too."""
+    offenders = {
+        name
+        for name, opt in _optimized_plans(spark).items()
+        if any("split(" in body for body in _lambda_bodies(opt))
+    }
+    assert offenders == set(_SPLIT_IN_LAMBDA_ALLOWED), (
+        f"split() inside a lambda: {sorted(offenders - set(_SPLIT_IN_LAMBDA_ALLOWED))}; "
+        f"stale allowances: {sorted(set(_SPLIT_IN_LAMBDA_ALLOWED) - offenders)}"
     )
 
 
